@@ -197,13 +197,6 @@ object StatsOps {
              m2: Column, v2: Column, n2: Column): Column =
     (m1 - m2) / sqrt(v1 / n1 + v2 / n2)
 
-  /** Welch–Satterthwaite degrees of freedom. */
-  def welchDf(v1: Column, n1: Column, v2: Column, n2: Column): Column = {
-    val a = v1 / n1
-    val b = v2 / n2
-    pow(a + b, 2) / (pow(a, 2) / (n1 - 1) + pow(b, 2) / (n2 - 1))
-  }
-
   /** HyperLogLog distinct-count sketch per key (Flajolet et al. 2007)
     * over a 32-bit md5 hash: register index = top `p` hash bits,
     * rank rho = position of the leftmost 1-bit in the remaining
@@ -1261,20 +1254,28 @@ object SpecialFns {
     }
   }
 
-  /** One-sided Welch t-test p-value from moments.
+  /** Welch t-test from the two groups' moments: the t statistic, the
+    * Welch–Satterthwaite df, and the p-value of that t/df pair.
     * alternative: "less" -> P(T <= t), "greater" -> P(T >= t),
     * "two-sided" -> 2*P(T >= |t|) — matching scipy.stats.ttest_ind. */
-  def welchPValue(m1: Double, v1: Double, n1: Double,
-                  m2: Double, v2: Double, n2: Double,
-                  alternative: String): Double = {
+  def welch(m1: Double, v1: Double, n1: Double,
+            m2: Double, v2: Double, n2: Double,
+            alternative: String): (Double, Double, Double) = {
     val se2 = v1 / n1 + v2 / n2
     val t = (m1 - m2) / math.sqrt(se2)
     val df = se2 * se2 /
       (v1 * v1 / (n1 * n1 * (n1 - 1)) + v2 * v2 / (n2 * n2 * (n2 - 1)))
-    alternative match {
+    val p = alternative match {
       case "less"    => studentTCdf(t, df)
       case "greater" => 1.0 - studentTCdf(t, df)
       case _         => 2.0 * (1.0 - studentTCdf(math.abs(t), df))
     }
+    (t, df, p)
   }
+
+  /** The p-value of [[welch]]. */
+  def welchPValue(m1: Double, v1: Double, n1: Double,
+                  m2: Double, v2: Double, n2: Double,
+                  alternative: String): Double =
+    welch(m1, v1, n1, m2, v2, n2, alternative)._3
 }

@@ -58,18 +58,8 @@ final class WelchTTest(alternative: String)
     WelchBuf(x.a.merge(y.a), x.b.merge(y.b))
 
   override def finish(r: WelchBuf): WelchTResult = {
-    val (m1, v1, n1) = (r.a.mean, r.a.varSamp, r.a.n.toDouble)
-    val (m2, v2, n2) = (r.b.mean, r.b.varSamp, r.b.n.toDouble)
-    val se2 = v1 / n1 + v2 / n2
-    val t = (m1 - m2) / math.sqrt(se2)
-    val df = se2 * se2 /
-      (v1 * v1 / (n1 * n1 * (n1 - 1)) + v2 * v2 / (n2 * n2 * (n2 - 1)))
-    // p from THIS t/df (one formula instance), not a re-derivation
-    val p = alternative match {
-      case "less"    => SpecialFns.studentTCdf(t, df)
-      case "greater" => 1.0 - SpecialFns.studentTCdf(t, df)
-      case _ => 2.0 * (1.0 - SpecialFns.studentTCdf(math.abs(t), df))
-    }
+    val (t, df, p) = SpecialFns.welch(r.a.mean, r.a.varSamp, r.a.n.toDouble,
+      r.b.mean, r.b.varSamp, r.b.n.toDouble, alternative)
     WelchTResult(t, df, p, r.a.n, r.b.n)
   }
 

@@ -48,18 +48,15 @@ object ControlPipeline {
   val AccelPeakRej = 30738
   val GyroPeakRej = 28572
 
-  /** Faithful quirk (SURVEY §7.5.2): the firmware gates *accelerometer*
-    * updates on the *gyro* buffer (data_raw_angular_rate in the accel
-    * loop, ORC_Main.c:248-252). `faithful = false` gates accel on the
-    * accel buffer instead. */
-  final case class Config(
-      settings: AhrsSettings,
-      dt: Double,
-      transform: CornerTransform = CornerTransform.reference,
-      noiseFloor: Double = 0.003,
-      faithfulPeakGate: Boolean = true) {
+  /** Noise-crush dead band on linear z acceleration, in g
+    * (ORC_Main.c:264-271). */
+  val NoiseFloor = 0.003
+
+  /** AHRS settings and sample period `dt` in seconds; the three PID
+    * configurations follow from `dt` and the reference corner transform. */
+  final case class Config(settings: AhrsSettings, dt: Double) {
     val (pidAzCfg, pidPitchCfg, pidRollCfg) =
-      PidConfigs.reference(dt, transform)
+      PidConfigs.reference(dt, CornerTransform.reference)
   }
 
   def initialState(cfg: Config): DeviceState = DeviceState(
@@ -71,8 +68,10 @@ object ControlPipeline {
   def step(cfg: Config, st: DeviceState, s: RawImuSample)
       : (DeviceState, Option[ControlOutput]) = {
     // F3/F4 + M1: peak-reject (LOCF on the previous accepted value) and
-    // scale to physical units. Both gates read the gyro buffer when
-    // faithful (ORC_Main.c:239-252).
+    // scale to physical units. Faithful quirk (SURVEY §7.5.2): the
+    // firmware gates *accelerometer* updates on the *gyro* buffer
+    // (data_raw_angular_rate in the accel loop, ORC_Main.c:239-252), so
+    // both gates read gRaw.
     val gRaw = Array(s.gx_raw.toInt, s.gy_raw.toInt, s.gz_raw.toInt)
     val aRaw = Array(s.ax_raw.toInt, s.ay_raw.toInt, s.az_raw.toInt)
     def gate(i: Int, raw: Array[Int], thr: Int): Boolean =
@@ -81,11 +80,10 @@ object ControlPipeline {
       if (gate(0, gRaw, GyroPeakRej)) gRaw(0) * 0.0175 else st.gyro.x,
       if (gate(1, gRaw, GyroPeakRej)) gRaw(1) * 0.0175 else st.gyro.y,
       if (gate(2, gRaw, GyroPeakRej)) gRaw(2) * 0.0175 else st.gyro.z)
-    val accelGateBuf = if (cfg.faithfulPeakGate) gRaw else aRaw
     val accel = Vec3(
-      if (gate(0, accelGateBuf, AccelPeakRej)) aRaw(0) * 0.000122 else st.accel.x,
-      if (gate(1, accelGateBuf, AccelPeakRej)) aRaw(1) * 0.000122 else st.accel.y,
-      if (gate(2, accelGateBuf, AccelPeakRej)) aRaw(2) * 0.000122 else st.accel.z)
+      if (gate(0, gRaw, AccelPeakRej)) aRaw(0) * 0.000122 else st.accel.x,
+      if (gate(1, gRaw, AccelPeakRej)) aRaw(1) * 0.000122 else st.accel.y,
+      if (gate(2, gRaw, AccelPeakRej)) aRaw(2) * 0.000122 else st.accel.z)
 
     // T1: AHRS update
     val ahrs = Ahrs.update(st.ahrs, cfg.settings, gyro, accel, cfg.dt)
@@ -108,8 +106,8 @@ object ControlPipeline {
       val linZ = Ahrs.linearAcceleration(ahrs).z
       // F5: noise crush (ORC_Main.c:264-271)
       val conditioned =
-        if (linZ > cfg.noiseFloor) linZ - cfg.noiseFloor
-        else if (linZ < -cfg.noiseFloor) linZ + cfg.noiseFloor
+        if (linZ > NoiseFloor) linZ - NoiseFloor
+        else if (linZ < -NoiseFloor) linZ + NoiseFloor
         else 0.0
       // T2: three PID updates (setpoints: 0 / pitchZero / rollZero)
       val (pidAz, azCmd) = Pid.update(cfg.pidAzCfg, st.pidAz, 0.0, conditioned)
@@ -118,7 +116,7 @@ object ControlPipeline {
       val (pidRoll, rollCmd) =
         Pid.update(cfg.pidRollCfg, st.pidRoll, st.rollZero, roll)
       // T4: corner transform + clamp
-      val (a1, a2, a3, a4) = cfg.transform(azCmd, pitchCmd, rollCmd)
+      val (a1, a2, a3, a4) = CornerTransform.reference(azCmd, pitchCmd, rollCmd)
       val out = ControlOutput(s.device_id, s.sample_idx,
         linZ, pitch, roll, conditioned, azCmd, pitchCmd, rollCmd,
         a1, a2, a3, a4)
@@ -139,11 +137,9 @@ object ControlPipeline {
     }
   }
 
-  /** Shared micro-batch fold used by BOTH streaming paths
-    * (flatMapGroupsWithState and transformWithState): sort the
-    * trigger's rows by sample index, apply the transition, return the
-    * outputs and the advanced state. One implementation so the two
-    * APIs can never drift apart. */
+  /** Micro-batch fold of [[replayStreaming]]: sort the trigger's rows
+    * by sample index, apply the transition, return the outputs and the
+    * advanced state. */
   def applyOrdered(cfg: Config, st0: DeviceState,
                    rows: Iterator[RawImuSample])
       : (DeviceState, Array[ControlOutput]) = {

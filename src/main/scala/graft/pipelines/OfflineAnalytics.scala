@@ -30,14 +30,7 @@ object OfflineAnalytics {
     * differentiated) measure. Output: arm, run_id, rms, min, max, n. */
   def runStats(samples: DataFrame, measure: String,
                derivative: Boolean = false, kernel: Int = 15): DataFrame = {
-    val w = Window.partitionBy(col("file"), col("arm"), col("run_id"))
-      .orderBy(col("sample_idx"))
-    val filtered = samples.withColumn("filtered",
-      WindowOps.medianFilterZeroPadded(col(measure), w, kernel))
-    val valued =
-      if (derivative)
-        filtered.withColumn("v", WindowOps.gradient(col("filtered"), w))
-      else filtered.withColumn("v", col("filtered"))
+    val valued = filteredValues(samples, measure, derivative, kernel)
     // group by file too: run_id restarts per file, so runs from
     // different log files must never pool into one group
     valued.groupBy(col("file"), col("arm"), col("run_id"))
@@ -46,6 +39,20 @@ object OfflineAnalytics {
         min(col("v")).as("min"),
         max(col("v")).as("max"),
         count(lit(1)).as("n"))
+  }
+
+  /** Adds `v`: the measure median-filtered per (file, arm, run) in
+    * sample order (medfilt, zero-padded), and optionally differentiated
+    * (numpy gradient). Adds the intermediate `filtered` column too. */
+  private def filteredValues(samples: DataFrame, measure: String,
+                             derivative: Boolean, kernel: Int): DataFrame = {
+    val w = Window.partitionBy(col("file"), col("arm"), col("run_id"))
+      .orderBy(col("sample_idx"))
+    val filtered = samples.withColumn("filtered",
+      WindowOps.medianFilterZeroPadded(col(measure), w, kernel))
+    if (derivative)
+      filtered.withColumn("v", WindowOps.gradient(col("filtered"), w))
+    else filtered.withColumn("v", col("filtered"))
   }
 
   /** Per-arm averages of the per-run stats (main.py:112), plus the
@@ -88,18 +95,10 @@ object OfflineAnalytics {
         case null => Double.NaN
       }
     Seq("rms", "min", "max").map { stat =>
-      val (m1, v1, n1) = (field(a, s"avg_$stat"), field(a, s"var_$stat"), field(a, "runs"))
-      val (m2, v2, n2) = (field(b, s"avg_$stat"), field(b, s"var_$stat"), field(b, "runs"))
-      // one formula instance: p derives from THIS t/df pair
-      val se2 = v1 / n1 + v2 / n2
-      val t = (m1 - m2) / math.sqrt(se2)
-      val df = se2 * se2 /
-        (v1 * v1 / (n1 * n1 * (n1 - 1)) + v2 * v2 / (n2 * n2 * (n2 - 1)))
-      val p = Alternatives(stat) match {
-        case "less"    => SpecialFns.studentTCdf(t, df)
-        case "greater" => 1.0 - SpecialFns.studentTCdf(t, df)
-        case _ => 2.0 * (1.0 - SpecialFns.studentTCdf(math.abs(t), df))
-      }
+      val (t, _, p) = SpecialFns.welch(
+        field(a, s"avg_$stat"), field(a, s"var_$stat"), field(a, "runs"),
+        field(b, s"avg_$stat"), field(b, s"var_$stat"), field(b, "runs"),
+        Alternatives(stat))
       WelchResult(stat, t, p)
     }
   }
@@ -146,14 +145,7 @@ object OfflineAnalytics {
                    derivative: Boolean = false, kernel: Int = 15,
                    plottedRank: Int = 3): DataFrame = {
     val spark = samples.sparkSession
-    val w = Window.partitionBy(col("file"), col("arm"), col("run_id"))
-      .orderBy(col("sample_idx"))
-    val filtered = samples.withColumn("filtered",
-      WindowOps.medianFilterZeroPadded(col(measure), w, kernel))
-    val valued =
-      if (derivative)
-        filtered.withColumn("v", WindowOps.gradient(col("filtered"), w))
-      else filtered.withColumn("v", col("filtered"))
+    val valued = filteredValues(samples, measure, derivative, kernel)
     // the arm's plottedRank-th run in file order (dense: all samples
     // of one run share one rank)
     val series = valued.withColumn("__rk", dense_rank().over(

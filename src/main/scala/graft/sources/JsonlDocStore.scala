@@ -19,7 +19,8 @@ import org.apache.spark.sql.types._
   *
   * JSONL is line-delimited, so Spark splits files at arbitrary byte
   * offsets and parallelizes a single huge file for free (unlike the
-  * in-band-header CSV logs that need [[ScalableSessionReader]]).
+  * in-band-header CSV logs, which [[SessionizedCsvReader]] reads one
+  * whole file per task).
   */
 object JsonlDocStore {
 

@@ -1,9 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import java.util.Locale
+
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType}
+import org.apache.spark.sql.types._
 
 /** S2 — sessionized telemetry-log CSV scan (SURVEY §2.1).
   *
@@ -20,101 +23,137 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType}
   * }}}
   *
   * and the reference analyzer re-infers that structure line-by-line
-  * (Python Plotting/main.py:22-65). Spark-side, the stateful line
-  * classifier becomes header *propagation*: classify each line, then
-  * carry the latest header values forward with
-  * `last(_, ignoreNulls).over(rowsBetween(unboundedPreceding, 0))` and
-  * a running count of run-separator lines.
+  * (Python Plotting/main.py:22-65). A log is an inherently ordered
+  * stream, so this reader does the same: each file is read whole (the
+  * `text` source with `wholetext`, which keeps the source's globs,
+  * hidden-file rules, codecs and `input_file_name()` strings) and
+  * walked once, line by line, carrying the latest header values and
+  * the run counter forward. No shuffle, no sort: one task per file.
   *
-  * Scale notes: the window partitions by file, so one log file is one
-  * sequential unit — the same constraint the reference has (a log is an
-  * inherently ordered stream). Fleet-scale deployments produce many
-  * files (one per device-session), which is the natural parallel unit;
-  * a 100 TB corpus of logs parallelizes per file, while a single file
-  * is processed in one pass of one task.
+  * Scale notes: the parallel unit is the file. Fleet-scale deployments
+  * produce many files (one per device-session), and a 100 TB corpus of
+  * logs parallelizes per file. The limit is per file: one log must fit
+  * in one JVM string (2 GB); the largest documented log, the golden
+  * session, is about 3 MB.
   */
 object SessionizedCsvReader {
 
+  /** The canonical `samples` table (FIXTURES.md §1). */
+  val schema: StructType = StructType(Seq(
+    StructField("file", StringType), StructField("log_id", IntegerType),
+    StructField("arm", StringType),
+    StructField("actuators_enabled", BooleanType),
+    StructField("interval_s", DoubleType), StructField("run_id", LongType),
+    StructField("sample_idx", IntegerType), StructField("t_s", DoubleType),
+    StructField("acceleration_g", DoubleType),
+    StructField("pitch_deg", DoubleType), StructField("roll_deg", DoubleType)))
+
   /** Parse one or more ORC-log CSV files into the canonical `samples`
-    * table (FIXTURES.md §1): file, log_id, arm, actuators_enabled,
-    * interval_s, run_id, sample_idx, t_s, acceleration_g, pitch_deg,
-    * roll_deg.
+    * table: file, log_id, arm, actuators_enabled, interval_s, run_id,
+    * sample_idx, t_s, acceleration_g, pitch_deg, roll_deg.
     *
     * Faithful to main.py: runs are opened by each `Interval:` line and
     * each `Log Paused` line; data rows must have exactly 3
-    * comma-separated parseable floats; unparseable rows are skipped.
+    * comma-separated parseable floats and follow both a `Log #` and an
+    * `Actuators` header; unparseable rows and malformed headers are
+    * skipped (a malformed header keeps the previous value).
     */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val lines = spark.read.textFile(path).toDF("line")
-      .select(
-        input_file_name().as("file"),
-        monotonically_increasing_id().as("line_no"),
-        col("line"))
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.option("wholetext", "true").text(path)
+      .select(input_file_name(), col("value"))
+      .flatMap(r => sessionize(r.getString(0), r.getString(1)))(
+        Encoders.row(schema))
 
-    val classified = lines.select(
-      col("file"), col("line_no"), col("line"),
-      col("line").startsWith("Log #").as("is_hdr"),
-      col("line").contains("Actuators").as("is_arm"),
-      col("line").startsWith("Interval:").as("is_interval"),
-      col("line").startsWith("Log Paused").as("is_pause"))
-
-    // Header propagation: per file, in line order, carry the latest
-    // header values down to the data rows (LOCF), and count run
-    // openers to assign a monotone run id.
-    val byLine = Window.partitionBy(col("file")).orderBy(col("line_no"))
-    val locf = byLine.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    // try_cast on header values too: a malformed header line (e.g.
-    // "Log # 42" with no colon, or "Interval:abc") must be skipped like
-    // the reference parser does, not crash the job under ANSI mode —
-    // LOCF then simply carries the previous valid value forward.
-    val propagated = classified
-      .withColumn("log_id",
-        last(when(col("is_hdr"), expr(
-          "try_cast(regexp_extract(line, 'Log #:\\\\s*(\\\\d+)', 1) as int)")),
-          ignoreNulls = true).over(locf))
-      .withColumn("arm",
-        last(when(col("is_arm"), trim(col("line"))), ignoreNulls = true)
-          .over(locf))
-      .withColumn("interval_s",
-        last(when(col("is_interval"), expr(
-          "try_cast(trim(element_at(split(line, ':'), 2)) as double)")),
-          ignoreNulls = true).over(locf))
-      .withColumn("run_id",
-        sum(when(col("is_interval") || col("is_pause"), 1L).otherwise(0L))
-          .over(locf))
-
-    // Data rows: exactly 3 fields, all parseable as floats, and headers
-    // already seen (main.py:47-49 requires current_log and
-    // actuator_status to be set; the column-header line fails the cast).
-    // try_cast, not cast: the in-band column-header line ("Acceleration,
-    // Pitch, Roll") must parse to null and be dropped, and ANSI mode
-    // would otherwise throw on it (main.py:55-56 skips bad rows too).
-    val fields = split(col("line"), ",")
-    def fieldAsDouble(i: Int) =
-      expr(s"try_cast(trim(element_at(split(line, ','), $i)) as double)")
-    val dataRows = propagated
-      .filter(size(fields) === 3 &&
-        col("log_id").isNotNull && col("arm").isNotNull)
-      .withColumn("acceleration_g", fieldAsDouble(1))
-      .withColumn("pitch_deg", fieldAsDouble(2))
-      .withColumn("roll_deg", fieldAsDouble(3))
-      .filter(col("acceleration_g").isNotNull &&
-        col("pitch_deg").isNotNull && col("roll_deg").isNotNull)
-
-    // Per-run positional index and synthesized relative time (M22,
-    // main.py:51-54: t = n_samples_so_far * interval).
-    val byRun = Window.partitionBy(col("file"), col("arm"), col("run_id"))
-      .orderBy(col("line_no"))
-
-    dataRows
-      .withColumn("sample_idx", row_number().over(byRun) - 1)
-      .withColumn("t_s", col("sample_idx") * col("interval_s"))
-      .withColumn("actuators_enabled", !col("arm").contains("disabled"))
-      .select("file", "log_id", "arm", "actuators_enabled", "interval_s",
-        "run_id", "sample_idx", "t_s",
-        "acceleration_g", "pitch_deg", "roll_deg")
+  /** One sequential pass over one file's text. Header lines are
+    * recognized by prefix or substring and are not exclusive (a line
+    * can set several headers). `sample_idx` counts the emitted rows of
+    * one arm within one run; `t_s = sample_idx * interval_s` (M22,
+    * main.py:51-54), null before any valid `Interval:` line. */
+  private def sessionize(file: String, text: String): Iterator[Row] = {
+    var logId: Option[Int] = None
+    var arm: Option[String] = None
+    var interval: Option[Double] = None
+    var runId = 0L
+    val runRows = mutable.HashMap.empty[String, Int]
+    lines(text).flatMap { line =>
+      if (line.startsWith("Log #")) parseLogId(line).foreach(v => logId = Some(v))
+      if (line.contains("Actuators")) arm = Some(trimSpaces(line))
+      val isInterval = line.startsWith("Interval:")
+      if (isInterval)
+        toDouble(line.split(":", -1)(1)).foreach(v => interval = Some(v))
+      if (isInterval || line.startsWith("Log Paused")) {
+        runId += 1
+        runRows.clear()
+      }
+      for {
+        lg <- logId
+        am <- arm
+        (a, p, r) <- parseData(line)
+      } yield {
+        val idx = runRows.getOrElse(am, 0)
+        runRows(am) = idx + 1
+        Row(file, lg, am, !am.contains("disabled"),
+          interval.map(Double.box).orNull, runId, idx,
+          interval.map(v => Double.box(idx * v)).orNull, a, p, r)
+      }
+    }
   }
+
+  /** Lines as the `text` source splits them: at LF, CRLF or a lone CR,
+    * with no empty line after a final terminator and a leading UTF-8
+    * byte-order mark dropped. */
+  private def lines(text: String): Iterator[String] = new Iterator[String] {
+    private var pos = if (text.startsWith("\uFEFF")) 1 else 0
+    def hasNext: Boolean = pos < text.length
+    def next(): String = {
+      var end = pos
+      while (end < text.length && text.charAt(end) != '\n' &&
+          text.charAt(end) != '\r') end += 1
+      val line = text.substring(pos, end)
+      pos = if (text.startsWith("\r\n", end)) end + 2 else end + 1
+      line
+    }
+  }
+
+  private val LogIdRe = "Log #:\\s*(\\d+)".r
+
+  private def parseLogId(line: String): Option[Int] =
+    LogIdRe.findFirstMatchIn(line).flatMap(_.group(1).toIntOption)
+
+  private def parseData(line: String): Option[(Double, Double, Double)] = {
+    val f = line.split(",", -1)
+    if (f.length != 3) None
+    else for {
+      a <- toDouble(f(0))
+      p <- toDouble(f(1))
+      r <- toDouble(f(2))
+    } yield (a, p, r)
+  }
+
+  /** SQL `trim`: strips the space character only. */
+  private def trimSpaces(s: String): String = {
+    var from = 0
+    var until = s.length
+    while (from < until && s.charAt(from) == ' ') from += 1
+    while (until > from && s.charAt(until - 1) == ' ') until -= 1
+    s.substring(from, until)
+  }
+
+  /** String to double as SQL `try_cast` reads it: Java's parser, which
+    * allows surrounding whitespace, then the SQL spellings of infinity
+    * and NaN. */
+  private def toDouble(s: String): Option[Double] =
+    try Some(java.lang.Double.parseDouble(s))
+    catch {
+      case _: NumberFormatException =>
+        s.trim.toLowerCase(Locale.ROOT) match {
+          case "inf" | "+inf" | "infinity" | "+infinity" =>
+            Some(Double.PositiveInfinity)
+          case "-inf" | "-infinity" => Some(Double.NegativeInfinity)
+          case "nan" | "+nan" | "-nan" => Some(Double.NaN)
+          case _ => None
+        }
+    }
 
   /** Path of the checked-in golden specimen (read-only reference data). */
   val GoldenCsv: String =
