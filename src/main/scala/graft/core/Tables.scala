@@ -106,8 +106,4 @@ object Tables {
       embFixed.withColumn("label", col("label").cast(IntegerType))
     else embFixed
   }
-
-  /** Register every table as a temp view (for spark.sql entry points). */
-  def registerViews(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

@@ -35,16 +35,6 @@ object ScalarOps {
   /** M3: asin with the argument clamped to [-1, 1] (FusionMath.h:148-156). */
   def clampedAsin(x: Column): Column = asin(clamp(x, -1.0, 1.0))
 
-  /** F3/F4: peak rejection — null out samples at/above the raw threshold
-    * so a LOCF window (WindowOps.locf) can carry the previous accepted
-    * value forward (ORC_Main.c:239-252). */
-  def peakReject(raw: Column, scaled: Column, threshold: Double): Column =
-    when(abs(raw) < threshold, scaled)
-
-  /** Peak-rejection raw-LSB thresholds (ORC_CONFIG.h:54-55). */
-  val AccelPeakLsb: Double = 30738.0
-  val GyroPeakLsb: Double = 28572.0
-
   /** M21: random 4-digit log number the firmware stamps on each new
     * log entry (`esp_random() % 10000`, ORC_Main.c:774). Seeded
     * `rand`, so a run is reproducible given the seed — but Spark's

@@ -1272,10 +1272,4 @@ object SpecialFns {
     }
     (t, df, p)
   }
-
-  /** The p-value of [[welch]]. */
-  def welchPValue(m1: Double, v1: Double, n1: Double,
-                  m2: Double, v2: Double, n2: Double,
-                  alternative: String): Double =
-    welch(m1, v1, n1, m2, v2, n2, alternative)._3
 }

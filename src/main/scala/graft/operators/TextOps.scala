@@ -139,23 +139,10 @@ object TextOps {
 
   /** k-element MinHash signature as an array column (md5-per-seed:
     * cross-engine deterministic but k md5 calls per shingle — use for
-    * oracle-checkable fingerprints, [[minhashSignatureFast]] for LSH
-    * pipelines). */
+    * oracle-checkable fingerprints; [[minhashFromBase]] is the
+    * one-hash-per-shingle family for LSH pipelines). */
   def minhashSignature(shingles: Column, k: Int): Column =
     array((0 until k).map(i => minhash(shingles, i)): _*)
-
-  /** Fast k-element MinHash signature: ONE xxhash64 per shingle, then
-    * k affine permutations h_i(x) = (a_i * x + b_i) mod p over the base
-    * hash — the classic cheap minhash family. ~k times fewer hash
-    * evaluations than the md5 variant; deterministic but Spark-native
-    * (no SQL oracle). */
-  def minhashSignatureFast(shingles: Column, k: Int): Column = {
-    // Mersenne prime 2^31-1 keeps h*a+b well inside a long under ANSI
-    // overflow checking (h < 2^31, a < 2^6, b < 2^27).
-    val P = 2147483647L
-    val base = transform(shingles, s => pmod(xxhash64(s), lit(P)))
-    minhashFromBase(base, k, P)
-  }
 
   /** Affine minhash family over an already-hashed shingle array.
     * IMPORTANT for performance: materialize `base` as its own column

@@ -32,7 +32,7 @@ object WindowOps {
 
   /** W1 (interior rows): exact sliding median over a centered row frame
     * of `k` rows (k odd). Edge frames are truncated, NOT zero-padded —
-    * use [[medianFilterZeroPadded]] for scipy.signal.medfilt parity
+    * `OfflineAnalytics.runStats` has the scipy.signal.medfilt filter
     * (main.py:69-70). Backed by the custom
     * [[graft.functions.ExactMedian]] TypedImperativeAggregate
     * (interpolating, matching SQL MEDIAN): a plain double buffer beats
@@ -43,23 +43,6 @@ object WindowOps {
     val half = k / 2
     graft.functions.ExactMedian.exactMedian(value)
       .over(w.rowsBetween(-half, half))
-  }
-
-  /** W1 with scipy zero-pad edge semantics: medfilt conceptually pads
-    * k/2 zeros at both ends of each run. Equivalent closed form on a
-    * truncated frame: sort the (frame ++ zeros) multiset — rather than
-    * materialize pad rows, note the padded frame has k elements of which
-    * `k - frameSize` are zero. We express it as the exact k-element
-    * median of `frame ++ zeros` via a sorted-array expression. */
-  def medianFilterZeroPadded(value: Column, w: WindowSpec, k: Int): Column = {
-    require(k % 2 == 1, s"median filter kernel must be odd, got $k")
-    val half = k / 2
-    val frame = collect_list(value).over(w.rowsBetween(-half, half))
-    // pad with zeros up to k elements, sort, take middle element (k odd)
-    val padded = concat(
-      frame,
-      slice(array_repeat(lit(0.0), k), lit(1), lit(k) - size(frame)))
-    element_at(array_sort(padded), half + 1)
   }
 
   /** Batch gap sessionization: a new session starts when the time since

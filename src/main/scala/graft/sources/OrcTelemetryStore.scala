@@ -9,12 +9,14 @@ import org.apache.spark.sql.functions._
   *
   * Layout: ORC partitioned by (actuators_enabled, log_id) — the two
   * columns every reference analysis groups or filters on — so
-  * partition pruning eliminates whole directories before any IO, and
-  * one log block's samples stay contiguous for the ordered stateful
-  * operators. At fleet scale this is the table a 1000-executor job
-  * reads: predicate pushdown + column pruning come from the vectorized
-  * ORC reader; `sortWithinPartitions(sample_idx)` at write time gives
-  * run-ordered row groups so replay needs no extra sort when a single
+  * partition pruning eliminates whole directories before any IO. At
+  * fleet scale this is the table a 1000-executor job reads: predicate
+  * pushdown + column pruning come from the vectorized ORC reader.
+  * The write does not shuffle: each task writes one file per (arm,
+  * log) directory it holds rows of, sorted by (file, run_id,
+  * sample_idx). The reader emits each input log whole in one task, so
+  * one task per input log gives one sorted file per (arm, log)
+  * directory and log, and replay needs no extra sort when a single
   * task owns a (log, run) slice.
   */
 object OrcTelemetryStore {
@@ -25,18 +27,18 @@ object OrcTelemetryStore {
       // Leading sort on the partition columns: FileFormatWriter requires
       // output sorted by partitionBy columns and would otherwise insert
       // its own (not-necessarily-stable) sort, destroying the run order.
-      // Sorting (partition cols, run_id, sample_idx) up front satisfies
-      // the writer's requirement, so the run-sorted row groups survive.
-      .repartition(col("actuators_enabled"), col("log_id"))
+      // `file` keeps two logs that share a log id apart in one task.
       .sortWithinPartitions(col("actuators_enabled"), col("log_id"),
-        col("run_id"), col("sample_idx"))
+        col("file"), col("run_id"), col("sample_idx"))
       .write
       .mode(mode)
       .partitionBy("actuators_enabled", "log_id")
       .orc(path)
 
+  /** The canonical samples table, partition columns last; inferring the
+    * schema would read `actuators_enabled` as a string. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
+    spark.read.schema(SessionizedCsvReader.schema).orc(path)
 
   /** Convert a raw in-band-header CSV log into the ORC table in one
     * pass (the reference's offline "ingest" step, minus the in-band

@@ -155,7 +155,10 @@ object SessionizedCsvReader {
         }
     }
 
-  /** Path of the checked-in golden specimen (read-only reference data). */
-  val GoldenCsv: String =
+  /** Path of the checked-in golden specimen (read-only reference data):
+    * `$SPARK_GRAFT_GOLDEN_CSV`, else the reference checkout's path. */
+  val GoldenCsv: String = sys.env.getOrElse("SPARK_GRAFT_GOLDEN_CSV", DefaultGoldenCsv)
+
+  private def DefaultGoldenCsv: String =
     "/root/reference/Python Plotting/Vibration_test/High Speed/ORCLOG_vibration_HS.CSV"
 }

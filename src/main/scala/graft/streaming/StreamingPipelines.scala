@@ -536,21 +536,6 @@ object StreamingPipelines {
       .trigger(Trigger.ProcessingTime(interval))
       .outputMode("append")
 
-  /** Columnar variant: stream into the canonical ORC table via
-    * foreachBatch (partitioned writes need batch APIs). Reuses
-    * OrcTelemetryStore's partitioned layout so the streamed appends
-    * stay readable/prunable as one table with the batch-ingested
-    * data. */
-  def orcLogSink(samples: DataFrame, path: String, checkpoint: String,
-                 interval: String = "1 second"): DataStreamWriter[org.apache.spark.sql.Row] =
-    samples.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.OrcTelemetryStore.write(batch, path,
-          org.apache.spark.sql.SaveMode.Append)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(interval))
-
   /** One buffered transition event (epoch ms, tie order, type). */
   final case class TransEvent(tsMs: Long, tie: Long, typ: String)
   /** `last` = the latest FINALIZED event (the left side of the next

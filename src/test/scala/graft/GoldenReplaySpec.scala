@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipelines.OfflineAnalytics
@@ -22,6 +23,20 @@ class GoldenReplaySpec extends AnyFunSuite with SparkTestBase {
   private def relClose(a: Double, b: Double, tol: Double = 1e-9): Boolean =
     math.abs(a - b) <= tol * math.max(1.0, math.max(math.abs(a), math.abs(b)))
 
+  /** Acceleration per-run (arm, n, rms, min, max) in run order, from
+    * the sequential port. */
+  private val accelerationRuns = Seq(
+    ("Actuators enabled", 13308L, 0.09312359527447382, -0.3255, 0.3133),
+    ("Actuators enabled", 13309L, 0.10742790255213176, -0.3217, 0.311),
+    ("Actuators enabled", 10697L, 0.1062478094908071, -0.3265, 0.3509),
+    ("Actuators enabled", 13426L, 0.09518553327096851, -0.3255, 0.3174),
+    ("Actuators enabled", 13342L, 0.10375464591642627, -0.3248, 0.2928),
+    ("Actuators disabled", 16181L, 0.14469128105786044, -0.4475, 0.4834),
+    ("Actuators disabled", 10772L, 0.14515353489315788, -0.471, 0.4748),
+    ("Actuators disabled", 10878L, 0.15598449109928947, -0.4622, 0.4834),
+    ("Actuators disabled", 13531L, 0.15263201623421163, -0.4934, 0.4765),
+    ("Actuators disabled", 13516L, 0.1480976407871441, -0.4443, 0.4331))
+
   test("sessionized reader recovers the golden CSV structure") {
     val samples = SessionizedCsvReader.read(spark, csv).cache()
     assert(samples.count() == 128960)
@@ -40,18 +55,7 @@ class GoldenReplaySpec extends AnyFunSuite with SparkTestBase {
     val got = rs.collect().map(r => (r.getAs[String]("arm"),
       r.getAs[Long]("n"), r.getAs[Double]("rms"),
       r.getAs[Double]("min"), r.getAs[Double]("max")))
-    // (arm, n, rms, min, max) in run order, from the sequential port
-    val want = Seq(
-      ("Actuators enabled", 13308L, 0.09312359527447382, -0.3255, 0.3133),
-      ("Actuators enabled", 13309L, 0.10742790255213176, -0.3217, 0.311),
-      ("Actuators enabled", 10697L, 0.1062478094908071, -0.3265, 0.3509),
-      ("Actuators enabled", 13426L, 0.09518553327096851, -0.3255, 0.3174),
-      ("Actuators enabled", 13342L, 0.10375464591642627, -0.3248, 0.2928),
-      ("Actuators disabled", 16181L, 0.14469128105786044, -0.4475, 0.4834),
-      ("Actuators disabled", 10772L, 0.14515353489315788, -0.471, 0.4748),
-      ("Actuators disabled", 10878L, 0.15598449109928947, -0.4622, 0.4834),
-      ("Actuators disabled", 13531L, 0.15263201623421163, -0.4934, 0.4765),
-      ("Actuators disabled", 13516L, 0.1480976407871441, -0.4443, 0.4331))
+    val want = accelerationRuns
     val gotSorted = got.sortBy(r => (r._1 == "Actuators disabled", r._2))
     val wantSorted = want.sortBy(r => (r._1 == "Actuators disabled", r._2))
     assert(gotSorted.length == 10)
@@ -93,5 +97,24 @@ class GoldenReplaySpec extends AnyFunSuite with SparkTestBase {
       assert(relClose(byStat("max").t, tx, tol), s"$m max t ${byStat("max").t}")
       assert(relClose(byStat("max").p, px, tol), s"$m max p ${byStat("max").p}")
     }
+  }
+
+  test("published acceleration p-values from the pinned per-run rows, " +
+      "without the CSV") {
+    // the enabled arm's five runs come first in the file
+    val rows = accelerationRuns.zipWithIndex.map { case ((arm, n, rms, mn, mx), i) =>
+      Row("ORCLOG_vibration_HS.CSV", arm, i + 1L, rms, mn, mx, n)
+    }
+    val welch = OfflineAnalytics.welchTests(OfflineAnalytics.armSummary(rows))
+      .map(w => w.stat -> w).toMap
+    // (stat, t to four places, published p, the port's t and p)
+    Seq(("rms", "-13.1612", "1.06e-06", -13.161177494097318, 1.063692022103068e-06),
+      ("min", "15.5765", "4.42e-05", 15.57645799824485, 4.423202668912829e-05),
+      ("max", "-11.4631", "1.52e-06", -11.46309571181493, 1.5181904556287783e-06))
+      .foreach { case (stat, t, p, portT, portP) =>
+        val w = welch(stat)
+        assert(f"${w.t}%.4f" == t && f"${w.p}%.2e" == p, s"$stat: $w")
+        assert(relClose(w.t, portT) && math.abs(w.p - portP) <= 1e-9 * portP, s"$stat: $w")
+      }
   }
 }
