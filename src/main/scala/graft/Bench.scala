@@ -23,7 +23,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = benchSession(cpus)
-    spark.sparkContext.setLogLevel("WARN")
     warmUp(spark, sfDir)
     // noop sink, not count(): count() lets the optimizer prune every
     // column that doesn't feed an aggregate and drop output sorts

@@ -24,7 +24,6 @@ object Q197Stress {
     val factor = sys.env.getOrElse("SPARK_GRAFT_FACTOR", "10").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Bench.benchSession(cpus)
-    spark.sparkContext.setLogLevel("WARN")
 
     val cust = spark.read.parquet(s"$srcDir/customer.parquet")
       .select(col("c_custkey"), col("c_nationkey"))

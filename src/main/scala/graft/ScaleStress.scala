@@ -48,7 +48,6 @@ object ScaleStress {
     val factor = sys.env.getOrElse("SPARK_GRAFT_FACTOR", "10").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Bench.benchSession(cpus)
-    spark.sparkContext.setLogLevel("WARN")
 
     val tBuild0 = System.nanoTime()
     buildReplicas(spark, srcDir, outDir, factor)

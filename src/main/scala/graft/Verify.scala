@@ -18,7 +18,6 @@ object Verify {
       // one partition (single-threaded expression pipelines above them).
       .config("spark.sql.files.openCostInBytes", "65536")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q55,q26 runs just those queries (prefix match) —
     // local iteration aid; the driver never sets it.

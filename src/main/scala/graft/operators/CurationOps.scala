@@ -296,14 +296,13 @@ object CurationOps {
       explode(TextOps.tokens(col(textCol))).as("t"))
     // checkpoint the (vocab-sized) frequency table: the corpus total
     // derives from it and the probe join reuses it, so the tokenize
-    // pipeline runs exactly twice (freq build + probe side) — and the
-    // join side keeps its pre-checkpoint broadcast decision
-    val freqPre = tok.groupBy(col("t")).agg(count(lit(1)).as("c"))
-    val freq = freqPre.localCheckpoint(false)
+    // pipeline runs exactly twice (freq build + probe side)
+    val freq = tok.groupBy(col("t")).agg(count(lit(1)).as("c"))
+      .localCheckpoint(false)
     val totalRow = freq.agg(sum(col("c"))).head()
     // empty corpus: the output is empty regardless; 1.0 keeps ln finite
     val total = if (totalRow.isNullAt(0)) 1.0 else totalRow.getLong(0).toDouble
-    tok.join(DedupOps.hintBySize(freq, freqPre), "t")
+    tok.join(freq, "t")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_toks"),
         sum(col("c")).as("freq_sum"),
@@ -365,9 +364,8 @@ object CurationOps {
     // checkpoint the one-row-per-doc lengths table: it feeds both the
     // n/avgdl scalar action and the final join, and each consumer
     // would otherwise re-tokenize the corpus (unigramRarity precedent)
-    val lensPre = toks.select(col("doc_id"),
-      size(col("toks")).cast("double").as("dl"))
-    val lens = lensPre.localCheckpoint(false)
+    val lens = toks.select(col("doc_id"),
+      size(col("toks")).cast("double").as("dl")).localCheckpoint(false)
     val stats = lens.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl"))
       .head()
     // empty corpus: no doc can match a term, output is empty anyway
@@ -387,7 +385,7 @@ object CurationOps {
         log(lit(1.0) + (lit(nDocs) - col("nd") + 0.5) /
           (col("nd") + 0.5)).as("idf"))
     tf.join(broadcast(idf), "t")
-      .join(DedupOps.hintBySize(lens, lensPre), "doc_id")
+      .join(lens, "doc_id")
       .select(col("doc_id"),
         (col("idf") * col("tf") * (k1 + 1.0) /
           (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / avgdl)))
@@ -520,9 +518,10 @@ object CurationOps {
     * c_tgt — no second corpus scan for the target model); the
     * frequency table is checkpointed so the totals action and the
     * probe join reuse it (the unigramRarity precedent); the per-token
-    * log-ratio joins the (doc, term) tf table term-keyed — vocab-sized
-    * side, so a shuffle hash join, never a broadcast of the
-    * vocabulary. Nothing driver-side but the three total scalars. */
+    * log-ratio joins the (doc, term) tf table term-keyed — the planner
+    * broadcasts the vocab-sized side while it fits the broadcast
+    * threshold and shuffles both sides beyond it. Only the three total
+    * scalars are collected. */
   def dsirImportanceWeights(df: DataFrame, idCol: String, textCol: String,
                             isTarget: Column, alpha: Double = 0.5)
       : DataFrame = {
@@ -530,17 +529,17 @@ object CurationOps {
       "give -inf weights for tokens unseen in the target)")
     val tok = df.select(col(idCol).as("doc_id"), isTarget.as("is_tgt"),
         explode(TextOps.tokens(col(textCol))).as("t"))
-    val csPre = tok.groupBy(col("t"))
+    val cs = tok.groupBy(col("t"))
       .agg(count(lit(1)).cast("double").as("c_all"),
         sum(when(col("is_tgt"), 1.0).otherwise(0.0)).as("c_tgt"))
-    val cs = csPre.localCheckpoint(false)
+      .localCheckpoint(false)
     val tot = cs.agg(sum(col("c_all")), sum(col("c_tgt")),
       count(lit(1)).cast("double")).head()
     // empty corpus: output is empty regardless; 1.0 keeps ln finite
     val (nAll, nTgt, v) =
       if (tot.isNullAt(0)) (1.0, 1.0, 1.0)
       else (tot.getDouble(0), tot.getDouble(1), tot.getDouble(2))
-    val lr = DedupOps.hintBySize(cs, csPre).select(col("t"),
+    val lr = cs.select(col("t"),
       (log((col("c_tgt") + alpha) / (nTgt + alpha * v)) -
         log((col("c_all") + alpha) / (nAll + alpha * v))).as("llr"))
     tok.groupBy(col("doc_id"), col("t"))
@@ -867,22 +866,22 @@ object CurationOps {
     val bigrams = df.select(col(idCol).as("doc_id"),
         explode(TextOps.shinglesFromTokens(toks, 2)).as("b"))
       .localCheckpoint(false)
-    val uniPre = df.select(explode(toks).as("t"))
+    val uni = df.select(explode(toks).as("t"))
       .groupBy(col("t")).agg(count(lit(1)).as("ca"))
-    val uni = uniPre.localCheckpoint(false)
+      .localCheckpoint(false)
     val vocab = uni.count().max(1L)
     // probability table keyed by the bigram string: tokens never
     // contain whitespace (split on \s+), so the history token is
     // unambiguously everything before the separator space
-    val probsPre = bigrams
+    val probs = bigrams
       .groupBy(col("b")).agg(count(lit(1)).as("cab"))
       .withColumn("t", substring_index(col("b"), " ", 1))
       .join(uni, "t")
       .select(col("b"),
         (-log((col("cab").cast("double") + 1.0) /
           (col("ca").cast("double") + vocab.toDouble))).as("nll"))
-    val probs = probsPre.localCheckpoint(false)
-    bigrams.join(DedupOps.hintBySize(probs, probsPre), "b")
+      .localCheckpoint(false)
+    bigrams.join(probs, "b")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),
         (sum(col("nll")) / count(lit(1))).as("nll"))
@@ -953,10 +952,10 @@ object CurationOps {
       val Array(a, b) = pair.split(" ", 2)
       split(trim(mergeFold(s, a, b)), " ")
     }
-    val vocabPre = toks.groupBy(col("w")).agg(count(lit(1)).as("c"))
+    val vocab = toks.groupBy(col("w")).agg(count(lit(1)).as("c"))
       .select(col("w"), size(encoded).cast("long").as("n_sub"))
-    val vocab = vocabPre.localCheckpoint(false)
-    toks.join(DedupOps.hintBySize(vocab, vocabPre), "w")
+      .localCheckpoint(false)
+    toks.join(vocab, "w")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_toks"), sum(col("n_sub")).as("n_subwords"))
   }
@@ -1049,9 +1048,9 @@ object CurationOps {
       : DataFrame = {
     val tok = df.select(col(srcCol).as("source"),
       explode(TextOps.tokens(col(textCol))).as("t"))
-    val ctPre = tok.groupBy(col("source"), col("t"))
+    val ct = tok.groupBy(col("source"), col("t"))
       .agg(count(lit(1)).as("c"))
-    val ct = ctPre.localCheckpoint(false)
+      .localCheckpoint(false)
     val corpus = ct.groupBy(col("t")).agg(sum(col("c")).as("cc"))
     val srcTotals = ct.groupBy(col("source")).agg(sum(col("c")).as("ns"))
     val Array(vocabV, totalN) = {
@@ -1063,7 +1062,7 @@ object CurationOps {
       (col("ns").cast("double") + lit(vocabV))
     val pc = (col("cc").cast("double") + 1.0d) / lit(totalN + vocabV)
     corpus.crossJoin(broadcast(srcTotals))
-      .join(DedupOps.hintBySize(ct, ctPre), Seq("source", "t"), "left")
+      .join(ct, Seq("source", "t"), "left")
       .groupBy(col("source"))
       .agg(first(col("ns")).as("n_toks"),
         sum(ps * log(ps / pc)).as("kl"))
@@ -1267,7 +1266,7 @@ object CurationOps {
     *
     * Scale shape: the model is vocabulary-sized — class-conditional
     * counts pivot into one row per token (classes are a collected
-    * handful), broadcast-joined ([[DedupOps.hintBySize]]) against the
+    * handful), broadcast-joined (when small) against the
     * per-document token counts; class priors and totals are collected
     * scalars. The corpus pays two token-keyed partial-agg shuffles
     * (model build + doc-term counts) and one doc-keyed final
@@ -1307,9 +1306,9 @@ object CurationOps {
     // a single token-keyed shuffle (pivot = conditional counts);
     // per-class token totals and the vocabulary size are a single tiny
     // aggregate over the (checkpointed) model — no second corpus pass
-    val widePre = tok.groupBy(col("t"))
+    val wide = tok.groupBy(col("t"))
       .pivot("label", classes.map(_._1)).agg(count(lit(1)))
-    val wide = widePre.localCheckpoint(false)
+      .localCheckpoint(false)
     val statsRow = wide.agg(count(lit(1)).as("v"),
       classes.map { case (l, _) => sum(col(s"`$l`")).as(s"t_$l") }: _*)
       .head()
@@ -1325,7 +1324,7 @@ object CurationOps {
     // LEFT join so out-of-vocabulary tokens (impossible when score ==
     // train, routine otherwise) still contribute their Laplace-floor
     // log-probability instead of silently dropping the token
-    val scored = dt.join(DedupOps.hintBySize(wide, widePre), Seq("t"), "left")
+    val scored = dt.join(wide, Seq("t"), "left")
     val scoreCols = classes.map { case (l, nd) =>
       val denom = tokTotals.getOrElse(l, 0L).toDouble + vocabV
       (lit(math.log(nd / nDocs)) +
@@ -1819,9 +1818,8 @@ object CurationOps {
     require(kTop > 0, s"kTop must be > 0, got $kTop")
     val toks = df.select(col(idCol).as("doc_id"),
       graft.operators.TextOps.tokens(col(textCol)).as("toks"))
-    val lensPre = toks.select(col("doc_id"),
-      size(col("toks")).cast("double").as("dl"))
-    val lens = lensPre.localCheckpoint(false)
+    val lens = toks.select(col("doc_id"),
+      size(col("toks")).cast("double").as("dl")).localCheckpoint(false)
     val stats = lens.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl"))
       .head()
     val nDocs = stats.getLong(0).toDouble

@@ -33,26 +33,6 @@ object DedupOps {
         TextOps.shinglesFromTokens(col("toks"), n).as("sh0"))
       .select(col("doc_id"), array_distinct(col("sh0")).as("sh"))
 
-  /** Broadcast hint iff `est`'s (pre-checkpoint) optimized-plan size
-    * estimate fits the session's own autoBroadcastJoinThreshold. A
-    * localCheckpoint erases plan statistics (LogicalRDD reports
-    * defaultSizeInBytes = huge), so the planner falls back to
-    * sort-merge even when the table is a few MB — measured 3x on the
-    * LSH verify join. This reinstates the erased estimate rather than
-    * overriding the planner: a 100 TB corpus estimates huge and keeps
-    * the scalable shuffle join. */
-  private[operators] def hintBySize(df: DataFrame, est: DataFrame): DataFrame = {
-    val raw = est.sparkSession.conf.get(
-      "spark.sql.autoBroadcastJoinThreshold", "10485760")
-    val thr = raw.toLongOption.getOrElse(
-      try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
-      catch { case _: IllegalArgumentException => -1L })
-    if (thr > 0 &&
-        est.queryExecution.optimizedPlan.stats.sizeInBytes <= thr)
-      broadcast(df)
-    else df
-  }
-
   /** Exact n-gram Jaccard similarity for all pairs sharing at least one
     * shingle (inverted-index join — the exact method; use
     * [[minhashLshCandidates]] when even the inverted index is too hot).
@@ -60,14 +40,11 @@ object DedupOps {
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         n: Int, threshold: Double): DataFrame = {
     // tokenize+shingle feeds FOUR consumers (both inverted-index join
-    // sides + both size joins) — materialize once; hintBySize keeps
-    // the size-table broadcast the checkpoint's erased stats would
-    // otherwise lose
-    val shPre = stagedShingles(df, idCol, textCol, n)
-    val sh = shPre.localCheckpoint(false)
-    val sizes = hintBySize(
-      sh.select(col("doc_id"), size(col("sh")).as("nsh")),
-      shPre.select(col("doc_id"), size(col("sh")).as("nsh")))
+    // sides + both size joins) — materialize once; the checkpoint keeps
+    // its origin's size estimate, so the planner still broadcasts the
+    // size table when it is small
+    val sh = stagedShingles(df, idCol, textCol, n).localCheckpoint(false)
+    val sizes = sh.select(col("doc_id"), size(col("sh")).as("nsh"))
     val inv = sh.select(col("doc_id"), explode(col("sh")).as("s"))
     val shared = inv.as("a").join(inv.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
@@ -136,13 +113,12 @@ object DedupOps {
                          shingleN: Int = 2, k: Int = 8, bands: Int = 4,
                          maxBucketSize: Int = 100): DataFrame = {
     require(k % bands == 0, s"k=$k must divide into bands=$bands")
-    val pre = stagedShingles(df, idCol, textCol, shingleN)
-    val sh = pre.localCheckpoint(false)
+    val sh = stagedShingles(df, idCol, textCol, shingleN)
+      .localCheckpoint(false)
     val sig = md5MinhashSig(
         sh.select(col("doc_id"), explode(col("sh")).as("s")), k)
       .localCheckpoint(false)
-    val shSz = hintBySize(
-      sh.select(col("doc_id"), col("sh"), size(col("sh")).as("n")), pre)
+    val shSz = sh.select(col("doc_id"), col("sh"), size(col("sh")).as("n"))
     val exact = verifyJaccard(
       bandPairs(sig, bands, k / bands, maxBucketSize,
         needBarrier = false),
@@ -478,12 +454,12 @@ object DedupOps {
       .select(col("doc_id"), (col("pos") + 1).as("pos"),
         col("col").as("g"))
       .localCheckpoint(false)
-    val dupPre = grams.groupBy(col("g"))
+    val dup = grams.groupBy(col("g"))
       .agg(count_distinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= minDocs)
       .select(col("g"))
-    val dup = dupPre.localCheckpoint(false)
-    val cov = grams.join(hintBySize(dup, dupPre), Seq("g"), "left_semi")
+      .localCheckpoint(false)
+    val cov = grams.join(dup, Seq("g"), "left_semi")
       .select(col("doc_id"),
         explode(sequence(col("pos"), col("pos") + lit(n - 1))).as("cp"))
       .groupBy(col("doc_id"))
@@ -527,17 +503,17 @@ object DedupOps {
       .select(col("doc_id"), (col("pos") + 1).as("pos"),
         col("col").as("g"))
       .localCheckpoint(false)
-    val dupPre = grams.groupBy(col("g"))
+    val dup = grams.groupBy(col("g"))
       .agg(count_distinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= minDocs)
       .select(col("g"))
-    val dup = dupPre.localCheckpoint(false)
+      .localCheckpoint(false)
     // covered (doc_id, position) pairs; duplicates are harmless to the
     // anti join, so no distinct pass
     // distinct column names on the probe side: posTab and cov share
     // lineage through toks, so same-named join keys would trip the
     // ambiguous-self-join resolver
-    val cov = grams.join(hintBySize(dup, dupPre), Seq("g"), "left_semi")
+    val cov = grams.join(dup, Seq("g"), "left_semi")
       .select(col("doc_id").as("c_doc"),
         explode(sequence(col("pos"), col("pos") + lit(n - 1))).as("cp"))
     val posTab = toks.select(col("doc_id"), posexplode(col("toks")))
@@ -698,12 +674,11 @@ object DedupOps {
     // transforms (the measured 10x+ lambda re-evaluation footgun;
     // ~2x on this path at sf0.1). min() over md5 hex strings orders
     // identically to array_min / DuckDB list_min.
-    val pre = stagedShingles(df, idCol, textCol, shingleN)
-    val sh = pre.localCheckpoint(false)
+    val sh = stagedShingles(df, idCol, textCol, shingleN)
+      .localCheckpoint(false)
     val sig = md5MinhashSig(
       sh.select(col("doc_id"), explode(col("sh")).as("s")), k)
-    val shSz = hintBySize(
-      sh.select(col("doc_id"), col("sh"), size(col("sh")).as("n")), pre)
+    val shSz = sh.select(col("doc_id"), col("sh"), size(col("sh")).as("n"))
     verifyJaccard(bandPairs(sig, bands, k / bands, maxBucketSize,
       needBarrier = false), shSz, "sh", threshold)
   }
@@ -846,17 +821,17 @@ object DedupOps {
     // melt-into-roles + single join + re-group variant was measured
     // ~2x SLOWER — the extra shuffle of hash arrays costs more than
     // the second cached read.
-    val pre = stagedShingles(df, idCol, textCol, shingleN)
+    val sh = stagedShingles(df, idCol, textCol, shingleN)
       .select(col("doc_id"),
         array_distinct(transform(col("sh"), s => xxhash64(s))).as("hs"))
-    val sh = pre.localCheckpoint(false)
+      .localCheckpoint(false)
     val hashed = sh.select(col("doc_id"), explode(col("hs")).as("h0"))
     val cand = bandPairs(affineMinhashSig(hashed, k), bands, k / bands,
       maxBucketSize, needBarrier = false)
-    // Verify tail with the shingle-table side carrying the
-    // pre-checkpoint broadcast decision (see hintBySize).
-    val shSz = hintBySize(
-      sh.select(col("doc_id"), col("hs"), size(col("hs")).as("n")), pre)
+    // Verify tail: the checkpoint keeps its origin's size estimate, so
+    // the planner broadcasts the shingle table when it is small and a
+    // corpus-sized one keeps the shuffle join.
+    val shSz = sh.select(col("doc_id"), col("hs"), size(col("hs")).as("n"))
     verifyJaccard(cand, shSz, "hs", threshold)
   }
 

@@ -726,11 +726,20 @@ object SimilarityOps {
           ceil(col("csz") / maxClusterSize).cast("long")).cast("int"))
       .drop("csz")
       .localCheckpoint(false)
-    val hinted = DedupOps.hintBySize(tagged, pre)
+    // The self-join's broadcast decision reads `pre`'s estimate, not
+    // `tagged`'s: without CBO an inner join is estimated as the product
+    // of its inputs' sizes, so `tagged` (one row per `pre` row) reports
+    // orders of magnitude more than it holds (483 GB for 1 MB at sf0.1)
+    // and the planner would sort-merge a table it should broadcast.
+    val thr = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val probe =
+      if (thr > 0 && pre.queryExecution.optimizedPlan.stats.sizeInBytes <= thr)
+        broadcast(tagged)
+      else tagged
     val drops = tagged
       .select(col("cid"), col("sub"), col("id").as("id1"),
         col("v").as("v1"), col("nm").as("n1"))
-      .join(hinted.select(col("cid"), col("sub"), col("id").as("id2"),
+      .join(probe.select(col("cid"), col("sub"), col("id").as("id2"),
         col("v").as("v2"), col("nm").as("n2")), Seq("cid", "sub"))
       .filter(col("id1") < col("id2"))
       .filter(dot(col("v1"), col("v2")) / (col("n1") * col("n2")) >=

@@ -255,7 +255,6 @@ object OfflineAnalyticsMain {
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val analyses = Seq(
       ("Acceleration [g]", "acceleration_g", false),
       ("Pitch [deg]", "pitch_deg", false),

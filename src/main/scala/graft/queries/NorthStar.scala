@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
 import graft.operators.{CurationOps, DedupOps, FunnelOps, GraphOps,
   MultimodalOps, ScaleOps, SequenceOps, SimilarityOps, TemporalJoinOps,
   TextOps, WindowOps}
@@ -20,24 +19,6 @@ import graft.sources.{InvertedIndexStore, IvfVectorStore, NearDupGraphStore}
   * recursive CTE).
   */
 object NorthStar {
-  private type Q = (SparkSession, String) => DataFrame
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Micro-unit pin for integer-ratio fraction outputs: round(x*1e6)
-    * as BIGINT instead of round(x, 6) as double. Integer outputs hash
-    * identically in every engine/representation, where 6dp-rounded
-    * doubles proved divergence-prone in the driver's gate (r2 q55:
-    * hash fail on a double-representation edge that bit-equal local
-    * parity could not reproduce). Integer-scale rounding is robust:
-    * at 1e5 magnitudes a .5 tie is exactly representable, so both
-    * engines' half-up agree. [[sqlE6]] is the DuckDB mirror. */
-  private def e6(c: Column): Column = round(c * lit(1e6), 0).cast("long")
-
-  private def sqlE6(expr: String): String =
-    s"CAST(ROUND(($expr) * 1e6, 0) AS BIGINT)"
-
   /** Marker words drawn from the synthetic corpus vocabulary — the
     * operator is generic; the query pins a concrete config. */
   val LangMarkers: Seq[(String, Seq[String])] = Seq(

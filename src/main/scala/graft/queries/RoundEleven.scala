@@ -1,10 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
 import graft.operators.{DedupOps, TextOps}
 import graft.sources.{IvfVectorStore, NearDupGraphStore}
 import graft.streaming.NearDupStreamIngest
@@ -15,23 +14,6 @@ import graft.streaming.NearDupStreamIngest
   * aggregation where a double is unavoidable, ratios of integers under
   * the final e6 pin, identical expression shapes on both engines. */
 object RoundEleven {
-  private type Q = (SparkSession, String) => DataFrame
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def e6(c: Column): Column = round(c * lit(1e6), 0).cast("long")
-
-  private def sqlE6(expr: String): String =
-    s"CAST(ROUND(($expr) * 1e6, 0) AS BIGINT)"
-
-  /** Corpus-keyed tmp store path (the sharedNdgStore keying idiom). */
-  private def tmpStorePath(tag: String, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map(b => f"$b%02x").mkString
-    s"${System.getProperty("java.io.tmpdir")}/$tag-$key"
-  }
-
   // ---------------------------------------------------------------
   // q458 — CONTINUOUS dedup ingest pin: the odd-id half corpus fed
   // through NearDupStreamIngest.ingestBatch (the exact foreachBatch
@@ -113,9 +95,6 @@ object RoundEleven {
        |SELECT jband, CAST(COUNT(*) AS BIGINT) AS n_doc_pairs,
        |  CAST(SUM(je6) AS BIGINT) AS j_e6_sum
        |FROM b GROUP BY 1 ORDER BY jband""".stripMargin
-
-  /** Exact event-value cents (the house integer pin for `value`). */
-  private def cents: Column = expr("CAST(ROUND(value * 100) AS BIGINT)")
 
   // ---------------------------------------------------------------
   // q459 — encoding DECISION table: the dictionary (q437) / FOR

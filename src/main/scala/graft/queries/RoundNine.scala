@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
 import graft.operators.{CurationOps, DedupOps, SimilarityOps, TextOps}
 
 /** Round-9 query surface: the classical rank/nonparametric test
@@ -28,19 +27,6 @@ import graft.operators.{CurationOps, DedupOps, SimilarityOps, TextOps}
   *     cross-engine as long as they stay below 2^53.
   */
 object RoundNine {
-  private type Q = (SparkSession, String) => DataFrame
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def e6(c: Column): Column = round(c * lit(1e6), 0).cast("long")
-
-  private def sqlE6(expr: String): String =
-    s"CAST(ROUND(($expr) * 1e6, 0) AS BIGINT)"
-
-  /** Exact event-value cents (the house integer pin for `value`). */
-  private def cents: Column = expr("CAST(ROUND(value * 100) AS BIGINT)")
-
   /** Absolute md5-rank probe cap for the ground-truth eval family
     * (q395/q406/q423): the `cap` vectors with smallest
     * md5(salt:vec_id), vec_id tiebreak — deterministic, engine-

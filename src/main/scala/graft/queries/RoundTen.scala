@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
 import graft.operators.TextOps
 import graft.sources.{IvfVectorStore, NearDupGraphStore}
 
@@ -18,29 +17,6 @@ import graft.sources.{IvfVectorStore, NearDupGraphStore}
   * BEFORE integer aggregation where a double is unavoidable, and
   * ratios of integers under the final e6 pin. */
 object RoundTen {
-  private type Q = (SparkSession, String) => DataFrame
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def e6(c: Column): Column = round(c * lit(1e6), 0).cast("long")
-
-  private def sqlE6(expr: String): String =
-    s"CAST(ROUND(($expr) * 1e6, 0) AS BIGINT)"
-
-  /** Exact event-value cents (the house integer pin for `value`). */
-  private def cents: Column = expr("CAST(ROUND(value * 100) AS BIGINT)")
-
-  /** Corpus-keyed tmp store path (the sharedNdgStore keying idiom):
-    * two runs against different scale factors — or Verify concurrent
-    * with Bench — must never interleave write/append/compact on the
-    * same store directory. */
-  private def tmpStorePath(tag: String, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map(b => f"$b%02x").mkString
-    s"${System.getProperty("java.io.tmpdir")}/$tag-$key"
-  }
-
   // ---------------------------------------------------------------
   // q438 — store READ-path band profile: per-jband doc-pair counts
   // and exact integer jaccard mass, read from the SHARED ensured

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
 import graft.functions.ScalarOps
 import graft.operators.{StatsOps, WindowOps}
 
@@ -20,11 +19,6 @@ import graft.operators.{StatsOps, WindowOps}
   * partition key.
   */
 object TierA {
-  private type Q = (SparkSession, String) => DataFrame
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // to_timestamp under the session timezone (UTC in every entry point),
   // NOT java.sql.Timestamp.valueOf which parses in the JVM default TZ
   // and would shift the oracle-checked cutoff on a non-UTC machine

@@ -1,8 +1,43 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{expr, lit, round}
 
+import graft.core.Tables
+
+/** Helpers shared by every query module: the query-function type, the table
+  * loader and the house integer pins with their DuckDB mirrors. */
 package object queries {
+  private[queries] type Q = (SparkSession, String) => DataFrame
+
+  private[queries] def t(s: SparkSession, dir: String, name: String): DataFrame =
+    Tables.load(s, dir, name)
+
+  /** Micro-unit pin for integer-ratio fraction outputs: round(x*1e6)
+    * as BIGINT instead of round(x, 6) as double. Integer outputs hash
+    * identically in every engine/representation, where 6dp-rounded
+    * doubles proved divergence-prone in the oracle hash compare (r2 q55:
+    * hash fail on a double-representation edge that bit-equal local
+    * parity could not reproduce). Integer-scale rounding is robust:
+    * at 1e5 magnitudes a .5 tie is exactly representable, so both
+    * engines' half-up agree. [[sqlE6]] is the DuckDB mirror. */
+  private[queries] def e6(c: Column): Column = round(c * lit(1e6), 0).cast("long")
+
+  private[queries] def sqlE6(expr: String): String =
+    s"CAST(ROUND(($expr) * 1e6, 0) AS BIGINT)"
+
+  /** Exact event-value cents (the house integer pin for `value`). */
+  private[queries] def cents: Column = expr("CAST(ROUND(value * 100) AS BIGINT)")
+
+  /** Corpus-keyed tmp store path (the sharedNdgStore keying idiom):
+    * two runs against different scale factors — or Verify concurrent
+    * with Bench — must never interleave write/append/compact on the
+    * same store directory. */
+  private[queries] def tmpStorePath(tag: String, dir: String): String = {
+    val key = java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).take(4).map(b => f"$b%02x").mkString
+    s"${System.getProperty("java.io.tmpdir")}/$tag-$key"
+  }
 
   /** Total ordering for a BOUNDED final result (every oracle query's
     * last step). `orderBy` plans a range-partitioned sort whose bounds

@@ -19,7 +19,6 @@ object IngestMain {
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     OrcTelemetryStore.ingestCsv(spark, csv, out)
     val secs = (System.nanoTime() - t0) / 1e9

@@ -53,12 +53,6 @@ object NearDupGraphStore {
   private def jband(j: org.apache.spark.sql.Column) =
     least(floor(j * 10.0).cast("int"), lit(9)).as("jband")
 
-  // overlapped independent writes — [[StoreCompaction.inParallel]]
-  // (shared with IvfVectorStore); see its scaladoc for the
-  // shared-checkpoint pre-materialization contract
-  private def inParallel(tasks: (() => Unit)*): Unit =
-    StoreCompaction.inParallel(tasks: _*)
-
   // pairs/ and components/ are dynamic-partition layouts, and a
   // VALID store can have zero rows in either (a corpus with no pair
   // >= baseT writes no partition dirs at all — normal at any scale).
@@ -210,7 +204,7 @@ object NearDupGraphStore {
     sets.count()
     // the four subdir writes are mutually independent — overlap them
     // so one writer's task tail back-fills with the next's tasks
-    inParallel(
+    StoreCompaction.inParallel(
       () => reps.select(col("doc_id").as("rep_id"),
           md5(col("text")).as("h"),
           length(col("text")).cast("long").as("len"))
@@ -277,7 +271,7 @@ object NearDupGraphStore {
     // checkpoints are shared across the forked writers (inParallel's
     // pre-materialization contract)
     freshSets.count()
-    inParallel(
+    StoreCompaction.inParallel(
       // members: delta docs of a known text ride the old rep id
       () => dmembers.join(drepsH.select(col("d_rep").as("rep_id"),
           col("old_rep")), "rep_id")
@@ -348,7 +342,7 @@ object NearDupGraphStore {
     // shared-checkpoint pre-materialization + overlapped independent
     // stage writes — same shape as [[append]]
     freshSets.count()
-    inParallel(
+    StoreCompaction.inParallel(
       () => dmembers.join(drepsH.select(col("d_rep").as("rep_id"),
           col("old_rep")), "rep_id")
         .select(coalesce(col("old_rep"), col("rep_id")).as("rep_id"),
@@ -437,7 +431,7 @@ object NearDupGraphStore {
           })
         else Seq.empty
       }
-    inParallel(subs: _*)
+    StoreCompaction.inParallel(subs: _*)
   }
 
   /** Derived group sizes: one COUNT over the append-only membership. */

@@ -34,8 +34,12 @@ private[graft] object StoreCompaction {
     * pre-materialize any lazily-localCheckpointed frame shared by two
     * tasks (one count() before the fork) — concurrent first
     * materialization of one checkpoint is the r11 deadlock class.
-    * Failures rethrow their original exception. */
-  def inParallel(tasks: (() => Unit)*): Unit = {
+    * An empty task list returns at once. A failure is rethrown only
+    * after every task has finished, so a caller never races a writer
+    * that is still running: the first failing task's original
+    * exception (in task order), with the others attached as
+    * suppressed. */
+  def inParallel(tasks: (() => Unit)*): Unit = if (tasks.nonEmpty) {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       tasks.size)
     try {
@@ -44,12 +48,16 @@ private[graft] object StoreCompaction {
           def call(): Unit = t()
         })
       }
-      futures.foreach { f =>
-        try f.get()
+      val failures = futures.flatMap { f =>
+        try { f.get(); None }
         catch {
           case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
+            Some(e.getCause)
         }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
       }
     } finally pool.shutdown()
   }

@@ -194,6 +194,50 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
       s"small-corpus verify must not sort-merge:\n$p")
   }
 
+  test("localCheckpoint keeps its origin plan's size estimate") {
+    // The operators join checkpointed tables without size hints: the
+    // planner's broadcast decision reads the checkpoint's statistics,
+    // which LogicalRDD carries over from the origin plan.
+    val grouped = Tables.load(spark, dir, "documents")
+      .groupBy(org.apache.spark.sql.functions.col("source")).count()
+    def est(df: DataFrame): BigInt =
+      df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val origin = est(grouped)
+    assert(origin < spark.sessionState.conf.defaultSizeInBytes)
+    for (eager <- Seq(false, true))
+      assert(est(grouped.localCheckpoint(eager)) == origin,
+        s"localCheckpoint($eager) no longer keeps the origin plan's " +
+          "sizeInBytes (LogicalRDD.originStats): every checkpointed " +
+          "small-table join in the operators would sort-merge")
+  }
+
+  test("LSH verify join keeps the shuffle join when the shingle table " +
+      "exceeds the broadcast threshold") {
+    val docs = Tables.load(spark, dir, "documents")
+    val shingles = graft.operators.DedupOps.stagedShingles(
+      docs, "doc_id", "text", 2)
+    val est = shingles.queryExecution.optimizedPlan.stats.sizeInBytes
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, (est / 4).toString)
+    val p =
+      try plan(graft.operators.DedupOps.minhashLshDedup(
+        docs, "doc_id", "text", shingleN = 2, k = 16, bands = 16,
+        threshold = 0.1))
+      finally spark.conf.set(key, prev)
+    assert(p.contains("SortMergeJoin"),
+      s"a shingle table above the threshold must not broadcast:\n$p")
+  }
+
+  test("semantic dedup: the cluster self-join broadcasts despite the " +
+      "join-product estimate of the tagged table") {
+    val emb = Tables.load(spark, dir, "embeddings")
+    val p = plan(SimilarityOps.semanticDedup(emb, "vec_id", "embedding",
+      k = 8, iters = 1))
+    assert("BroadcastHashJoin \\[cid#\\d+, sub#\\d+\\]".r.findFirstIn(p)
+      .nonEmpty, s"the (cid, sub) self-join should broadcast:\n$p")
+  }
+
   test("temperature mix: per-source cuts broadcast; selection is a filter") {
     val docs = Tables.load(spark, dir, "documents")
     val p = plan(graft.operators.CurationOps.temperatureMix(
