@@ -2,7 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 object Bench {
-  /** Session tuned for benchmark/stress runs (shared with [[ScaleStress]]). */
+  /** Session tuned for benchmark/stress runs (shared with [[Verify]],
+    * [[ScaleStress]] and [[ExplainDump]]). */
   def benchSession(cpus: String): SparkSession = SparkSession.builder()
     .master(s"local[$cpus]")
     .config("spark.sql.shuffle.partitions", cpus)
@@ -30,12 +31,7 @@ object Bench {
     // nothing. The noop writer evaluates every output column fully.
     // SPARK_GRAFT_ONLY: optional comma-separated substring filter for
     // targeted A/B timing of individual queries (unset = full suite).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-      .filter(_.nonEmpty) // empty/blank filter string == unset
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.forall(_.exists(name.contains))
-    }
+    val selected = SparkEntry.selectQueries(sys.env.get("SPARK_GRAFT_ONLY"))
     val results = timeQueries(spark, sfDir, selected)
     val qs = results.map {
       case (k, (None, v))      => "\"" + k + "\":" + v

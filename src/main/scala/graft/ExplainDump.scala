@@ -45,10 +45,7 @@ object ExplainDump {
             j.properties.getProperty("spark.job.description") == "explain-drain")
           drained.release()
     })
-    val filters = names.split(",").map(_.trim).filter(_.nonEmpty)
-    val selected = SparkEntry.queries.filter { case (n, _) =>
-      names == "all" || filters.exists(n.contains)
-    }
+    val selected = SparkEntry.selectQueries(Some(names).filter(_ != "all"))
     Files.createDirectories(Paths.get(outDir))
     selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {

@@ -55,13 +55,8 @@ object ScaleStress {
 
     Bench.warmUp(spark, outDir)
 
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-      .filter(_.nonEmpty)
-      .getOrElse(DefaultTargets)
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.exists(name.contains)
-    }
+    val selected = SparkEntry.selectQueries(
+      sys.env.get("SPARK_GRAFT_ONLY"), DefaultTargets)
     val results = Bench.timeQueries(spark, outDir, selected)
       .sortBy { case (name, _) => name }
     val qs = results.map {

@@ -27,6 +27,20 @@ object SparkEntry {
     TierA.all ++ NorthStar.all ++ RoundNine.all ++ RoundTen.all ++
       RoundEleven.all
 
+  /** The queries whose name contains any entry of the comma-separated
+    * `filter` (`SPARK_GRAFT_ONLY`, or `ExplainDump`'s names argument).
+    * Every name starts with `qNNN_`, so "q16_" selects q16 alone while
+    * "q16" also selects q160-q169. An absent or blank filter falls back
+    * to the `default` entries, and with none of those selects every
+    * query. */
+  def selectQueries(filter: Option[String], default: Seq[String] = Nil)
+      : Map[String, (SparkSession, String) => DataFrame] = {
+    val given = filter.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    val subs = if (given.nonEmpty) given else default
+    if (subs.isEmpty) queries
+    else queries.filter { case (name, _) => subs.exists(name.contains) }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -1,33 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.core.Tables.NanosAsLongKey, "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // See Bench: keeps megabyte-scale local scans from collapsing to
-      // one partition (single-threaded expression pipelines above them).
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .getOrCreate()
+    val spark = Bench.benchSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=q55,q26 runs just those queries (prefix match) —
-    // local iteration aid; the driver never sets it.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected = only match {
-      case Some(ps) =>
-        SparkEntry.queries.filter { case (n, _) => ps.exists(n.startsWith) }
-      case None => SparkEntry.queries
-    }
+    // SPARK_GRAFT_ONLY=q55_,q26_ runs just those queries — a local
+    // iteration aid; a full correctness dump leaves it unset.
+    val selected = SparkEntry.selectQueries(sys.env.get("SPARK_GRAFT_ONLY"))
     // Failures are collected into a failures.json manifest so a
     // silently-shrunk correctness file can never happen again (r3: 26
     // queries vanished from CORRECTNESS_r03 with only stderr evidence).

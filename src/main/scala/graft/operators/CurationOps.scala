@@ -41,45 +41,6 @@ object CurationOps {
     }.toDF("column", "n_rows", "n_nonnull", "ndv", "min_str", "max_str")
   }
 
-  /** Deflate compression-ratio quality signal: templated / highly
-    * repetitive text (boilerplate, keyword stuffing, generated spam)
-    * compresses far below natural prose, so `n_deflate / n_bytes` is
-    * a cheap corpus-quality feature (the zlib analogue of the Gopher
-    * repetition rules — used together, they catch different spam).
-    * Runs per-partition with ONE reused Deflater (native zlib state
-    * released on task completion), fixed compression level — output
-    * is deterministic for a given JDK's zlib, and spec-pinned rather
-    * than oracle-checked (the oracle engine has no deflate). Pure
-    * map work: scan speed, zero shuffle. */
-  def compressionRatio(df: DataFrame, idCol: String, textCol: String,
-                       level: Int = 6): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        val defl = new java.util.zip.Deflater(level, false)
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => defl.end()))
-        it.map { case (id, t) =>
-          val in =
-            if (t == null) Array.emptyByteArray else t.getBytes("UTF-8")
-          defl.reset()
-          defl.setInput(in)
-          defl.finish()
-          var out = new Array[Byte](math.max(64, in.length / 2))
-          var n = 0
-          while (!defl.finished()) {
-            if (n == out.length)
-              out = java.util.Arrays.copyOf(out, out.length * 2)
-            n += defl.deflate(out, n, out.length - n)
-          }
-          (id, in.length, n,
-            if (in.length == 0) 1.0 else n.toDouble / in.length)
-        }
-      }.toDF("doc_id", "n_bytes", "n_deflate", "deflate_ratio")
-  }
-
   /** First 8 hex digits of md5 of the input string, as a 32-bit value
     * in a long — THE cross-engine hash idiom of this library (mirrored
     * by the DuckDB oracle generator's sqlHex32). Every consumer of a
@@ -748,91 +709,6 @@ object CurationOps {
     spark.createDataFrame(merges.toSeq).toDF("rank", "pair", "cnt")
   }
 
-  /** Production-scale BPE training: [[bpeTrain]]'s batched loop, with
-    * the per-round PAIR COUNT measured on an md5-deterministic sample
-    * of the word-frequency table ([[hashKeep]] on the word string, so
-    * membership is stable across rounds, engines, and partitioning)
-    * while the REWRITE still applies to the full table. Pair counting
-    * dominates a training round (it explodes every symbol adjacency);
-    * at a web-corpus vocabulary a `sampleRate` of a few percent cuts
-    * that cost proportionally while rank order — all that selection
-    * needs — is preserved for the high-frequency pairs that win merge
-    * rounds (frequency estimates from a fixed random word subset are
-    * unbiased up to the per-word weight).
-    *
-    * Job arithmetic: one pair-count job + one bounded driver collect +
-    * one rewrite per ROUND, rounds ≈ nMerges / batch (the disjointness
-    * filter can under-fill a batch, adding rounds only when candidate
-    * symbols overlap heavily). A 32k-merge tokenizer at batch = 128 is
-    * ~250 rounds = O(hundreds) of jobs — not O(32k) — and each
-    * pair-count scan touches `sampleRate` of the vocabulary.
-    *
-    * Returned `cnt` is the SAMPLE count (the selection statistic), not
-    * a full-corpus count — rescale by 1/sampleRate for an estimate.
-    * The extra `round` column records which Spark round picked each
-    * merge, so callers (and specs) can audit the round budget.
-    * `sampleRate = 1.0` reproduces `bpeTrain(df, textCol, nMerges,
-    * batch)` exactly, merge for merge and count for count. */
-  def bpeTrainSampled(df: DataFrame, textCol: String, nMerges: Int,
-                      batch: Int, sampleRate: Double,
-                      salt: String = "bpe"): DataFrame = {
-    require(batch >= 1, s"batch must be >= 1, got $batch")
-    require(sampleRate > 0.0 && sampleRate <= 1.0,
-      s"sampleRate must be in (0, 1], got $sampleRate")
-    val spark = df.sparkSession
-    // word-frequency table as in bpeTrain, plus the sample-membership
-    // bit — computed ONCE from the word string, then carried through
-    // rewrites (the sampled word set must not drift between rounds)
-    var cur = df
-      .select(explode(TextOps.tokens(col(textCol))).as("w"))
-      .filter(length(col("w")) > 0)
-      .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .select(col("c"),
-        transform(sequence(lit(1), length(col("w"))),
-          i => col("w").substr(i, lit(1))).as("s"),
-        hashKeep(col("w"), sampleRate, salt).as("in_sample"))
-      .localCheckpoint(false)
-    val merges =
-      scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long, Int)]
-    var exhausted = false
-    var round = 0
-    while (merges.length < nMerges && !exhausted) {
-      round += 1
-      val want = math.min(batch, nMerges - merges.length)
-      val top = cur
-        .filter(col("in_sample")) // the ONLY difference from bpeTrain
-        .select(col("c"),
-          explode(zip_with(col("s"),
-            slice(col("s"), lit(2), greatest(size(col("s")) - 1, lit(0))),
-            (x, y) => concat(x, lit(" "), y))).as("pair"))
-        .filter(col("pair").isNotNull)
-        .groupBy(col("pair")).agg(sum(col("c")).as("cnt"))
-        .orderBy(col("cnt").desc, col("pair"))
-        .limit(if (want == 1) 1 else want * 4)
-        .collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val used = scala.collection.mutable.Set.empty[String]
-        val picked = top.iterator.flatMap { r =>
-          val pair = r.getString(0)
-          val Array(a, b) = pair.split(" ", 2)
-          if (used(a) || used(b)) None
-          else { used += a; used += b; Some((pair, a, b, r.getLong(1))) }
-        }.take(want).toSeq
-        picked.foreach { case (pair, _, _, cnt) =>
-          merges += ((merges.length + 1, pair, cnt, round))
-        }
-        val rewritten = picked.foldLeft(col("s")) { case (s, (_, a, b, _)) =>
-          split(trim(mergeFold(s, a, b)), " ")
-        }
-        cur = cur.select(col("c"), rewritten.as("s"), col("in_sample"))
-          .localCheckpoint(false)
-      }
-    }
-    spark.createDataFrame(merges.toSeq)
-      .toDF("rank", "pair", "cnt", "round")
-  }
-
   /** Per-document bigram surprisal — the KenLM/CCNet-style fluency
     * signal one level up from [[unigramRarity]]: a bigram language
     * model with add-one (Laplace) smoothing is trained on the corpus
@@ -995,22 +871,15 @@ object CurationOps {
 
   /** Count-min sketch TABLE for a corpus's token stream: one row per
     * (hash row j, bucket b) with the occurrence count n. depth x width
-    * rows regardless of corpus size — and mergeable by plain SUM
-    * ([[cmsMergeSketches]]), so a persisted sketch folds micro-batches
-    * or corpus deltas WITHOUT rescanning old data: the incremental /
-    * streaming heavy-hitters monitor (same store-fold contract as
-    * StatsOps.ksBinCounts). */
+    * rows regardless of corpus size; cells are counters, so two
+    * sketches of the same depth/width merge exactly by summing `n`
+    * per (j, b). */
   def cmsSketch(df: DataFrame, textCol: String, depth: Int = 4,
                 width: Int = 256): DataFrame =
     df.select(explode(TextOps.tokens(col(textCol))).as("t"))
       .select(posexplode(array((0 until depth)
         .map(j => cmsBucket(j, col("t"), width)): _*)).as(Seq("j", "b")))
       .groupBy(col("j"), col("b")).agg(count(lit(1)).as("n"))
-
-  /** Merge two [[cmsSketch]] tables (same depth/width) by summation —
-    * CMS cells are counters, so the merge is exact. */
-  def cmsMergeSketches(a: DataFrame, b: DataFrame): DataFrame =
-    a.union(b).groupBy(col("j"), col("b")).agg(sum(col("n")).as("n"))
 
   /** Point estimates from a [[cmsSketch]] table for candidate terms:
     * min over the term's depth buckets (the classic CMS upper-bound

@@ -839,7 +839,9 @@ object DedupOps {
     * xxhash64 each once, then 64 conditional-sum aggregate columns
     * (whole-stage-codegen'd) — an order of magnitude faster than the
     * equivalent nested-lambda array expression, which Spark interprets
-    * per element. Same semantics as [[TextOps.simhash64]]. */
+    * per element. Each token votes +1/-1 per bit of its xxhash64;
+    * bit b of `sim` is set iff its vote sum is positive. A null text
+    * produces no row. */
   def simhashSignatures(df: DataFrame, idCol: String, textCol: String)
       : DataFrame = {
     val tok = df
@@ -864,18 +866,6 @@ object DedupOps {
   def simhashNearDup(df: DataFrame, idCol: String, textCol: String,
                      maxHamming: Int = 3): DataFrame =
     simhashBandVerify(simhashSignatures(df, idCol, textCol),
-      nBands = 4, maxHamming)
-
-  /** Near-dup pairs over ANY precomputed 64-bit fingerprint column —
-    * e.g. the perceptual image hash from
-    * [[MultimodalOps.perceptualHash64]] — via the simhash tail:
-    * 16-bit band match (any shared band => candidate; certain for
-    * Hamming <= 3), exact Hamming verify. One shuffle keyed by band
-    * bucket; no self-join. */
-  def fingerprintNearDup(df: DataFrame, idCol: String, fpCol: String,
-                         maxHamming: Int = 3): DataFrame =
-    simhashBandVerify(
-      df.select(col(idCol).as("doc_id"), col(fpCol).cast("long").as("sim")),
       nBands = 4, maxHamming)
 
   /** Band-match + Hamming-verify tail shared by the 64-bit xxhash64
@@ -943,24 +933,6 @@ object DedupOps {
           when(col(s"b$b") > 0, shiftleft(lit(1L), b)).otherwise(0L))
           .reduce(_ bitwiseOR _).as("sim"))
     simhashBandVerify(sig, nBands = 2, maxHamming)
-  }
-
-  /** End-to-end near-dup corpus dedup — the composition a curation
-    * pipeline actually runs: LSH candidate pairs -> exact-Jaccard
-    * verify -> connected components -> keep each cluster's minimum id
-    * (and every unpaired document). Exact duplicates are near-dups at
-    * any threshold, so they fall out of the same pass. The anti-join
-    * ships only the (tiny) drop list against the corpus scan. */
-  def dedupCorpus(df: DataFrame, idCol: String, textCol: String,
-                  shingleN: Int = 3, k: Int = 16, bands: Int = 4,
-                  threshold: Double = 0.5,
-                  maxBucketSize: Int = 100): DataFrame = {
-    val pairs = minhashLshDedup(df, idCol, textCol, shingleN, k, bands,
-      threshold, maxBucketSize)
-    val drop = connectedComponents(pairs, "id1", "id2")
-      .filter(col("id") =!= col("cluster_id"))
-      .select(col("id"))
-    df.join(drop, df(idCol) === drop("id"), "left_anti")
   }
 
   /** Cross-corpus contamination detection (benchmark decontamination):
@@ -1118,11 +1090,8 @@ object DedupOps {
     * longs per row and the quadratic work is bounded pair structs.
     *
     * `maxBucketSize` still skips degenerate megabuckets — that is a
-    * RECALL decision, not a silent one: audit it with
-    * [[SimilarityOps.oversizedBuckets]] (bands = 1, planesPerBand =
-    * `planes`), which returns exactly the buckets this operator
-    * skipped. A non-empty audit means `planes` is too small for the
-    * corpus. */
+    * RECALL decision: every pair of a bucket above the cap is dropped,
+    * so a corpus with such buckets needs more `planes`. */
   def embeddingNearDup(df: DataFrame, idCol: String, vecCol: String,
                        planes: Int = 16, threshold: Double = 0.95,
                        dims: Int = 64, maxBucketSize: Int = 1000)

@@ -145,8 +145,7 @@ object GraphOps {
   }
 
   /** Wedge-join triangle enumeration over a canonical distinct edge
-    * relation (a < b). Factored so the plain and bucketed entry points
-    * share one plan shape. */
+    * relation (a < b) — the body of [[triangleStatsBucketed]]. */
   private def triangleCore(e: DataFrame): DataFrame = {
     val deg = e.select(col("a").as("node"))
       .union(e.select(col("b").as("node")))
@@ -173,23 +172,18 @@ object GraphOps {
     * pairs (`aCol` < `bCol`; duplicates removed here). The standard
     * distributed triangle enumeration: each triangle x<y<z is found
     * exactly once by joining wedge (x,y)+(y,z) against closing edge
-    * (x,z) — join keys are node ids, so every stage is a
-    * hash-partitioned equi-join whose cost is edge-degree bound,
-    * never all-triples. cc = 2*t / (deg*(deg-1)) (0 when deg < 2). */
-  def triangleStats(pairs: DataFrame, aCol: String, bCol: String)
-      : DataFrame =
-    triangleCore(pairs.select(col(aCol).cast("long").as("a"),
-      col(bCol).cast("long").as("b")).distinct())
-
-  /** [[triangleStats]] with the canonical edge relation first persisted
-    * as a bucketed+sorted table on `a` (via [[ScaleOps.writeBucketed]]),
+    * (x,z) — join keys are node ids, so every stage is an equi-join
+    * whose cost is edge-degree bound, never all-triples.
+    * cc = 2*t / (deg*(deg-1)) (0 when deg < 2).
+    *
+    * The canonical edge relation is first persisted as a
+    * bucketed+sorted table on `a` (via [[ScaleOps.writeBucketed]]),
     * so the edge sides keyed on `a` — the e2 wedge side and the e3
     * closing-edge side (bucket key `a` is a subset of its (a, b) join
     * clustering) — scan pre-partitioned with no shuffle exchange. The
     * 100 TB shape: a similarity graph is built once and mined many
     * times, so the edge table should live bucketed on disk rather than
-    * be re-shuffled per query. Identical results to [[triangleStats]];
-    * only the physical plan changes. */
+    * be re-shuffled per query. */
   def triangleStatsBucketed(spark: SparkSession, pairs: DataFrame,
                             aCol: String, bCol: String,
                             table: String = "graft_tri_edges",

@@ -22,16 +22,9 @@ final case class MediaFeatures(
     mean_byte: Double, entropy_proxy: Double,
     thumbnail: Array[Byte])
 
-/** A decoded-and-resized image: source dimensions plus the re-encoded
-  * PNG at the requested output size. */
-final case class ResizedMedia(
-    media_id: Long, format: String,
-    src_width: Int, src_height: Int,
-    width: Int, height: Int,
-    png: Array[Byte])
-
 /** Multimodal column plumbing: schema, partition-friendly batch
-  * processing, decode/resize/frame-sample operators.
+  * processing, image decode, a byte-level resize stub and frame
+  * sampling.
   *
   * Image decode is REAL for PNG/JPEG/GIF/BMP via the JDK's
   * `javax.imageio` (no external dependency): real width/height and a
@@ -96,192 +89,6 @@ object MultimodalOps {
       // IndexOutOfBounds) on malformed bodies — at 100 TB of untrusted
       // payloads one adversarial file must not kill the job
     } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** RIFF/WAVE magic sniff (mirrors [[looksLikeImage]]). */
-  private[graft] def looksLikeWav(b: Array[Byte]): Boolean =
-    b.length >= 12 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' &&
-      b(3) == 'F' && b(8) == 'W' && b(9) == 'A' && b(10) == 'V' &&
-      b(11) == 'E'
-
-  private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-
-  /** REAL audio decode for PCM WAV — a hand-rolled RIFF chunk walk
-    * (byte-level, deterministic, no codec library): returns
-    * (sampleRate, channels, bitsPerSample, nSamples, rms) for 8-bit
-    * unsigned / 16-bit signed little-endian PCM, None for anything
-    * else (compressed formats keep the byte-stat fallback path, the
-    * same split as image decode). nSamples counts per-channel frames x
-    * channels (raw samples); rms is over the integer sample domain
-    * (8-bit values centered by -128), with the sum of squares in
-    * exact integer arithmetic — order-independent. Truncated data
-    * chunks clip to the real payload instead of failing: one ragged
-    * file must not kill a 100 TB scan. */
-  /** The RIFF chunk walk shared by [[decodeWav]] and [[audioWindows]]:
-    * locates the PCM data region for the first `data` chunk following
-    * a supported `fmt ` chunk. Returns (rate, channels, bits, start
-    * offset, clipped byte length). */
-  private def wavPcmRegion(bytes: Array[Byte])
-      : Option[(Int, Int, Int, Int, Int)] = {
-    if (!looksLikeWav(bytes)) return None
-    val n = bytes.length
-    var pos = 12
-    var fmt: Option[(Int, Int, Int)] = None // channels, rate, bits
-    var result: Option[(Int, Int, Int, Int, Int)] = None
-    while (pos + 8 <= n && result.isEmpty) {
-      val id = new String(bytes, pos, 4, "US-ASCII")
-      val size = le32(bytes, pos + 4).toInt
-      if (id == "fmt " && pos + 8 + 16 <= n) {
-        val audioFormat = le16(bytes, pos + 8)
-        val channels = le16(bytes, pos + 10)
-        val rate = le32(bytes, pos + 12).toInt
-        val bits = le16(bytes, pos + 22)
-        if (audioFormat == 1 && channels > 0 &&
-            (bits == 8 || bits == 16))
-          fmt = Some((channels, rate, bits))
-      } else if (id == "data") {
-        fmt.foreach { case (channels, rate, bits) =>
-          val start = pos + 8
-          val len = math.max(0, math.min(size, n - start))
-          result = Some((rate, channels, bits, start, len))
-        }
-      }
-      if (result.isEmpty) pos += 8 + size + (size & 1) // word-aligned
-    }
-    result
-  }
-
-  /** Sample i (raw interleaved order) of the located PCM region, in
-    * the centered integer domain (8-bit unsigned recentered by -128,
-    * 16-bit signed as-is). */
-  @inline private def pcmSample(bytes: Array[Byte], start: Int,
-                                bits: Int, i: Int): Int =
-    if (bits == 8) (bytes(start + i) & 0xff) - 128
-    else le16(bytes, start + 2 * i).toShort.toInt
-
-  private[graft] def decodeWav(bytes: Array[Byte])
-      : Option[(Int, Int, Int, Long, Double)] =
-    wavPcmRegion(bytes).map { case (rate, channels, bits, start, len) =>
-      val nSamples = (len / (bits / 8)).toLong
-      var sumSq = 0L
-      var i = 0
-      while (i < nSamples) {
-        val v = pcmSample(bytes, start, bits, i)
-        sumSq += v.toLong * v
-        i += 1
-      }
-      val rms =
-        if (nSamples == 0) 0.0
-        else math.sqrt(sumSq.toDouble / nSamples)
-      (rate, channels, bits, nSamples, rms)
-    }
-
-  /** Audio feature extraction: REAL PCM-WAV decode (header facts +
-    * exact-integer RMS) for payloads whose magic says RIFF/WAVE;
-    * every other payload keeps zeros with is_wav=false — swapping in
-    * codec decoders changes only [[decodeWav]], not the pipeline
-    * shape (the image-decode split, applied to audio). Runs
-    * per-partition like [[extractFeatures]]. */
-  def audioFeatures(media: Dataset[MediaPayload]): DataFrame = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { batch =>
-      batch.map { p =>
-        decodeWav(p.data) match {
-          case Some((rate, ch, bits, ns, rms)) =>
-            (p.media_id, p.format, true, rate, ch, bits, ns, rms)
-          case None =>
-            (p.media_id, p.format, false, 0, 0, 0, 0L, 0.0)
-        }
-      }
-    }.toDF("media_id", "format", "is_wav", "sample_rate", "channels",
-      "bits", "n_samples", "rms")
-  }
-
-  /** Windowed PCM features — the speech/audio curation signals
-    * (silence trimming, music-vs-speech gates, clipping detection)
-    * need per-frame-window stats, not one whole-file RMS. Cuts the
-    * decoded stream into fixed windows of `windowFrames` per-channel
-    * frames and emits, per window: exact-integer RMS over all
-    * channels, zero crossings of channel 0 (sign flips between
-    * consecutive frames, zero treated as non-negative), and the peak
-    * absolute sample. One streaming pass over the payload bytes — no
-    * sample array is materialized, so a multi-GB file costs O(window)
-    * memory. Non-WAV payloads emit no rows (same split as
-    * [[audioFeatures]]). Output: media_id, window_idx, n_frames, rms,
-    * zero_crossings, peak. */
-  def audioWindows(media: Dataset[MediaPayload], windowFrames: Int)
-      : DataFrame = {
-    require(windowFrames > 0, s"bad window $windowFrames")
-    import media.sparkSession.implicits._
-    media.mapPartitions { batch =>
-      batch.flatMap { p =>
-        wavPcmRegion(p.data) match {
-          case None => Iterator.empty
-          case Some((_, channels, bits, start, len)) =>
-            val nFrames = len / (bits / 8) / channels
-            (0 until ((nFrames + windowFrames - 1) / windowFrames))
-              .iterator.map { w =>
-                val f0 = w * windowFrames
-                val f1 = math.min(f0 + windowFrames, nFrames)
-                var sumSq = 0L
-                var zc = 0
-                var peak = 0
-                var prevSign = 0 // sign of the previous ch-0 sample
-                var f = f0
-                while (f < f1) {
-                  var c = 0
-                  while (c < channels) {
-                    val v = pcmSample(p.data, start, bits, f * channels + c)
-                    sumSq += v.toLong * v
-                    if (math.abs(v) > peak) peak = math.abs(v)
-                    if (c == 0) {
-                      val s = if (v < 0) -1 else 1
-                      if (f > f0 && s != prevSign) zc += 1
-                      prevSign = s
-                    }
-                    c += 1
-                  }
-                  f += 1
-                }
-                val n = (f1 - f0).toLong * channels
-                val rms = if (n == 0) 0.0 else math.sqrt(sumSq.toDouble / n)
-                (p.media_id, w, f1 - f0, rms, zc, peak)
-              }
-        }
-      }
-    }.toDF("media_id", "window_idx", "n_frames", "rms",
-      "zero_crossings", "peak")
-  }
-
-  /** 64-bit perceptual hash (aHash) over an 8x8 grayscale thumbnail
-    * column (the [[decodeImage]] output): bit i is set iff pixel_i *
-    * 64 >= sum(pixels) — the mean compare kept in exact integers so
-    * the hash is engine-reproducible. Near-identical images differ in
-    * a few bits; pair detection composes with
-    * [[DedupOps.fingerprintNearDup]] (band + Hamming verify). Pure
-    * column expression: byte i is read with substring+hex+conv, the
-    * pixel array enters the bit fold as a collection argument
-    * (evaluated once — the CLAUDE.md lambda rule). */
-  def perceptualHash64(thumb: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-    val px = transform(sequence(lit(0), lit(63)),
-      i => conv(hex(substring(thumb, (i + 1).cast("int"), lit(1))), 16, 10)
-        .cast("long"))
-    // two nested 1-element transforms bind the pixel array and its sum
-    // as lambda variables, so each is evaluated ONCE per row — the
-    // resizeStub collection-argument idiom, twice
-    element_at(transform(array(px), p =>
-      element_at(transform(array(aggregate(p, lit(0L), (a, x) => a + x)),
-        total => aggregate(
-          zip_with(p, sequence(lit(0), lit(63)), (x, i) =>
-            when(x * 64 >= total,
-              call_function("shiftleft", lit(1L), i.cast("int")))
-              .otherwise(lit(0L))),
-          lit(0L), (a, x) => a.bitwiseOR(x))), 1)), 1)
   }
 
   /** Attach a synthetic media payload to any id+text DataFrame (the
@@ -352,39 +159,6 @@ object MultimodalOps {
     }
   }
 
-  /** Ingest a directory of raw media files through Spark's built-in
-    * `binaryFile` source into the MediaPayload schema: media_id is the
-    * md5-derived 32-bit hash of the file name (deterministic across
-    * re-ingests and engines), format comes from the extension, and
-    * dimensions stay 0 until the (stubbed) decode fills them. The
-    * source is distributed and splittable BY FILE — a 100 TB media
-    * lake parallelizes across files, and `pathGlobFilter` prunes
-    * before any byte is read. */
-  def ingestBinaryDir(spark: org.apache.spark.sql.SparkSession,
-                      path: String, glob: String = "*"): DataFrame =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .load(path)
-      .select(
-        // hash the BASENAME, not the full URI: the same file re-ingested
-        // from a different staging dir/mount/bucket keeps its id
-        CurationOps.md5Hash32(element_at(split(col("path"), "/"), -1))
-          .as("media_id"),
-        // extension from the BASENAME too — a dotted parent directory
-        // (/data/v1.2/readme) must not leak into the format; files
-        // with no extension, or a trailing dot ('dump.' splits to a
-        // trailing empty segment), get the 'bin' sentinel
-        when(element_at(split(col("path"), "/"), -1).contains(".") &&
-            length(element_at(
-              split(element_at(split(col("path"), "/"), -1), "\\."), -1)) > 0,
-          lower(element_at(
-            split(element_at(split(col("path"), "/"), -1), "\\."), -1)))
-          .otherwise(lit("bin")).as("format"),
-        lit(0).as("width"), lit(0).as("height"),
-        lit(0).as("sample_rate"),
-        col("content").as("data"),
-        col("path"), col("length"))
-
   /** STUB resize: nearest-neighbor byte sampling to a fixed `outLen`
     * output (a real deployment decodes pixels and resizes; the
     * deterministic byte-level fake keeps the pipeline shape — fixed-
@@ -412,45 +186,6 @@ object MultimodalOps {
           (acc, b) => concat(acc, b))
       }),
       1)
-
-  /** REAL image resize: decode via `javax.imageio`, scale with
-    * bilinear `Graphics2D` interpolation, re-encode as PNG. Same
-    * per-partition imperative shape as [[extractFeatures]] — decode
-    * work stays on the executor that holds the payload, no shuffle,
-    * and one malformed file drops its row instead of killing the job
-    * (the 100 TB untrusted-payload contract). Non-image and
-    * undecodable payloads are filtered out; use [[resizeStub]] when a
-    * fixed-size byte column for EVERY row is required. */
-  def resizeImage(media: Dataset[MediaPayload], outW: Int, outH: Int)
-      : Dataset[ResizedMedia] = {
-    require(outW > 0 && outH > 0, s"bad output size ${outW}x$outH")
-    import media.sparkSession.implicits._
-    media.mapPartitions { batch =>
-      javax.imageio.ImageIO.setUseCache(false)
-      batch.flatMap { p =>
-        if (!looksLikeImage(p.data)) None
-        else try {
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(p.data))
-          if (img == null || img.getWidth <= 0 || img.getHeight <= 0) None
-          else {
-            val dst = new java.awt.image.BufferedImage(outW, outH,
-              java.awt.image.BufferedImage.TYPE_INT_RGB)
-            val g = dst.createGraphics()
-            g.setRenderingHint(
-              java.awt.RenderingHints.KEY_INTERPOLATION,
-              java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-            g.drawImage(img, 0, 0, outW, outH, null)
-            g.dispose()
-            val out = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(dst, "png", out)
-            Some(ResizedMedia(p.media_id, p.format,
-              img.getWidth, img.getHeight, outW, outH, out.toByteArray))
-          }
-        } catch { case scala.util.control.NonFatal(_) => None }
-      }
-    }
-  }
 
   /** Frame sampling for "video" payloads: slice the byte stream into
     * fixed-size frames with a stride, keeping frame index — pure column

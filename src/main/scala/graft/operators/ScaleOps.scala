@@ -1,26 +1,24 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale-out building blocks that don't change query semantics, only
   * physical shape — the techniques a 100 TB deployment leans on:
   *
-  *  - **Bucketed co-located joins**: persist both join sides bucketed
-  *    (and sorted) on the join key; a later sort-merge join then reads
-  *    matching buckets directly with NO shuffle exchange on either
-  *    side. For fact-fact joins (lineitem x orders at 100 TB) this
-  *    converts every downstream join on the key from a full-data
-  *    shuffle into a local merge.
-  *  - **Salted aggregation**: for power-law keys where one group would
-  *    hot-spot a single reducer, split each key into `nSalts`
-  *    sub-groups for the partial aggregate and re-combine in a second
-  *    (tiny) aggregate. Works for any algebraic aggregate.
+  *  - **Bucketed tables**: persist a relation bucketed (and sorted) on
+  *    its join key; a later sort-merge join on that key reads matching
+  *    buckets directly with NO shuffle exchange on the bucketed side.
+  *  - **Bloom-pruned joins**: prune the big side of a selective
+  *    equi-join before its shuffle, with a deterministic md5 bitset or
+  *    Spark's own bloom aggregate.
+  *  - **Z-order keys**: a Morton key whose sort order keeps file
+  *    min/max statistics tight in every interleaved dimension.
+  *  - **Incremental maintenance**: snapshot diffs, compaction plans
+  *    and mergeable partial aggregate states.
   *
   * AQE (`spark.sql.adaptive.enabled`, on in this engine's sessions)
-  * handles moderate skew automatically via skew-join splitting; the
-  * explicit salt is for the extreme tail where even one partition of
-  * one key overflows an executor.
+  * handles moderate skew automatically via skew-join splitting.
   */
 object ScaleOps {
 
@@ -44,31 +42,6 @@ object ScaleOps {
       .sortBy(key)
       .format("parquet")
       .saveAsTable(table)
-  }
-
-  /** Join two bucketed tables on their bucket key — with matching
-    * bucket counts the planner elides both shuffle exchanges.
-    * Table-qualified keys, so identically named key columns (the
-    * common case) don't raise an ambiguous-reference error. */
-  def bucketedJoin(spark: SparkSession, left: String, right: String,
-                   leftKey: String, rightKey: String): DataFrame = {
-    val l = spark.table(left).alias("__bl")
-    val r = spark.table(right).alias("__br")
-    l.join(r, col(s"__bl.$leftKey") === col(s"__br.$rightKey"))
-  }
-
-  /** Salted sum: algebraically identical to
-    * `df.groupBy(key).agg(sum(valueCol))` but the first (heavy)
-    * aggregation fans each key out over `nSalts` sub-keys. */
-  def saltedSum(df: DataFrame, key: String, valueCol: String,
-                nSalts: Int = 16): DataFrame = {
-    val salted = df.withColumn("__salt",
-      pmod(xxhash64(monotonically_increasing_id()), lit(nSalts.toLong)))
-    salted
-      .groupBy(col(key), col("__salt"))
-      .agg(sum(col(valueCol)).as("__partial"))
-      .groupBy(col(key))
-      .agg(sum(col("__partial")).as(s"sum_$valueCol"))
   }
 
   /** Deterministic bloom-filter bitset over the DISTINCT values of
@@ -185,35 +158,6 @@ object ScaleOps {
     big.filter(probe).join(small, col(bigKey) === col(smallKey))
   }
 
-  /** Salted skew JOIN: an inner equi-join where a few hot keys would
-    * overflow their shuffle partition (one key's rows all hash to one
-    * reducer — the classic 100 TB fact-join stall). Each big-side row
-    * draws a deterministic-per-row salt in [0, nSalts); the small
-    * side replicates nSalts times; the join runs on (key, salt), so a
-    * hot key's rows spread over nSalts partitions. Result is
-    * multiset-identical to `big.join(small, bigKey === smallKey)` —
-    * every big row still meets every matching small row exactly once
-    * (its salt replica). Cost: the small side shuffles nSalts times
-    * larger — use for genuinely small-but-unbroadcastable sides, and
-    * prefer AQE skew splitting when its thresholds catch the skew. */
-  def saltedJoin(big: DataFrame, small: DataFrame,
-                 bigKey: String, smallKey: String,
-                 nSalts: Int = 16): DataFrame = {
-    require(nSalts > 0, s"nSalts must be positive, got $nSalts")
-    val bcols = big.columns
-    require(!bcols.contains("__salt") && !small.columns.contains("__salt"),
-      "input already has a __salt column")
-    val salted = big.withColumn("__salt",
-      pmod(xxhash64(monotonically_increasing_id()), lit(nSalts.toLong))
-        .cast("int"))
-    val repl = small.withColumn("__salt",
-      explode(sequence(lit(0), lit(nSalts - 1))))
-    salted.join(repl,
-        salted(bigKey) === repl(smallKey) &&
-          salted("__salt") === repl("__salt"))
-      .drop("__salt")
-  }
-
   /** Z-order (Morton) clustering key: quantize each column to `bits`
     * bits by scaling its [min, max] range onto [0, 2^bits), then
     * bit-interleave the cells (dim 0 owns bit positions 0, D, 2D, …).
@@ -254,40 +198,6 @@ object ScaleOps {
         shiftleft(shiftright(cell, i).bitwiseAND(lit(1L)), i * d + dim)
       }
     }.reduce(_ bitwiseOR _)
-  }
-
-  /** Write `df` Z-order-clustered: range-partition on [[zorderKey]]
-    * into `numFiles` files and sort each file by the key, so every
-    * file covers a compact hyper-rectangle of the interleaved
-    * dimensions and parquet min/max column stats prune scans on ANY
-    * of them. The key column is dropped before the write — skipping
-    * works off the ORIGINAL columns' chunk stats, which is the point.
-    * `repartitionByRange` samples the key to place balanced split
-    * points (a skewed key distribution still yields even files), and
-    * the sort composes with it per-partition — one shuffle total. */
-  def writeZOrdered(df: DataFrame, cols: Seq[String],
-                    ranges: Seq[(Long, Long)], bits: Int, path: String,
-                    numFiles: Int = 64): Unit = {
-    require(!df.columns.contains("__zkey"),
-      "input must not already contain a __zkey column")
-    df.withColumn("__zkey", zorderKey(cols.map(col), ranges, bits))
-      .repartitionByRange(numFiles, col("__zkey"))
-      .sortWithinPartitions("__zkey")
-      .drop("__zkey")
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Salted count + mean (count-weighted recombination). */
-  def saltedAvg(df: DataFrame, key: String, valueCol: String,
-                nSalts: Int = 16): DataFrame = {
-    val salted = df.withColumn("__salt",
-      pmod(xxhash64(monotonically_increasing_id()), lit(nSalts.toLong)))
-    salted
-      .groupBy(col(key), col("__salt"))
-      .agg(sum(col(valueCol)).as("__s"), count(lit(1)).as("__n"))
-      .groupBy(col(key))
-      .agg((sum(col("__s")) / sum(col("__n"))).as(s"avg_$valueCol"),
-        sum(col("__n")).as("n"))
   }
 
   /** CDC-style snapshot diff: classify every key across two corpus

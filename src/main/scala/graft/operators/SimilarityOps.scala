@@ -749,6 +749,18 @@ object SimilarityOps {
       .select(col("id"), col("cid"))
   }
 
+  /** (id, band, bucket) banded hyperplane signatures — the shared
+    * candidate-generation projection behind [[cosineNearDupPairs]] and
+    * [[knnGraph]]. */
+  private def bandedSignatures(base: DataFrame, bands: Int,
+                               planesPerBand: Int, dims: Int): DataFrame =
+    base.select(col("id"),
+        posexplode(array((0 until bands).map(b =>
+          hyperplaneBucket(col("v"), planesPerBand, dims,
+            planeOffset = b * planesPerBand)): _*)))
+      .withColumnRenamed("pos", "band")
+      .withColumnRenamed("col", "bucket")
+
   /** Embedding-cosine near-duplicate PAIRS: banded random-hyperplane
     * LSH — `bands` independent signatures of `planesPerBand` sign bits
     * each; a pair is a candidate if it collides in ANY band — then an
@@ -763,39 +775,6 @@ object SimilarityOps {
     * bound, and pairs are dedup'd across bands BEFORE the vector
     * verify join — only surviving candidates ever touch a second
     * embedding read. */
-  /** (id, band, bucket) banded hyperplane signatures — the shared
-    * candidate-generation projection behind [[cosineNearDupPairs]] and
-    * [[oversizedBuckets]]. */
-  private def bandedSignatures(base: DataFrame, bands: Int,
-                               planesPerBand: Int, dims: Int): DataFrame =
-    base.select(col("id"),
-        posexplode(array((0 until bands).map(b =>
-          hyperplaneBucket(col("v"), planesPerBand, dims,
-            planeOffset = b * planesPerBand)): _*)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bucket")
-
-  /** The recall-loss ledger for the `maxBucketSize` hub cap in
-    * [[cosineNearDupPairs]] / [[DedupOps.embeddingNearDup]]: one row
-    * per (band, bucket) whose population exceeds the cap — i.e. the
-    * buckets whose pairs were NOT emitted. An empty result certifies
-    * zero candidates were dropped; a non-empty one quantifies exactly
-    * how many vectors sat in skipped hub buckets (the signal that
-    * `planesPerBand` is too small for the corpus). Same single
-    * signature scan + partial-aggregated count as the main path —
-    * cheap enough to run alongside any dedup job as a data-quality
-    * metric. */
-  def oversizedBuckets(df: DataFrame, idCol: String, vecCol: String,
-                       bands: Int = 4, planesPerBand: Int = 8,
-                       dims: Int = 64, maxBucketSize: Int = 1000)
-      : DataFrame = {
-    val base = withNorm(df, idCol, vecCol, "id", "v", "nm")
-    bandedSignatures(base, bands, planesPerBand, dims)
-      .groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("bucket_size"))
-      .filter(col("bucket_size") > maxBucketSize)
-  }
-
   def cosineNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                          threshold: Double, bands: Int = 4,
                          planesPerBand: Int = 8, dims: Int = 64,

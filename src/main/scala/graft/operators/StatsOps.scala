@@ -116,8 +116,7 @@ object StatsOps {
     import org.apache.spark.sql.expressions.Window
     require(0.0 <= qLo && qLo <= qHi && qHi <= 1.0, s"bad bounds $qLo $qHi")
     // internal working columns — reject the inputs that actually
-    // collide (same contract style as ShardedCorpusWriter's reserved
-    // 'shard' column): w_lo/w_hi anywhere in the input makes the
+    // collide: w_lo/w_hi anywhere in the input makes the
     // bounds join ambiguous; v/rk/n as KEY columns collide with the
     // ranking projection's aliases (as the value column they are
     // harmless — the value is renamed to v anyway)
@@ -227,18 +226,15 @@ object StatsOps {
     * 2^(33-p)), est_raw, est (corrected).
     *
     * Composition: [[hllRegisters]] (the mergeable state) →
-    * [[hllMergeRegisters]] (fold corpora / micro-batches) →
-    * [[hllEstimate]]. This function is the one-shot pipeline. */
+    * [[hllEstimate]]. */
   def hllDistinct(df: DataFrame, keyCol: String, valueCol: String,
                   p: Int = 8, salt: String = "hll"): DataFrame =
     hllEstimate(hllRegisters(df, keyCol, valueCol, p, salt), keyCol, p)
 
   /** The HLL register table for a batch of rows: (key, register j,
-    * max rank r) — the MERGEABLE sketch state. Persist this (a few
-    * hundred rows per key) and fold new corpora / streaming
-    * micro-batches in with [[hllMergeRegisters]]; old data is never
-    * rescanned — the incremental-maintenance contract of
-    * [[graft.sources.IvfVectorStore]], at sketch size. */
+    * max rank r) — the mergeable sketch state (a few hundred rows per
+    * key; the union of two tables is the element-wise max of `__r`
+    * per (key, j)). */
   def hllRegisters(df: DataFrame, keyCol: String, valueCol: String,
                    p: Int = 8, salt: String = "hll"): DataFrame = {
     require(p >= 4 && p <= 16, s"p must be in [4,16], got $p")
@@ -254,12 +250,6 @@ object StatsOps {
       .groupBy(col("__k"), col("__j"))
       .agg(max(col("__rho")).as("__r"))
   }
-
-  /** Element-wise max of register tables — HLL union. Both inputs
-    * must come from [[hllRegisters]] with the same p and salt. */
-  def hllMergeRegisters(a: DataFrame, b: DataFrame): DataFrame =
-    a.union(b).groupBy(col("__k"), col("__j"))
-      .agg(max(col("__r")).as("__r"))
 
   /** Pairwise set-OVERLAP estimation across keys by inclusion-
     * exclusion on HLL sketches: |A ∩ B| ≈ est(A) + est(B) -
@@ -428,11 +418,6 @@ object StatsOps {
       .withColumn("__b", expr(s"(__v - ${lo}L) DIV ${width}L"))
       .groupBy(col("__k"), col("__b")).agg(count(lit(1)).as("__c"))
   }
-
-  /** Merge two [[ksBinCounts]] tables (same lo/width) by summation. */
-  def ksMergeBinCounts(a: DataFrame, b: DataFrame): DataFrame =
-    a.union(b).groupBy(col("__k"), col("__b"))
-      .agg(sum(col("__c")).as("__c"))
 
   /** The KS statistic from a bin-count table — see [[ksDrift]] for
     * the exactness contract. */

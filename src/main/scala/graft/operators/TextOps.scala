@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   *
   * Determinism note: fingerprints use md5 (identical across engines)
   * rather than xxhash64 so results are oracle-checkable; use
-  * [[simhash64]] (xxhash64-based) where raw speed matters more than
-  * cross-engine parity.
+  * [[DedupOps.simhashSignatures]] (xxhash64-based) where raw speed
+  * matters more than cross-engine parity.
   */
 object TextOps {
 
@@ -139,46 +139,11 @@ object TextOps {
 
   /** k-element MinHash signature as an array column (md5-per-seed:
     * cross-engine deterministic but k md5 calls per shingle — use for
-    * oracle-checkable fingerprints; [[minhashFromBase]] is the
-    * one-hash-per-shingle family for LSH pipelines). */
+    * oracle-checkable fingerprints; [[DedupOps.minhashLshDedup]] hashes
+    * each shingle once and derives its k values from an affine
+    * family). */
   def minhashSignature(shingles: Column, k: Int): Column =
     array((0 until k).map(i => minhash(shingles, i)): _*)
-
-  /** Affine minhash family over an already-hashed shingle array.
-    * IMPORTANT for performance: materialize `base` as its own column
-    * before calling this — the k array passes each reference it, and
-    * Spark re-evaluates nested lambda expressions per reference. */
-  def minhashFromBase(base: Column, k: Int, p: Long): Column =
-    array((0 until k).map { i =>
-      val a = 2 * i + 1
-      val b = 1_000_003L * (i + 1)
-      array_min(transform(base, h => pmod(h * a + b, lit(p))))
-    }: _*)
-
-  /** 64-bit SimHash over tokens using xxhash64 bits: each token votes
-    * +1/-1 per bit; the sign of each bit-sum forms the fingerprint.
-    * Fast path (single hash per token, bit ops only) — not designed for
-    * cross-engine oracle parity. */
-  def simhash64(text: Column): Column = {
-    val toks = tokens(text)
-    val hashed = transform(toks, t => xxhash64(t))
-    def shr(v: Column, bits: Column): Column =
-      call_function("shiftright", v, bits)
-    def shl(v: Column, bits: Column): Column =
-      call_function("shiftleft", v, bits)
-    // fold bit votes: acc is array(64) of int votes
-    val votes = aggregate(
-      hashed,
-      array_repeat(lit(0), 64),
-      (acc, h) => zip_with(acc, sequence(lit(0), lit(63)),
-        (a, bit) => a + when(shr(h, bit).bitwiseAND(1) === 1, 1)
-          .otherwise(-1)))
-    // assemble sign bits into a long
-    aggregate(
-      zip_with(votes, sequence(lit(0), lit(63)),
-        (v, bit) => when(v > 0, shl(lit(1L), bit)).otherwise(0L)),
-      lit(0L), (acc, b) => acc.bitwiseOR(b))
-  }
 
   /** Per-document Shannon entropy of the character distribution, in
     * nats — the cheap gibberish/boilerplate screen (natural text sits

@@ -35,12 +35,11 @@ final case class DeviceState(
   * Euler + linear acceleration (M10/M12) -> noise crush (F5) -> 3 PIDs
   * (T2) -> corner transform + clamp (T4).
   *
-  * Batch replay uses repartition-by-key + sortWithinPartitions +
-  * mapPartitions: each device's samples are contiguous and ordered, so
-  * one sequential scan per device, devices parallelized across
-  * partitions — the pattern that holds at fleet scale (SURVEY §7.5.4).
-  * Streaming uses flatMapGroupsWithState with an in-batch sort, giving
-  * identical results when replaying the same data.
+  * Batch replay groups by device and sorts each group by sample
+  * index, so one sequential scan per device, devices parallelized
+  * across tasks — the pattern that holds at fleet scale (SURVEY
+  * §7.5.4). Streaming uses flatMapGroupsWithState with an in-batch
+  * sort, giving identical results when replaying the same data.
   */
 object ControlPipeline {
 
@@ -125,8 +124,9 @@ object ControlPipeline {
     }
   }
 
-  /** Sequential reference run (used by tests and by single-device
-    * tools): identical transition function, no Spark. */
+  /** Sequential run of one device's samples, in the order given, from
+    * the initial state: the body of [[replayBatch]], and the reference
+    * the streaming replay is checked against. */
   def runSequential(cfg: Config, samples: Iterator[RawImuSample])
       : Iterator[ControlOutput] = {
     var st = initialState(cfg)
@@ -152,29 +152,14 @@ object ControlPipeline {
     (st, outs)
   }
 
-  /** Batch replay: partition by device, sort within partitions, one
-    * sequential scan per partition. Requires each device's samples to
-    * be wholly within one partition (repartition on the key guarantees
-    * this); state is re-created at each device boundary. */
+  /** Batch replay: each device's samples grouped and sorted by
+    * sample index, then one [[runSequential]] per device from a fresh
+    * state. */
   def replayBatch(raw: Dataset[RawImuSample], cfg: Config)
       : Dataset[ControlOutput] = {
     import raw.sparkSession.implicits._
-    raw
-      .repartition(col("device_id"))
-      .sortWithinPartitions(col("device_id"), col("sample_idx"))
-      .mapPartitions { it =>
-        var currentDevice: String = null
-        var st: DeviceState = null
-        it.flatMap { s =>
-          if (s.device_id != currentDevice) {
-            currentDevice = s.device_id
-            st = initialState(cfg)
-          }
-          val (next, out) = step(cfg, st, s)
-          st = next
-          out
-        }
-      }
+    raw.groupByKey(_.device_id)
+      .flatMapSortedGroups(col("sample_idx"))((_, it) => runSequential(cfg, it))
   }
 
   /** Streaming replay: keyed state via flatMapGroupsWithState. Each

@@ -533,9 +533,9 @@ object NorthStar {
       .ordered(col("user_id"))
   }
 
-  // q63 — end-to-end corpus dedup (the md5-parity composition of
-  // DedupOps.dedupCorpus): verified near-dup pairs -> connected
-  // components -> survivors (cluster minimum) + unpaired docs.
+  // q63 — end-to-end corpus dedup (md5-parity LSH): verified near-dup
+  // pairs -> connected components -> survivors (cluster minimum) +
+  // unpaired docs.
   private val q63: Q = (s, dir) => {
     val d = t(s, dir, "documents").filter(col("doc_id") < 250)
     val pairs = DedupOps.minhashLshDedupParity(d, "doc_id", "text",
@@ -982,7 +982,7 @@ object NorthStar {
   // quantizer — which is exactly what the oracle replays.
   private val q102: Q = (s, dir) => {
     val emb = t(s, dir, "embeddings")
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft-ivf-q102"
+    val path = tmpStorePath("graft-ivf-q102", dir)
     IvfVectorStore.write(s, emb.filter(col("vec_id") < 400),
       "vec_id", "embedding", nCentroids = 16, path)
     IvfVectorStore.append(s, emb.filter(col("vec_id") >= 400),
@@ -2437,7 +2437,7 @@ object NorthStar {
   // what the oracle replays.
   private val q193: Q = (s, dir) => {
     val d = t(s, dir, "documents")
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft-inv-q193"
+    val path = tmpStorePath("graft-inv-q193", dir)
     InvertedIndexStore.write(s, d.filter(col("doc_id") < 400),
       "doc_id", "text", nShards = 16, path)
     InvertedIndexStore.append(s, d.filter(col("doc_id") >= 400),
@@ -2910,8 +2910,8 @@ object NorthStar {
 
   // q223 — shuffle-skew advisor: top-20 heaviest lineitem part keys
   // with task share at 32 partitions and the salt factor a salted
-  // repartition would need (ScaleOps.saltedJoin's parameter) — the
-  // diagnosis half of the salting machinery, as data.
+  // repartition would need — the diagnosis half of skew salting, as
+  // data.
   private val q223: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val counts = t(s, dir, "lineitem").groupBy(col("l_partkey"))
@@ -3125,7 +3125,7 @@ object NorthStar {
   // state directly from the version rules.
   private val q233: Q = (s, dir) => {
     import graft.sources.MergeOnReadStore
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft-mor-q233"
+    val path = tmpStorePath("graft-mor-q233", dir)
     val o = t(s, dir, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"))
     MergeOnReadStore.writeBase(o, path)
@@ -7879,10 +7879,8 @@ object NorthStar {
     * ensure() returns the committed version dir (the cross-process
     * versioned-commit protocol), which is what readers consume. */
   private[queries] def sharedNdgStore(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map(b => f"$b%02x").mkString
     val path =
-      s"${System.getProperty("java.io.tmpdir")}/graft-ndg-shared-$key"
+      s"${System.getProperty("java.io.tmpdir")}/graft-ndg-shared-${corpusKey(dir)}"
     NearDupGraphStore.ensure(s, t(s, dir, "documents"), "doc_id",
       "text", n = 3, baseT = 0.3, componentThresholds = Seq(0.4), path)
   }
@@ -7922,7 +7920,7 @@ object NorthStar {
   // is q368's one-shot full-corpus derivation, so a green row proves
   // write+append converges to the rebuild graph.
   private val q383: Q = (s, dir) => {
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft-ndg-q383"
+    val path = tmpStorePath("graft-ndg-q383", dir)
     val docs = t(s, dir, "documents")
     // the write-phase component rebuild is discarded work here: append
     // recomputes labels from the FULL merged pair graph and rewrites
@@ -10834,7 +10832,7 @@ object NorthStar {
 
   /** q116 oracle: same pair derivation (doc_id < 500), wedge-join
     * triangle enumeration, cc = 2*tri/(deg*(deg-1)) mirroring
-    * GraphOps.triangleStats exactly. */
+    * GraphOps.triangleStatsBucketed exactly. */
   private val q116Sql: String =
     """WITH d AS (
       |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS toks

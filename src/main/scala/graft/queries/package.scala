@@ -29,14 +29,29 @@ package object queries {
   /** Exact event-value cents (the house integer pin for `value`). */
   private[queries] def cents: Column = expr("CAST(ROUND(value * 100) AS BIGINT)")
 
-  /** Corpus-keyed tmp store path (the sharedNdgStore keying idiom):
-    * two runs against different scale factors — or Verify concurrent
-    * with Bench — must never interleave write/append/compact on the
-    * same store directory. */
-  private[queries] def tmpStorePath(tag: String, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
+  /** First 8 hex digits of md5(corpus dir): keys a store path by
+    * corpus, so runs against different scale factors never share a
+    * store. */
+  private[queries] def corpusKey(dir: String): String =
+    java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(4).map(b => f"$b%02x").mkString
-    s"${System.getProperty("java.io.tmpdir")}/$tag-$key"
+
+  private val scratchStores =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Scratch store path for a query that writes, appends to or
+    * compacts its own store: keyed by corpus AND by process id, so
+    * two runs — on different scale factors, or side by side on the
+    * same corpus — never interleave on one directory. The directory
+    * is deleted when the JVM exits. */
+  private[queries] def tmpStorePath(tag: String, dir: String): String = {
+    val pid = ProcessHandle.current().pid()
+    val path =
+      s"${System.getProperty("java.io.tmpdir")}/$tag-${corpusKey(dir)}-$pid"
+    if (scratchStores.add(path))
+      sys.addShutdownHook(
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path)))
+    path
   }
 
   /** Total ordering for a BOUNDED final result (every oracle query's

@@ -2,9 +2,7 @@ package graft
 
 import java.awt.image.BufferedImage
 import java.io.ByteArrayOutputStream
-import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{MediaPayload, MultimodalOps}
@@ -83,51 +81,6 @@ class MultimodalDecodeSpec extends AnyFunSuite with SparkTestBase {
     assert(f.width == 0 && f.height == 0)
   }
 
-  test("resizeImage: real pixel resize — dimensions, quadrant colors, " +
-      "upscale, and corrupt-payload drop") {
-    import spark.implicits._
-    // 16x16 solid quadrants: red | green / blue | white
-    val quad = new BufferedImage(16, 16, BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 16; x <- 0 until 16)
-      quad.setRGB(x, y, (x < 8, y < 8) match {
-        case (true, true)  => 0xff0000
-        case (false, true) => 0x00ff00
-        case (true, false) => 0x0000ff
-        case (false, false) => 0xffffff
-      })
-    val junk = Array[Byte](0x89.toByte, 'P', 'N', 'G', 13, 10, 26, 10, 9)
-    val media = Seq(
-      MediaPayload(1L, "img", 0, 0, 0, pngBytes(quad)),
-      MediaPayload(2L, "img", 0, 0, 0, junk),
-      MediaPayload(3L, "txt", 0, 0, 0, "not an image".getBytes("UTF-8"))
-    ).toDS()
-    val got = MultimodalOps.resizeImage(media, 8, 8).collect()
-    // undecodable and non-image rows drop; the good row survives
-    assert(got.map(_.media_id).toSeq == Seq(1L))
-    val r = got.head
-    assert(r.src_width == 16 && r.src_height == 16)
-    assert(r.width == 8 && r.height == 8)
-    val back = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(r.png))
-    assert(back.getWidth == 8 && back.getHeight == 8)
-    // interior points of each quadrant keep their solid color exactly
-    // (bilinear interpolation only blends at quadrant boundaries)
-    assert((back.getRGB(1, 1) & 0xffffff) == 0xff0000)
-    assert((back.getRGB(6, 1) & 0xffffff) == 0x00ff00)
-    assert((back.getRGB(1, 6) & 0xffffff) == 0x0000ff)
-    assert((back.getRGB(6, 6) & 0xffffff) == 0xffffff)
-    // upscale path: 4x4 solid -> 32x32, still solid everywhere
-    val solid = new BufferedImage(4, 4, BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 4; x <- 0 until 4) solid.setRGB(x, y, 0x123456)
-    val up = MultimodalOps.resizeImage(
-      Seq(MediaPayload(5L, "img", 0, 0, 0, pngBytes(solid))).toDS(),
-      32, 32).collect().head
-    val upImg = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(up.png))
-    assert(upImg.getWidth == 32)
-    assert((upImg.getRGB(16, 16) & 0xffffff) == 0x123456)
-  }
-
   test("looksLikeImage sniffs magic bytes, not extensions") {
     assert(MultimodalOps.looksLikeImage(pngBytes(halfAndHalf())))
     assert(!MultimodalOps.looksLikeImage("plain text".getBytes("UTF-8")))
@@ -139,166 +92,5 @@ class MultimodalDecodeSpec extends AnyFunSuite with SparkTestBase {
     val out = new ByteArrayOutputStream()
     javax.imageio.ImageIO.write(halfAndHalf(), "bmp", out)
     assert(MultimodalOps.looksLikeImage(out.toByteArray))
-  }
-
-  /** Minimal PCM WAV writer: RIFF/fmt/data with 16-bit LE or 8-bit
-    * samples — independent of the decoder's own chunk walk. */
-  private def wavBytes(rate: Int, channels: Int, bits: Int,
-                       samples: Seq[Int]): Array[Byte] = {
-    val bytesPer = bits / 8
-    val dataLen = samples.length * bytesPer
-    val bb = java.nio.ByteBuffer.allocate(44 + dataLen)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-      .put("WAVE".getBytes("US-ASCII"))
-    bb.put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1).putShort(channels.toShort).putInt(rate)
-      .putInt(rate * channels * bytesPer)
-      .putShort((channels * bytesPer).toShort).putShort(bits.toShort)
-    bb.put("data".getBytes("US-ASCII")).putInt(dataLen)
-    samples.foreach { s =>
-      if (bits == 16) bb.putShort(s.toShort)
-      else bb.put(((s + 128) & 0xff).toByte)
-    }
-    bb.array()
-  }
-
-  test("PCM WAV decodes: header facts and exact-integer RMS") {
-    val samples = Seq(0, 1000, -1000, 2000, -2000, 0, 500, -500)
-    val bytes = wavBytes(16000, 1, 16, samples)
-    val Some((rate, ch, bits, n, rms)) = MultimodalOps.decodeWav(bytes)
-    assert(rate == 16000 && ch == 1 && bits == 16 && n == 8)
-    val expect = math.sqrt(
-      samples.map(s => s.toLong * s).sum.toDouble / samples.length)
-    assert(rms == expect)
-    // 8-bit path: values centered at -128
-    val b8 = wavBytes(8000, 2, 8, Seq(0, 127, -128, 64))
-    val Some((r8, c8, bb8, n8, rms8)) = MultimodalOps.decodeWav(b8)
-    assert(r8 == 8000 && c8 == 2 && bb8 == 8 && n8 == 4)
-    assert(rms8 == math.sqrt((0L + 127 * 127 + 128 * 128 + 64 * 64) / 4.0))
-  }
-
-  test("WAV decode clips truncated data and rejects non-PCM") {
-    val full = wavBytes(16000, 1, 16, Seq(100, 200, 300, 400))
-    val truncated = full.take(full.length - 4) // lose 2 samples
-    val Some((_, _, _, n, _)) = MultimodalOps.decodeWav(truncated)
-    assert(n == 2, "truncated data chunk must clip, not fail")
-    // float PCM (format 3) is not decodable here
-    val nonPcm = full.clone()
-    nonPcm(20) = 3 // audioFormat LE low byte
-    assert(MultimodalOps.decodeWav(nonPcm).isEmpty)
-    assert(MultimodalOps.decodeWav("RIFFxxxxWAVE".getBytes).isEmpty)
-    assert(MultimodalOps.decodeWav("not audio at all".getBytes).isEmpty)
-  }
-
-  test("audioWindows: per-window RMS, zero crossings, and peak on a " +
-      "known square wave; stereo channel-0 ZCR; non-WAV emits no rows") {
-    import spark.implicits._
-    // 16 frames: window 0 silent, window 1 a +/-1000 square wave of
-    // period 2 (sign flips between every consecutive frame: 7 flips)
-    val mono = Seq.fill(8)(0) ++
-      (0 until 8).map(i => if (i % 2 == 0) 1000 else -1000)
-    val media = Seq(
-      MediaPayload(1L, "wav", 0, 0, 0, wavBytes(16000, 1, 16, mono)),
-      MediaPayload(2L, "txt", 0, 0, 0, "nope".getBytes("UTF-8"))).toDS()
-    val got = MultimodalOps.audioWindows(media, windowFrames = 8)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2),
-        r.getDouble(3), r.getInt(4), r.getInt(5))).sortBy(x => (x._1, x._2))
-    assert(got.length == 2, "non-WAV payload must emit no rows")
-    assert(got(0) == ((1L, 0, 8, 0.0, 0, 0)))
-    val (_, w1, n1, rms1, zc1, pk1) = got(1)
-    assert(w1 == 1 && n1 == 8)
-    assert(rms1 == 1000.0) // constant-magnitude wave: RMS exact
-    assert(zc1 == 7 && pk1 == 1000)
-    // stereo: ZCR counts channel 0 only; RMS covers both channels.
-    // ch0 alternates +/-500 (3 flips in 4 frames); ch1 constant 100.
-    val stereo = (0 until 4).flatMap(i =>
-      Seq(if (i % 2 == 0) 500 else -500, 100))
-    val sRows = MultimodalOps.audioWindows(
-      Seq(MediaPayload(3L, "wav", 0, 0, 0,
-        wavBytes(8000, 2, 16, stereo))).toDS(), windowFrames = 4)
-      .collect()
-    assert(sRows.length == 1)
-    val r = sRows.head
-    assert(r.getInt(2) == 4 && r.getInt(4) == 3 && r.getInt(5) == 500)
-    assert(math.abs(r.getDouble(3) -
-      math.sqrt((4 * 500L * 500 + 4 * 100L * 100).toDouble / 8)) < 1e-12)
-    // ragged tail: 10 frames at window 8 -> windows of 8 and 2
-    val tail = MultimodalOps.audioWindows(
-      Seq(MediaPayload(4L, "wav", 0, 0, 0,
-        wavBytes(8000, 1, 16, Seq.fill(10)(7)))).toDS(), windowFrames = 8)
-      .collect().map(r => (r.getInt(1), r.getInt(2))).sorted
-    assert(tail.toSeq == Seq((0, 8), (1, 2)))
-  }
-
-  test("audioFeatures: real WAV decode with byte-stat fallback") {
-    import spark.implicits._
-    val media = Seq(
-      MediaPayload(1L, "audio", 0, 0, 0,
-        wavBytes(22050, 2, 16, Seq(10, -10, 20, -20))),
-      MediaPayload(2L, "audio", 0, 0, 0, "mp3-ish junk".getBytes)).toDS()
-    val rows = MultimodalOps.audioFeatures(media)
-      .orderBy("media_id").collect()
-    assert(rows(0).getBoolean(2) && rows(0).getInt(3) == 22050 &&
-      rows(0).getInt(4) == 2 && rows(0).getLong(6) == 4)
-    assert(!rows(1).getBoolean(2) && rows(1).getInt(3) == 0)
-  }
-
-  test("perceptual hash: stable under small noise, far for distinct " +
-      "images, and pairs via fingerprintNearDup") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(3)
-    def noisyRamp(noise: Int): BufferedImage = {
-      val img = new BufferedImage(32, 32, BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until 32; x <- 0 until 32) {
-        val v = math.min(255, math.max(0,
-          x * 8 + (if (noise > 0) rnd.nextInt(2 * noise) - noise else 0)))
-        img.setRGB(x, y, (v << 16) | (v << 8) | v)
-      }
-      img
-    }
-    def checker(): BufferedImage = {
-      val img = new BufferedImage(32, 32, BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until 32; x <- 0 until 32)
-        img.setRGB(x, y, if ((x / 4 + y / 4) % 2 == 0) 0xffffff else 0)
-      img
-    }
-    val media = Seq(
-      MediaPayload(1L, "img", 0, 0, 0, pngBytes(noisyRamp(0))),
-      MediaPayload(2L, "img", 0, 0, 0, pngBytes(noisyRamp(6))),
-      MediaPayload(3L, "img", 0, 0, 0, pngBytes(checker()))).toDS()
-    val hashed = MultimodalOps.extractFeatures(media).toDF()
-      .select(col("media_id"),
-        MultimodalOps.perceptualHash64(col("thumbnail")).as("ph"))
-    val hs = hashed.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    def hamming(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
-    assert(hamming(hs(1L), hs(2L)) <= 8,
-      s"noisy twin too far: ${hamming(hs(1L), hs(2L))}")
-    assert(hamming(hs(1L), hs(3L)) > 12,
-      s"distinct images too close: ${hamming(hs(1L), hs(3L))}")
-    // determinism across evaluation paths
-    val again = MultimodalOps.extractFeatures(media).toDF()
-      .select(col("media_id"),
-        MultimodalOps.perceptualHash64(col("thumbnail")).as("ph"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(hs == again)
-    // band+verify composition surfaces exactly the near pair
-    val pairs = graft.operators.DedupOps.fingerprintNearDup(
-        hashed, "media_id", "ph", maxHamming = 8)
-      .select("id1", "id2").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((1L, 2L)))
-    assert(!pairs.contains((1L, 3L)) && !pairs.contains((2L, 3L)))
-  }
-
-  test("ingestBinaryDir takes format from the basename with sentinel") {
-    // dotted parent dir must not leak into format (ADVICE r2)
-    val root = Files.createTempDirectory("graft_media").resolve("v1.2")
-    Files.createDirectories(root)
-    Files.write(root.resolve("cat.PNG"), pngBytes(halfAndHalf()))
-    Files.write(root.resolve("readme"), "no extension".getBytes("UTF-8"))
-    val rows = MultimodalOps.ingestBinaryDir(spark, root.toString)
-      .select("format").collect().map(_.getString(0)).sorted.toSeq
-    assert(rows == Seq("bin", "png"))
   }
 }

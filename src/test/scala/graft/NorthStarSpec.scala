@@ -37,7 +37,7 @@ class NorthStarSpec extends AnyFunSuite with SparkTestBase {
     val b = a + " tail" // one extra token
     val c = "entirely different vocabulary with zero overlap whatsoever here"
     val df = Seq((1L, a), (2L, b), (3L, c)).toDF("doc_id", "text")
-    val sims = df.select(col("doc_id"), TextOps.simhash64(col("text")).as("s"))
+    val sims = DedupOps.simhashSignatures(df, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def hamming(x: Long, y: Long) = java.lang.Long.bitCount(x ^ y)
     assert(hamming(sims(1L), sims(2L)) < hamming(sims(1L), sims(3L)),
@@ -170,9 +170,11 @@ class NorthStarSpec extends AnyFunSuite with SparkTestBase {
     import spark2.implicits._
     // triangle {1,2,3} + pendant edge 3-4
     val pairs = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("a", "b")
-    val got = graft.operators.GraphOps.triangleStats(pairs, "a", "b")
+    val got = graft.operators.GraphOps
+      .triangleStatsBucketed(spark, pairs, "a", "b", table = "graft_tri_spec")
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
+    spark.sql("DROP TABLE IF EXISTS graft_tri_spec")
     assert(got(1L) == ((2L, 1L, 1.0)))
     assert(got(2L) == ((2L, 1L, 1.0)))
     assert(got(3L)._1 == 3L && got(3L)._2 == 1L &&
@@ -827,29 +829,6 @@ class NorthStarSpec extends AnyFunSuite with SparkTestBase {
     assert(got("ab") == "aabb")
   }
 
-  test("binaryFile ingest: bytes round-trip, format from extension, " +
-      "glob prunes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bin")
-    java.nio.file.Files.write(dir.resolve("a.img"),
-      Array[Byte](1, 2, 3, -1))
-    java.nio.file.Files.write(dir.resolve("b.wav"),
-      "hello".getBytes("UTF-8"))
-    val all = MultimodalOps.ingestBinaryDir(spark, dir.toString)
-      .collect().map(r => r.getAs[String]("format") ->
-        r.getAs[Array[Byte]]("data")).toMap
-    assert(all.keySet == Set("img", "wav"))
-    assert(all("img").toSeq == Seq[Byte](1, 2, 3, -1))
-    assert(new String(all("wav"), "UTF-8") == "hello")
-    val imgs = MultimodalOps.ingestBinaryDir(spark, dir.toString, "*.img")
-      .collect()
-    assert(imgs.length == 1 &&
-      imgs.head.getAs[String]("format") == "img")
-    // deterministic id: same file name -> same media_id on re-ingest
-    val id1 = MultimodalOps.ingestBinaryDir(spark, dir.toString, "*.img")
-      .collect().head.getAs[Long]("media_id")
-    assert(imgs.head.getAs[Long]("media_id") == id1)
-  }
-
   test("randomized properties: entropy bounds, CMS domination, " +
       "zipf slope sign") {
     import spark.implicits._
@@ -1101,27 +1080,6 @@ class NorthStarSpec extends AnyFunSuite with SparkTestBase {
       s"missing ${old.diff(got).take(5)}, extra ${got.diff(old).take(5)}")
   }
 
-  test("oversizedBuckets audits exactly what the hub cap dropped") {
-    import graft.operators.SimilarityOps
-    import spark.implicits._
-    // 60 identical vectors: one megabucket. Cap 20 -> the dedup emits
-    // nothing, and the audit names the dropped bucket with its size —
-    // the recall loss is measured, never silent.
-    val dup = (0L until 60L).map(i => (i, Array.fill(64)(0.5f)))
-      .toDF("vec_id", "embedding")
-    val dropped = SimilarityOps.oversizedBuckets(dup, "vec_id",
-        "embedding", bands = 1, planesPerBand = 16, maxBucketSize = 20)
-      .collect()
-    assert(dropped.length == 1, s"expected one megabucket: ${dropped.toSeq}")
-    assert(dropped.head.getAs[Long]("bucket_size") == 60L)
-    val pairs = DedupOps.embeddingNearDup(dup, "vec_id", "embedding",
-      planes = 16, threshold = 0.9, maxBucketSize = 20).count()
-    assert(pairs == 0, "capped megabucket must emit no pairs")
-    // default cap: nothing dropped, audit is empty
-    assert(SimilarityOps.oversizedBuckets(dup, "vec_id", "embedding",
-      bands = 1, planesPerBand = 16).isEmpty)
-  }
-
   test("cosine near-dup pairs: hub buckets are capped, so pair work " +
       "is bounded") {
     import graft.operators.SimilarityOps
@@ -1137,6 +1095,10 @@ class NorthStarSpec extends AnyFunSuite with SparkTestBase {
     val full = SimilarityOps.cosineNearDupPairs(dup, "vec_id",
       "embedding", threshold = 0.9).count()
     assert(full == 60L * 59 / 2, s"uncapped run emitted $full pairs")
+    // the single-band embedding dedup drops a capped megabucket too
+    val pairs = DedupOps.embeddingNearDup(dup, "vec_id", "embedding",
+      planes = 16, threshold = 0.9, maxBucketSize = 20).count()
+    assert(pairs == 0, "capped megabucket must emit no pairs")
   }
 
   test("embedding contamination: verified subset of exact cross-split " +

@@ -182,8 +182,8 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
       s"no corpus-wide shuffle join expected at this scale:\n$p")
   }
 
-  test("LSH verify joins recover broadcast despite the checkpoint " +
-      "erasing statistics") {
+  test("LSH verify joins broadcast the small checkpointed shingle " +
+      "table") {
     val docs = Tables.load(spark, dir, "documents")
     val p = plan(graft.operators.DedupOps.minhashLshDedup(
       docs, "doc_id", "text", shingleN = 2, k = 16, bands = 16,

@@ -7,8 +7,8 @@ import graft.core.Tables
 import graft.operators.ScaleOps
 
 /** Physical-shape checks for the scale techniques: bucketed joins must
-  * plan with no shuffle exchange; salted aggregation must be value-
-  * identical to the direct form. */
+  * plan with no shuffle exchange; bloom-pruned joins must equal the
+  * plain join; z-order keys must match a reference interleave. */
 class ScaleOpsSpec extends AnyFunSuite with SparkTestBase {
 
   test("bucketed co-located join plans without shuffle exchanges") {
@@ -25,8 +25,8 @@ class ScaleOpsSpec extends AnyFunSuite with SparkTestBase {
       val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       try {
-        val joined = ScaleOps.bucketedJoin(spark, "li_bucketed", "o_bucketed",
-          "l_orderkey", "o_orderkey")
+        val joined = spark.table("li_bucketed")
+          .join(spark.table("o_bucketed"), col("l_orderkey") === col("o_orderkey"))
         val plan = joined.queryExecution.executedPlan.toString
         assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
         assert(!plan.contains("Exchange"),
@@ -112,63 +112,6 @@ class ScaleOpsSpec extends AnyFunSuite with SparkTestBase {
     assert(key == plain)
   }
 
-  test("salted join equals plain join on skewed data and spreads " +
-      "the hot key") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    // 95% of big-side rows share one key
-    val big = (1 to 20000).map { i =>
-      val k = if (i % 20 != 0) 1L else (rnd.nextInt(50) + 2).toLong
-      (k, i)
-    }.toDF("k", "payload")
-    val small = (1L to 60L).map(k => (k, s"dim-$k")).toDF("sk", "attr")
-    val plain = big.join(small, col("k") === col("sk"))
-      .select("k", "payload", "attr").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
-      .sortBy(identity[(Long, Int, String)])
-    val salted = ScaleOps.saltedJoin(big, small, "k", "sk")
-      .select("k", "payload", "attr").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
-      .sortBy(identity[(Long, Int, String)])
-    assert(salted.toSeq == plain.toSeq)
-    // the hot key really fans out across salts on the join key pair
-    val fanout = big.withColumn("__salt",
-        pmod(xxhash64(monotonically_increasing_id()), lit(16L)))
-      .filter(col("k") === 1L)
-      .select("__salt").distinct().count()
-    assert(fanout > 8, s"hot key used only $fanout of 16 salts")
-  }
-
-  test("salted aggregation equals direct aggregation on skewed data") {
-    import spark.implicits._
-    // power-law: one key holds 90% of rows
-    val rnd = new scala.util.Random(5)
-    val rows = (1 to 50000).map { i =>
-      val k = if (i % 10 != 0) "hot" else s"cold-${rnd.nextInt(50)}"
-      (k, rnd.nextDouble())
-    }
-    val df = rows.toDF("k", "v")
-    val direct = df.groupBy("k")
-      .agg(sum("v").as("s"), avg("v").as("a"), count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) ->
-        (r.getDouble(1), r.getDouble(2), r.getLong(3))).toMap
-    val sSum = ScaleOps.saltedSum(df, "k", "v").collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val sAvg = ScaleOps.saltedAvg(df, "k", "v").collect()
-      .map(r => r.getString(0) -> (r.getDouble(1), r.getLong(2))).toMap
-    direct.foreach { case (k, (s, a, n)) =>
-      assert(math.abs(sSum(k) - s) < 1e-8 * math.max(1, math.abs(s)), k)
-      assert(math.abs(sAvg(k)._1 - a) < 1e-10, k)
-      assert(sAvg(k)._2 == n, k)
-    }
-    // the salted first stage really fans the hot key out
-    val salted = df.withColumn("__salt",
-      pmod(xxhash64(monotonically_increasing_id()), lit(16L)))
-      .groupBy("k", "__salt").count()
-      .filter(col("k") === "hot").count()
-    assert(salted > 1, "hot key should split across salts")
-  }
-
   test("zorder key matches a reference Morton interleave and clamps " +
       "out-of-range values") {
     import spark.implicits._
@@ -200,42 +143,6 @@ class ScaleOpsSpec extends AnyFunSuite with SparkTestBase {
     probes.foreach { case p @ (x, y, z) =>
       assert(got(p) == refKey(x, y, z), s"probe $p")
       assert(got(p) >= 0 && got(p) < (1L << (bits * 3)), s"range $p")
-    }
-  }
-
-  test("writeZOrdered: round-trips the data and every file covers a " +
-      "tight range of BOTH dimensions") {
-    val li = Tables.load(spark, sf("sf0.001"), "lineitem")
-      .select(col("l_orderkey").cast("long").as("a"),
-        col("l_partkey").cast("long").as("b"))
-    val stats = li.agg(min("a"), max("a"), min("b"), max("b")).head()
-    val (aLo, aHi, bLo, bHi) = (stats.getLong(0), stats.getLong(1),
-      stats.getLong(2), stats.getLong(3))
-    val out = java.nio.file.Files.createTempDirectory("zord").toString
-    try {
-      ScaleOps.writeZOrdered(li, Seq("a", "b"),
-        Seq((aLo, aHi), (bLo, bHi)), bits = 8, out, numFiles = 16)
-      val back = spark.read.parquet(out)
-      // same multiset of rows
-      assert(back.count() == li.count())
-      assert(back.groupBy("a", "b").count()
-        .except(li.groupBy("a", "b").count()).isEmpty)
-      // per-file spans: each of the 16 files must cover well under the
-      // full [min, max] width in BOTH dimensions (a file of a
-      // single-column layout spans ~everything in the other dimension)
-      val spans = back.withColumn("f", input_file_name())
-        .groupBy("f")
-        .agg((max("a") - min("a")).as("sa"), (max("b") - min("b")).as("sb"))
-        .collect()
-      assert(spans.length == 16, s"expected 16 files, got ${spans.length}")
-      val aw = (aHi - aLo).toDouble
-      val bw = (bHi - bLo).toDouble
-      val avgA = spans.map(_.getLong(1)).sum / spans.length / aw
-      val avgB = spans.map(_.getLong(2)).sum / spans.length / bw
-      assert(avgA < 0.5, s"mean a-span fraction $avgA")
-      assert(avgB < 0.5, s"mean b-span fraction $avgB")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
     }
   }
 

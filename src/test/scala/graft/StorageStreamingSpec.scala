@@ -34,32 +34,6 @@ class StorageStreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(plan.contains("log_id"), "partition filter should appear in scan")
   }
 
-  test("JSONL store round-trips the documents table; corrupt lines " +
-      "quarantine instead of failing the read") {
-    import graft.sources.JsonlDocStore
-    val docs = graft.core.Tables.load(spark, sf("sf0.001"), "documents")
-    val dir = java.nio.file.Files.createTempDirectory("jsonl").toString
-    JsonlDocStore.write(docs, dir)
-    val back = JsonlDocStore.readClean(spark, dir)
-    // .rdd.count, not .count: a bare count() over the clean filter
-    // prunes the scan to the corrupt column alone, which Spark forbids
-    assert(back.rdd.count() == docs.count())
-    val a = docs.orderBy("doc_id").collect().map(r => (r.getLong(0), r.getString(1)))
-    val b = back.orderBy("doc_id").collect().map(r => (r.getLong(0), r.getString(1)))
-    assert(a.sameElements(b), "JSONL round trip must be lossless")
-    // corrupt a copy: append garbage lines to the directory
-    val extra = new java.io.File(dir, "part-corrupt.json")
-    val w = new java.io.PrintWriter(extra)
-    w.println("{not valid json")
-    w.println("""{"doc_id": "not-a-number and no quotes close""")
-    w.close()
-    val raw = JsonlDocStore.read(spark, dir)
-    assert(JsonlDocStore.corruptCount(raw) == 2)
-    assert(JsonlDocStore.readClean(spark, dir).rdd.count() == docs.count())
-    assert(JsonlDocStore.corrupt(raw).collect()
-      .forall(_.getString(0).startsWith("{")))
-  }
-
   test("streaming tumbling aggregation equals the batch equivalent") {
     import spark.implicits._
     val events = Tables.load(spark, sf("sf0.001"), "events")
@@ -267,161 +241,6 @@ class StorageStreamingSpec extends AnyFunSuite with SparkTestBase {
       "post-compaction delta ingest must land")
   }
 
-  test("streaming HLL register-store maintenance equals the one-shot " +
-      "batch sketch") {
-    import spark.implicits._
-    import graft.operators.StatsOps
-    val ev = Tables.load(spark, sf("sf0.01"), "events")
-      .select(col("event_type"), col("user_id")).collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    val store = Files.createTempDirectory("graft-hll-store").toString
-    // seed the persisted register table with the first slice, then
-    // fold 4 micro-batches in — old events are never rescanned, the
-    // store stays <= nKeys * 256 rows
-    val (seed, rest) = ev.splitAt(ev.length / 3)
-    StatsOps.hllRegisters(seed.toSeq.toDF("event_type", "user_id"),
-        "event_type", "user_id")
-      .write.mode("overwrite").parquet(store)
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, Long)]
-    val q = input.toDF().toDF("event_type", "user_id")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val merged = StatsOps.hllMergeRegisters(
-            spark.read.parquet(store),
-            StatsOps.hllRegisters(batch, "event_type", "user_id"))
-          .localCheckpoint(true) // materialize BEFORE overwriting source
-        merged.write.mode("overwrite").parquet(store)
-      }
-      .start()
-    try {
-      rest.grouped(math.max(rest.length / 4, 1)).foreach { g =>
-        input.addData(g.toSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val streamed = StatsOps
-      .hllEstimate(spark.read.parquet(store), "event_type")
-      .collect()
-      .map(r => r.getString(0) -> r.getLong(2)).toMap
-    val batch = StatsOps
-      .hllDistinct(ev.toSeq.toDF("event_type", "user_id"),
-        "event_type", "user_id")
-      .collect()
-      .map(r => r.getString(0) -> r.getLong(2)).toMap
-    assert(streamed == batch,
-      "folded register store must equal the one-shot sketch exactly")
-    assert(spark.read.parquet(store).count() <= batch.size * 256L)
-  }
-
-  test("streaming KS drift monitor: folded bin-count store equals the " +
-      "one-shot batch statistic") {
-    import spark.implicits._
-    import graft.operators.StatsOps
-    val ev = Tables.load(spark, sf("sf0.01"), "events")
-      .select(col("event_type"),
-        (col("value") * 100).cast("long").as("v"))
-      .filter(col("v").isNotNull)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    // pin the grid once (the monitor-over-time contract)
-    val lo = ev.map(_._2).min
-    val width = math.max((ev.map(_._2).max - lo) / 32 + 1, 1L)
-    val store = Files.createTempDirectory("graft-ks-store").toString
-    val (seed, rest) = ev.splitAt(ev.length / 3)
-    StatsOps.ksBinCounts(seed.toSeq.toDF("k", "v"), "k", "v", lo, width)
-      .write.mode("overwrite").parquet(store)
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, Long)]
-    val q = input.toDF().toDF("k", "v")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val merged = StatsOps.ksMergeBinCounts(
-            spark.read.parquet(store),
-            StatsOps.ksBinCounts(batch, "k", "v", lo, width))
-          .localCheckpoint(true)
-        merged.write.mode("overwrite").parquet(store)
-      }
-      .start()
-    try {
-      rest.grouped(math.max(rest.length / 4, 1)).foreach { g =>
-        input.addData(g.toSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    def snap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getAs[String]("k") ->
-        ((r.getAs[Long]("n_key"), r.getAs[Long]("ks_num"))))
-      .toMap
-    val streamed = snap(StatsOps.ksFromBinCounts(
-      spark.read.parquet(store), "k"))
-    val batch = snap(StatsOps.ksFromBinCounts(
-      StatsOps.ksBinCounts(ev.toSeq.toDF("k", "v"), "k", "v", lo, width),
-      "k"))
-    assert(streamed == batch,
-      "folded bin-count store must reproduce the batch KS exactly")
-  }
-
-  test("streaming CMS sketch fold equals the one-shot batch sketch " +
-      "and estimates exactly") {
-    import spark.implicits._
-    import graft.operators.CurationOps
-    val docs = Tables.load(spark, sf("sf0.01"), "documents")
-      .select(col("doc_id"), col("text"))
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    val store = Files.createTempDirectory("graft-cms-store").toString
-    val (seed, rest) = docs.splitAt(docs.length / 3)
-    CurationOps.cmsSketch(seed.toSeq.toDF("doc_id", "text"), "text")
-      .write.mode("overwrite").parquet(store)
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, String)]
-    val q = input.toDF().toDF("doc_id", "text")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val merged = CurationOps.cmsMergeSketches(
-            spark.read.parquet(store),
-            CurationOps.cmsSketch(batch, "text"))
-          .localCheckpoint(true)
-        merged.write.mode("overwrite").parquet(store)
-      }
-      .start()
-    try {
-      rest.grouped(math.max(rest.length / 4, 1)).foreach { g =>
-        input.addData(g.toSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val batchDf = docs.toSeq.toDF("doc_id", "text")
-    def cells(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Int]("j"), r.getAs[Long]("b")) ->
-        r.getAs[Long]("n")).toMap
-    val folded = spark.read.parquet(store)
-    assert(cells(folded) == cells(CurationOps.cmsSketch(batchDf, "text")),
-      "folded sketch cells must equal the one-shot batch sketch")
-    // and the downstream estimates agree term-for-term
-    val top = batchDf
-      .select(explode(graft.operators.TextOps.tokens(col("text"))).as("t"))
-      .groupBy(col("t")).agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("t")).limit(20)
-    def ests(sk: org.apache.spark.sql.DataFrame) =
-      CurationOps.cmsEstimate(sk, top, "t").collect()
-        .map(r => r.getAs[String]("t") -> r.getAs[Long]("est")).toMap
-    assert(ests(folded) == ests(CurationOps.cmsSketch(batchDf, "text")))
-    // a candidate term the sketch never saw estimates 0 (left-join
-    // with absent buckets counting as zero), not a vanished row or a
-    // min over only the buckets it happens to collide into — pinned
-    // on a tiny sketch where empty buckets actually exist (the sf0.01
-    // sketch above has every bucket populated, where upper-bound
-    // collision inflation is the documented CMS behavior)
-    import spark.implicits._
-    val tinySketch = CurationOps.cmsSketch(
-      Seq((1L, "alpha beta")).toDF("doc_id", "text"), "text")
-    val u = CurationOps.cmsEstimate(
-        tinySketch, Seq("zz-never-in-corpus-zz").toDF("t"), "t")
-      .collect()
-    assert(u.length == 1 && u.head.getAs[Long]("est") == 0L,
-      s"unseen term must estimate 0, got ${u.toSeq}")
-  }
-
   test("streaming grouped top-k (bounded aggregate) equals batch " +
       "across micro-batches") {
     import spark.implicits._
@@ -458,41 +277,6 @@ class StorageStreamingSpec extends AnyFunSuite with SparkTestBase {
     } finally q.stop()
   }
 
-  test("streaming priority sample equals the batch sample at every " +
-      "micro-batch prefix") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val rnd = new scala.util.Random(33)
-    val rows = (1L to 2000L).map(id =>
-      (id, s"g${id % 4}", 1.0 + rnd.nextInt(100)))
-    def batchSample(prefix: Seq[(Long, String, Double)]) =
-      graft.operators.CurationOps.prioritySample(
-          prefix.toDF("id", "grp", "w"), "grp", "id", "w", 12, "sps")
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    val input = MemoryStream[(Long, String, Double)]
-    val streamed = graft.streaming.StreamingPipelines
-      .streamingPrioritySample(input.toDF().toDF("id", "grp", "w"),
-        "grp", "id", "w", 12, "sps")
-    val q = streamed.writeStream.format("memory")
-      .queryName("psample_out").outputMode("complete").start()
-    try {
-      var seen = Vector.empty[(Long, String, Double)]
-      rows.grouped(500).foreach { batch => // 4 micro-batches
-        input.addData(batch)
-        q.processAllAvailable()
-        seen ++= batch
-        // the ANYTIME property: after every micro-batch the maintained
-        // sample equals the batch sample of everything ingested so far
-        val got = spark.table("psample_out")
-          .select(col("group"), explode(col("top")).as("t"))
-          .select(col("group"), col("t.id"))
-          .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-        assert(got == batchSample(seen),
-          s"diverged at ${seen.size} ingested rows")
-      }
-    } finally q.stop()
-  }
-
   test("gap sessions split on silence in streaming mode") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -515,305 +299,6 @@ class StorageStreamingSpec extends AnyFunSuite with SparkTestBase {
       assert(got(0).getAs[Long]("n_events") == 2) // user1 first burst
       assert(got(1).getAs[Long]("n_events") == 2) // user1 second burst
       assert(got(2).getAs[Long]("n_events") == 1) // user2
-    } finally q.stop()
-  }
-
-  test("streaming as-of join equals batch asofJoinLast under disorder") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(11)
-    val base = 1700000000000L
-    // duplicate ref timestamps exercise the (ts, ord) tie-break; probes
-    // starting before any ref exercise the no-match path
-    val refRows = for (k <- Seq("A", "B"); i <- 0 until 40) yield
-      (k, base + rnd.nextInt(600000).toLong - (rnd.nextInt(600000) % 2),
-        i.toLong, rnd.nextInt(1000).toDouble)
-    val probeRows = for (k <- Seq("A", "B"); i <- 0 until 60) yield
-      (k, base - 30000 + rnd.nextInt(660000).toLong, (1000 + i).toLong)
-    val refsDf = refRows.map { case (k, t, o, v) =>
-      (k, new java.sql.Timestamp(t), o, v) }.toDF("k", "ts", "ord", "v")
-    val probesDf = probeRows.map { case (k, t, i) =>
-      (k, new java.sql.Timestamp(t), i) }.toDF("k", "ts", "ord")
-    val expected = graft.operators.TemporalJoinOps.asofJoinLast(
-        probesDf, refsDf, Seq("k"), "ts", "ord", "v")
-      .select(col("k"), col("ord").as("id"), col("asof_v"))
-      .collect().map(r => (r.getString(0), r.getLong(1),
-        if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSet
-
-    implicit val sqlCtx = spark.sqlContext
-    val refIn = MemoryStream[(String, java.sql.Timestamp, Long, Double)]
-    val probeIn = MemoryStream[(String, java.sql.Timestamp, Long)]
-    // watermark delay (2 h) exceeds the 11-minute data span, so fully
-    // shuffled multi-batch replay never late-drops anything; the
-    // far-future sentinel then drags the watermark past every probe
-    val streamed = StreamingPipelines.streamingAsOf(
-      probeIn.toDF().toDF("k", "ts", "id"),
-      refIn.toDF().toDF("k", "ts", "ord", "v"),
-      "k", "ts", "id", "ord", "v", watermark = "2 hours")
-    val q = streamed.writeStream.format("memory")
-      .queryName("asof_out").outputMode("append").start()
-    try {
-      val shuffledRefs = rnd.shuffle(refRows.toList).map { case (k, t, o, v) =>
-        (k, new java.sql.Timestamp(t), o, v) }
-      val shuffledProbes = rnd.shuffle(probeRows.toList).map { case (k, t, i) =>
-        (k, new java.sql.Timestamp(t), i) }
-      for (c <- 0 until 3) {
-        refIn.addData(shuffledRefs.drop(c * 27).take(27))
-        probeIn.addData(shuffledProbes.drop(c * 40).take(40))
-        q.processAllAvailable()
-      }
-      val far = new java.sql.Timestamp(base + 1000000000L)
-      refIn.addData(Seq(("Z", far, 0L, 0.0)))
-      q.processAllAvailable()
-      // one more micro-batch so the advanced watermark's timeouts fire
-      refIn.addData(Seq(("Z", far, 1L, 0.0)))
-      q.processAllAvailable()
-      val got = spark.table("asof_out")
-        .select(col("k"), col("id"), col("asofV"))
-        .collect().map(r => (r.getString(0), r.getLong(1),
-          if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSet
-      assert(got == expected)
-    } finally q.stop()
-  }
-
-  test("streaming event transitions equal the batch matrix under " +
-      "disorder") {
-    import spark.implicits._
-    val ev = Tables.load(spark, sf("sf0.001"), "events")
-      .filter(col("user_id") < 40)
-      .select(col("user_id").cast("long").as("u"),
-        col("event_type").as("et"),
-        (unix_micros(col("ts")) / 1000L).cast("long").as("tms"),
-        col("event_id").cast("long").as("eid"))
-    val rows = ev.collect().map(r =>
-      (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
-    // batch truth: LAG over (u, (tms, eid)) -> (prev, next) counts
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("u")).orderBy(col("tms"), col("eid"))
-    val bt = ev.withColumn("prev", lag(col("et"), 1).over(w))
-      .filter(col("prev").isNotNull)
-      .groupBy(col("prev"), col("et")).count()
-      .collect().map(r => (r.getString(0), r.getString(1)) ->
-        r.getLong(2)).toMap
-
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, String, java.sql.Timestamp, Long)]
-    val streamed = StreamingPipelines.streamingTransitions(
-      input.toDF().toDF("u", "et", "ts", "eid"),
-      "u", "et", "ts", "eid", watermark = "30 days")
-    val q = streamed.writeStream.format("memory")
-      .queryName("trans_out").outputMode("append").start()
-    try {
-      val shuffled = new scala.util.Random(17).shuffle(rows.toList)
-        .map { case (u, et, tms, eid) =>
-          (u, et, new java.sql.Timestamp(tms), eid) }
-      val third = (shuffled.size + 2) / 3
-      for (c <- 0 until 3) {
-        input.addData(shuffled.drop(c * third).take(third))
-        q.processAllAvailable()
-      }
-      val far = new java.sql.Timestamp(shuffled.map(_._3.getTime).max +
-        100L * 24 * 3600 * 1000)
-      input.addData(Seq((-1L, "click", far, 0L)))
-      q.processAllAvailable()
-      input.addData(Seq((-1L, "click", far, 1L)))
-      q.processAllAvailable()
-      val got = spark.table("trans_out")
-        .filter(col("k") =!= "-1")
-        .groupBy(col("prevType"), col("nextType")).count()
-        .collect().map(r => (r.getString(0), r.getString(1)) ->
-          r.getLong(2)).toMap
-      assert(got == bt,
-        "streamed transition counts must equal the batch LAG matrix")
-    } finally q.stop()
-  }
-
-  test("streaming funnel equals batch stage times under disorder") {
-    import spark.implicits._
-    val stages = Seq("signup", "view", "click", "purchase")
-    val ev = Tables.load(spark, sf("sf0.001"), "events")
-      .filter(col("user_id") < 40)
-      .select(col("user_id").cast("long").as("u"),
-        col("event_type").as("et"),
-        (unix_micros(col("ts")) / 1000L).cast("long").as("tms"),
-        col("event_id").cast("long").as("eid"))
-    val rows = ev.collect().map(r =>
-      (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
-    // batch truth, melted to (entity, stage_idx, t) for reached stages
-    val bt = graft.operators.FunnelOps.funnelStageTimes(
-        ev, "u", "et", "tms", "eid", stages)
-      .collect().flatMap { r =>
-        stages.indices.flatMap(i =>
-          if (r.isNullAt(i + 1)) None
-          else Some((r.getLong(0).toString, i, r.getLong(i + 1))))
-      }.toSet
-
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, String, java.sql.Timestamp, Long)]
-    val streamed = StreamingPipelines.streamingFunnel(
-      input.toDF().toDF("u", "et", "ts", "eid"),
-      "u", "et", "ts", "eid", stages, watermark = "30 days")
-    val q = streamed.writeStream.format("memory")
-      .queryName("funnel_out").outputMode("append").start()
-    try {
-      val shuffled = new scala.util.Random(5).shuffle(rows.toList)
-        .map { case (u, et, tms, eid) =>
-          (u, et, new java.sql.Timestamp(tms), eid) }
-      val third = (shuffled.size + 2) / 3
-      for (c <- 0 until 3) {
-        input.addData(shuffled.drop(c * third).take(third))
-        q.processAllAvailable()
-      }
-      // sentinel key drags the shared watermark past every real event,
-      // then one more batch lets the event-time timeouts flush
-      val far = new java.sql.Timestamp(shuffled.map(_._3.getTime).max +
-        100L * 24 * 3600 * 1000)
-      input.addData(Seq((-1L, "signup", far, 0L)))
-      q.processAllAvailable()
-      input.addData(Seq((-1L, "signup", far, 1L)))
-      q.processAllAvailable()
-      val got = spark.table("funnel_out")
-        .filter(col("k") =!= "-1")
-        .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
-        .toSet
-      assert(got == bt)
-      assert(bt.nonEmpty, "expected some funnel activity in the sample")
-    } finally q.stop()
-  }
-
-  test("streaming as-of survives stop/restart from checkpoint " +
-      "with exactly-once matches") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(23)
-    val base = 1700000000000L
-    val refRows = for (k <- Seq("A", "B"); i <- 0 until 30) yield
-      (k, new java.sql.Timestamp(base + rnd.nextInt(600000).toLong),
-        i.toLong, rnd.nextInt(1000).toDouble)
-    val probeRows = for (k <- Seq("A", "B"); i <- 0 until 40) yield
-      (k, new java.sql.Timestamp(base - 30000 + rnd.nextInt(660000).toLong),
-        (1000 + i).toLong)
-    val expected = graft.operators.TemporalJoinOps.asofJoinLast(
-        probeRows.toDF("k", "ts", "ord"), refRows.toDF("k", "ts", "ord", "v"),
-        Seq("k"), "ts", "ord", "v")
-      .select(col("k"), col("ord"), col("asof_v"))
-      .collect().map(r => (r.getString(0), r.getLong(1),
-        if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSet
-
-    val refDir = java.nio.file.Files
-      .createTempDirectory("graft-asof-refs").toString
-    val probeDir = java.nio.file.Files
-      .createTempDirectory("graft-asof-probes").toString
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-asof-out").toString + "/data"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-asof-ckpt").toString
-    def runOnce(): Unit = {
-      val refs = spark.readStream
-        .schema("k string, ts timestamp, ord bigint, v double")
-        .parquet(refDir)
-      val probes = spark.readStream
-        .schema("k string, ts timestamp, id bigint").parquet(probeDir)
-      val q = StreamingPipelines.streamingAsOf(probes, refs,
-          "k", "ts", "id", "ord", "v", watermark = "2 hours")
-        .writeStream.format("parquet").option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val (r1, r2) = rnd.shuffle(refRows.toList).splitAt(refRows.size / 2)
-    val (p1, p2) = rnd.shuffle(probeRows.toList).splitAt(probeRows.size / 2)
-    r1.toDF("k", "ts", "ord", "v").coalesce(1).write.mode("append")
-      .parquet(refDir)
-    p1.toDF("k", "ts", "id").coalesce(1).write.mode("append")
-      .parquet(probeDir)
-    runOnce() // then STOP — simulated failure/redeploy
-    val far = new java.sql.Timestamp(base + 1000000000L)
-    (r2 :+ (("Z", far, 0L, 0.0))).toDF("k", "ts", "ord", "v")
-      .coalesce(1).write.mode("append").parquet(refDir)
-    p2.toDF("k", "ts", "id").coalesce(1).write.mode("append")
-      .parquet(probeDir)
-    runOnce() // RESTART from the checkpoint
-    // one more micro-batch so timeouts flush behind the advanced
-    // watermark
-    Seq(("Z", new java.sql.Timestamp(far.getTime + 1000), 1L, 0.0))
-      .toDF("k", "ts", "ord", "v").coalesce(1).write.mode("append")
-      .parquet(refDir)
-    runOnce()
-    val out = spark.read.parquet(outDir)
-      .collect().map(r => (r.getString(0), r.getLong(1),
-        if (r.isNullAt(3)) None else Some(r.getDouble(3))))
-    assert(out.map(x => (x._1, x._2)).distinct.length == out.length,
-      "duplicate probe answered across restart")
-    assert(out.toSet == expected)
-  }
-
-  test("streaming retention grid equals batch cohortRetention") {
-    import spark.implicits._
-    val dayMs = 86400000L
-    val ev = Tables.load(spark, sf("sf0.001"), "events")
-      .filter(col("user_id") < 50)
-      .select(col("user_id").cast("long").as("u"),
-        (unix_micros(col("ts")) / 1000L).cast("long").as("tms"))
-    val expected = graft.operators.FunnelOps.cohortRetention(
-        ev, "u", "tms", dayMs)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
-      .toMap
-
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, java.sql.Timestamp)]
-    val streamed = StreamingPipelines.streamingRetention(
-      input.toDF().toDF("u", "ts"), "u", "ts", dayMs,
-      watermark = "90 days")
-    val q = streamed.writeStream.format("memory")
-      .queryName("retention_out").outputMode("append").start()
-    try {
-      val rows = ev.collect().map(r =>
-        (r.getLong(0), new java.sql.Timestamp(r.getLong(1)))).toList
-      val shuffled = new scala.util.Random(9).shuffle(rows)
-      val third = (shuffled.size + 2) / 3
-      for (c <- 0 until 3) {
-        input.addData(shuffled.drop(c * third).take(third))
-        q.processAllAvailable()
-      }
-      val far = new java.sql.Timestamp(rows.map(_._2.getTime).max +
-        200L * dayMs)
-      input.addData(Seq((-1L, far)))
-      q.processAllAvailable()
-      input.addData(Seq((-2L, far)))
-      q.processAllAvailable()
-      val got = spark.table("retention_out")
-        .filter(col("k") >= "0")
-        .groupBy(col("cohort"), col("offset"))
-        .agg(count(lit(1)).as("n"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
-        .toMap
-      assert(got == expected)
-      assert(expected.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("streaming exact dedup drops repeats across micro-batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    def ts(min: Int) = java.sql.Timestamp.valueOf(f"2026-01-01 10:$min%02d:00")
-    val input = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val deduped = StreamingPipelines.streamingExactDedup(
-      input.toDF().toDF("ts", "doc_id", "text"), "text")
-    val q = deduped.writeStream.format("memory")
-      .queryName("dedup_out").outputMode("append").start()
-    try {
-      // batch 1: A, B, and an in-batch repeat of A (case/space variant)
-      input.addData(Seq(
-        (ts(0), 1L, "alpha doc"), (ts(1), 2L, "beta doc"),
-        (ts(2), 3L, "  Alpha DOC ")))
-      q.processAllAvailable()
-      // batch 2: cross-batch repeat of A (state retained) + new C
-      input.addData(Seq(
-        (ts(3), 4L, "alpha doc"), (ts(4), 5L, "gamma doc")))
-      q.processAllAvailable()
-      val kept = spark.table("dedup_out")
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(kept == Set(1L, 2L, 5L),
-        s"expected first occurrence of each content, got $kept")
     } finally q.stop()
   }
 
@@ -850,276 +335,6 @@ class StorageStreamingSpec extends AnyFunSuite with SparkTestBase {
       assert(streamed == batch)
       assert(batch == Map(1L -> true, 2L -> false, 3L -> false,
         4L -> false, 5L -> false))
-    } finally q.stop()
-  }
-
-  test("streaming MinHash LSH near-dup equals the batch candidate set") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val docs = Tables.load(spark, sf("sf0.001"), "documents")
-      .filter(col("doc_id") < 120)
-      .select(col("doc_id"), col("text"))
-    // batch truth: same shingling / hashing / banding constants
-    val expected = operators.DedupOps.minhashLshCandidates(
-        docs, "doc_id", "text", shingleN = 2, k = 16, bands = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(expected.nonEmpty, "test corpus should produce candidates")
-
-    def ts(min: Int) = java.sql.Timestamp.valueOf(f"2026-01-01 10:$min%02d:00")
-    val rows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
-    val input = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val pairs = StreamingPipelines.streamingNearDup(
-      input.toDF().toDF("ts", "doc_id", "text"), "doc_id", "text",
-      shingleN = 2, k = 16, bands = 8)
-    val q = pairs.writeStream.format("memory")
-      .queryName("neardup_out").outputMode("append").start()
-    try {
-      // three micro-batches; all inside the watermark horizon, so the
-      // replay must reproduce the batch candidate set exactly
-      val (b1, rest) = rows.splitAt(40)
-      val (b2, b3) = rest.splitAt(40)
-      input.addData(b1.map { case (id, t) => (ts(0), id, t) }.toSeq)
-      q.processAllAvailable()
-      input.addData(b2.map { case (id, t) => (ts(5), id, t) }.toSeq)
-      q.processAllAvailable()
-      input.addData(b3.map { case (id, t) => (ts(10), id, t) }.toSeq)
-      q.processAllAvailable()
-      val got = spark.table("neardup_out")
-        .select("id1", "id2").distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == expected,
-        s"streaming pairs != batch: missing=${expected -- got} extra=${got -- expected}")
-    } finally q.stop()
-  }
-
-  test("streaming anomaly z-scores equal the batch trailing window " +
-      "on replay") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val hourMs = 3600000L
-    val ev = Tables.load(spark, sf("sf0.001"), "events")
-      .select(col("event_type"), col("ts"),
-        (expr("(ts_ns div 1000000) div 3600000") * hourMs).as("h"))
-    val rows = ev.select(col("event_type"), col("ts"))
-      .collect().map(r => (r.getString(0), r.getTimestamp(1)))
-    // batch truth: hourly counts -> trailingZScore(24)
-    val hourly = ev.groupBy(col("event_type"), col("h"))
-      .agg(count(org.apache.spark.sql.functions.lit(1)).as("n"))
-    val batch = graft.operators.WindowOps
-      .trailingZScore(hourly, Seq("event_type"), "h", "n", 24)
-      .collect().map(r => (r.getString(0), r.getLong(1)) ->
-        ((r.getLong(2), Option(r.get(3)).map(_.asInstanceOf[Double]),
-          Option(r.get(5)).map(_.asInstanceOf[Double]))))
-      .toMap
-
-    val input = MemoryStream[(java.sql.Timestamp, String)]
-    val out = streaming.StreamingPipelines.streamingAnomaly(
-      input.toDF().toDF("ts", "event_type"),
-      watermark = "1 hour")
-    val q = out.writeStream.format("memory")
-      .queryName("anomaly_out").outputMode("append").start()
-    try {
-      val sorted = rows.sortBy(_._2.getTime)
-      val (b1, b2) = sorted.splitAt(sorted.length / 2)
-      input.addData(b1.map { case (k, t) => (t, k) }.toSeq)
-      q.processAllAvailable()
-      input.addData(b2.map { case (k, t) => (t, k) }.toSeq)
-      q.processAllAvailable()
-      // sentinel far in the future closes every data hour
-      val maxTs = sorted.last._2.getTime
-      input.addData(Seq((new java.sql.Timestamp(maxTs + 100L * hourMs),
-        "zz_sentinel")))
-      q.processAllAvailable()
-      val got = spark.table("anomaly_out")
-        .filter(col("key") =!= "zz_sentinel")
-        .collect().map(r => (r.getString(0), r.getLong(1)) ->
-          ((r.getLong(2), Option(r.get(3)).map(_.asInstanceOf[Double]),
-            Option(r.get(5)).map(_.asInstanceOf[Double]))))
-        .toMap
-      assert(got.nonEmpty && got.size == batch.size,
-        s"closed-hour count ${got.size} != batch ${batch.size}")
-      def close(a: Option[Double], b: Option[Double], what: String,
-                k: Any): Unit = (a, b) match {
-        case (Some(x), Some(y)) => assert(math.abs(x - y) < 1e-9,
-          s"$k $what $y != $x")
-        case _ => assert(a == b, s"$k $what-presence $b != $a")
-      }
-      batch.foreach { case (k, (n, ta, z)) =>
-        val (gn, gta, gz) = got(k)
-        assert(gn == n, s"$k count $gn != $n")
-        close(ta, gta, "trail_avg", k)
-        close(z, gz, "z", k)
-      }
-    } finally q.stop()
-  }
-
-  test("sharded corpus writer: deterministic balanced shards, " +
-      "lossless round trip, partition dirs") {
-    import org.apache.spark.sql.functions.{col, pmod, lit}
-    val docs = Tables.load(spark, sf("sf0.001"), "documents")
-      .withColumn("split", graft.operators.CurationOps.assignSplit(
-        col("doc_id"), Seq("train" -> 0.9, "val" -> 0.1), "s"))
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-shards").toString
-    val n = sources.ShardedCorpusWriter.write(
-      docs, "doc_id", out, docsPerShard = 100, Seq("split"))
-    assert(n == 5, s"500 docs / 100 per shard should give 5, got $n")
-    val back = sources.ShardedCorpusWriter.read(spark, out)
-    // lossless round trip of the data columns
-    assert(back.count() == 500)
-    val origText = docs.select("doc_id", "text").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    back.select("doc_id", "text").collect().foreach { r =>
-      assert(origText(r.getLong(0)) == r.getString(1))
-    }
-    // shard assignment is the documented content-addressed hash
-    back.select(col("doc_id"), col("shard"),
-        pmod(graft.operators.CurationOps.md5Hash32(
-          col("doc_id").cast("string")), lit(5L)).cast("int").as("want"))
-      .collect().foreach(r =>
-        assert(r.getInt(1) == r.getInt(2), s"doc ${r.getLong(0)}"))
-    // md5 balance: no shard more than 2x the target
-    val sizes = back.groupBy(col("shard")).count()
-      .collect().map(_.getLong(1))
-    assert(sizes.length == 5 && sizes.forall(_ <= 200), sizes.toSeq.toString)
-    // layout contract: shard dirs at the top, split dirs inside, and
-    // exactly ONE parquet file per (shard, split) leaf — file balance
-    // must hold even though Spark task routing is murmur3(shard) % n,
-    // which packs multiple shards into one task (hash-of-hash != id)
-    val shardDirs = new java.io.File(out).listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet
-    assert(shardDirs == (0 to 4).map(i => s"shard=$i").toSet,
-      shardDirs.toString)
-    val perFile = back
-      .groupBy(org.apache.spark.sql.functions
-        .input_file_name().as("f"))
-      .count().collect().map(_.getLong(1))
-    assert(perFile.length == 10,
-      s"expected 5 shards x 2 splits = 10 files, got ${perFile.length}")
-    assert(perFile.forall(_ <= 200), perFile.toSeq.toString)
-  }
-
-  test("streaming anomaly survives stop/restart from checkpoint " +
-      "with exactly-once closed hours") {
-    import spark.implicits._
-    val hourMs = 3600000L
-    val ev = Tables.load(spark, sf("sf0.001"), "events")
-      .select(col("event_type").as("k"), col("ts"),
-        (expr("(ts_ns div 1000000) div 3600000") * hourMs).as("h"))
-    // batch truth over the full data (sentinel closes every hour)
-    val hourly = ev.groupBy(col("k"), col("h"))
-      .agg(count(org.apache.spark.sql.functions.lit(1)).as("n"))
-    val truth = graft.operators.WindowOps
-      .trailingZScore(hourly, Seq("k"), "h", "n", 24)
-      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2))
-      .toMap
-
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft-anom-src").toString
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft-anom-out").toString + "/data"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-anom-ckpt").toString
-    val rows = ev.select(col("ts"), col("k")).orderBy(col("ts"))
-      .collect().map(r => (r.getTimestamp(0), r.getString(1)))
-    val (p1, p2) = rows.splitAt(rows.length / 2)
-
-    def runOnce(): Unit = {
-      val stream = spark.readStream
-        .schema("ts timestamp, k string")
-        .parquet(srcDir)
-      val q = streaming.StreamingPipelines
-        .streamingAnomaly(stream, typeCol = "k", watermark = "1 hour")
-        .writeStream.format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    // first half, run, STOP (simulated failure/redeploy)
-    p1.toSeq.toDF("ts", "k").coalesce(1).write
-      .mode("append").parquet(srcDir)
-    runOnce()
-    // second half + far-future sentinel, RESTART from the checkpoint
-    val maxTs = rows.last._1.getTime
-    (p2.toSeq :+ ((new java.sql.Timestamp(maxTs + 100L * hourMs),
-      "zz_sentinel"))).toDF("ts", "k").coalesce(1).write
-      .mode("append").parquet(srcDir)
-    runOnce()
-
-    val got = spark.read.parquet(outDir)
-      .filter(col("key") =!= "zz_sentinel")
-      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2))
-    // exactly once: no (key, hour) emitted twice across the restart
-    assert(got.length == got.map(_._1).distinct.length,
-      "duplicate closed hours across restart")
-    val gotMap = got.toMap
-    assert(gotMap.size == truth.size,
-      s"closed ${gotMap.size} hours, batch truth has ${truth.size}")
-    truth.foreach { case (k, n) =>
-      assert(gotMap(k) == n, s"$k count ${gotMap(k)} != $n")
-    }
-  }
-
-  test("scala minhash signature bit-matches the SQL pipeline") {
-    import spark.implicits._
-    val docs = Tables.load(spark, sf("sf0.001"), "documents")
-      .filter(col("doc_id") < 60).select(col("doc_id"), col("text"))
-    // SQL form: the exact expression chain the batch operators stage
-    val sql = docs
-      .select(col("doc_id"), operators.TextOps.tokens(col("text")).as("toks"))
-      .select(col("doc_id"),
-        operators.TextOps.shinglesFromTokens(col("toks"), 3).as("sh0"))
-      .select(col("doc_id"), array_distinct(col("sh0")).as("sh"))
-      .select(col("doc_id"),
-        array_distinct(transform(col("sh"), s => xxhash64(s))).as("hs"))
-      .select(col("doc_id"),
-        operators.TextOps.minhashFromBase(
-          transform(col("hs"), h => pmod(h, lit(2147483647L))), 8,
-          2147483647L).as("sig"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toVector).toMap
-    docs.collect().foreach { r =>
-      val scala = StreamingPipelines
-        .minhashSigScala(r.getString(1), 3, 8).toVector
-      val exp = if (scala.isEmpty) Vector.empty else sql(r.getLong(0))
-      assert(scala == exp, s"doc ${r.getLong(0)} signature mismatch")
-    }
-  }
-
-  test("stream-stream range join equals the batch join on replay") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    def ts(min: Int) = java.sql.Timestamp.valueOf(f"2026-01-01 10:$min%02d:00")
-    val clicks = Seq((ts(0), 1L, 1.0), (ts(20), 1L, 2.0), (ts(5), 2L, 3.0))
-    val views = Seq((ts(4), 1L, 10.0), (ts(21), 1L, 20.0), (ts(40), 2L, 30.0))
-    // batch truth: same key, view within [click, click + 10 min]
-    val bc = clicks.toDF("ts", "user_id", "value")
-    val bv = views.toDF("ts", "user_id", "value")
-    val expected = bc.as("c").join(bv.as("v"),
-        $"c.user_id" === $"v.user_id" && $"v.ts" >= $"c.ts" &&
-          $"v.ts" <= $"c.ts" + expr("interval 10 minutes"))
-      .select($"c.user_id", $"c.ts", $"v.ts")
-      .collect().map(r => (r.getLong(0), r.getTimestamp(1),
-        r.getTimestamp(2))).toSet
-    assert(expected == Set((1L, ts(0), ts(4)), (1L, ts(20), ts(21))))
-
-    val lIn = MemoryStream[(java.sql.Timestamp, Long, Double)]
-    val rIn = MemoryStream[(java.sql.Timestamp, Long, Double)]
-    val joined = StreamingPipelines.streamStreamJoin(
-      lIn.toDF().toDF("ts", "user_id", "value"),
-      rIn.toDF().toDF("ts", "user_id", "value"),
-      "user_id", "10 minutes")
-    val q = joined.writeStream.format("memory")
-      .queryName("ssjoin_out").outputMode("append").start()
-    try {
-      lIn.addData(clicks)
-      rIn.addData(views)
-      q.processAllAvailable()
-      val got = spark.table("ssjoin_out")
-        .select(col("k"), col("l_ts"), col("r_ts"))
-        .collect().map(r => (r.getLong(0), r.getTimestamp(1),
-          r.getTimestamp(2))).toSet
-      assert(got == expected)
     } finally q.stop()
   }
 

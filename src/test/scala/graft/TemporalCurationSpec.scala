@@ -158,6 +158,13 @@ class TemporalCurationSpec extends AnyFunSuite with SparkTestBase {
     val small = ids.filter(CurationOps.hashKeep(col("id"), 0.1, "s1"))
       .collect().map(_.getLong(0)).toSet
     assert(small.subsetOf(again), "same-salt samples must nest")
+    // membership is fixed md5 arithmetic, identical in any engine:
+    // at salt "bpe" and rate 0.5 exactly uv and pq are kept
+    import spark.implicits._
+    val words = Seq("xy", "uv", "pq", "mn").toDF("w")
+      .filter(CurationOps.hashKeep(col("w"), 0.5, "bpe"))
+      .collect().map(_.getString(0)).toSet
+    assert(words == Set("uv", "pq"), s"kept $words")
   }
 
   test("stratified sample respects per-stratum rates") {
@@ -323,65 +330,6 @@ class TemporalCurationSpec extends AnyFunSuite with SparkTestBase {
     val firstSeq = CurationOps.bpeTrain(overlap, "text", 1)
       .collect().head.getString(1)
     assert(m.head == firstSeq)
-  }
-
-  test("sampled BPE at rate 1.0 reproduces batched bpeTrain exactly") {
-    for (b <- Seq(1, 4)) {
-      val full = CurationOps.bpeTrain(docs, "text", 8, batch = b)
-        .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
-      val sampled = CurationOps
-        .bpeTrainSampled(docs, "text", 8, batch = b, sampleRate = 1.0)
-        .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
-      assert(sampled == full, s"batch=$b")
-    }
-  }
-
-  test("sampled BPE selects from exactly the md5-kept word subset") {
-    import spark.implicits._
-    // hashKeep(salt="bpe", rate=0.5) keeps {uv, pq} and drops {xy, mn}
-    // (fixed md5 arithmetic — membership is part of the contract)
-    val corpus = (
-      Seq.fill(100)("xy") ++ Seq.fill(90)("uv") ++
-      Seq.fill(80)("pq") ++ Seq.fill(70)("mn"))
-      .zipWithIndex.map { case (w, i) => (i.toLong, w) }
-      .toDF("doc_id", "text")
-    val got = CurationOps
-      .bpeTrainSampled(corpus, "text", 4, batch = 4, sampleRate = 0.5)
-      .collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getInt(3)))
-      .toSeq
-    // only sampled words feed the counts: u v (90) then p q (80), both
-    // disjoint -> one round; the unsampled xy/mn can never be picked,
-    // and with no pairs left in the sample the train stops early
-    assert(got == Seq((1, "u v", 90L, 1), (2, "p q", 80L, 1)), got.toString)
-  }
-
-  test("sampled BPE trains 1k merges in O(nMerges/batch) rounds") {
-    import spark.implicits._
-    // 400 distinct 24-char words over a 256-symbol alphabet: enough
-    // adjacency diversity that batch=64 disjoint picks usually fill.
-    // Deterministic LCG so the corpus (and the measured round count)
-    // is reproducible.
-    val alphabet = (0 until 256).map(i => (0x4E00 + i).toChar)
-    var seed = 123456789L
-    def nextInt(n: Int): Int = {
-      seed = (seed * 6364136223846793005L + 1442695040888963407L)
-      (((seed >>> 33) % n + n) % n).toInt
-    }
-    val words = (0 until 400).map { _ =>
-      (0 until 24).map(_ => alphabet(nextInt(256))).mkString
-    }
-    val corpus = words.zipWithIndex
-      .map { case (w, i) => (i.toLong, w) }.toDF("doc_id", "text")
-    val m = CurationOps
-      .bpeTrainSampled(corpus, "text", 1000, batch = 64, sampleRate = 1.0)
-      .collect()
-    assert(m.length == 1000, s"trained ${m.length} merges")
-    val rounds = m.map(_.getInt(3)).max
-    info(s"1000 merges / batch 64 -> $rounds rounds (ideal 16)")
-    // the disjointness filter may under-fill some batches; the bound
-    // that matters is O(nMerges/batch), not O(nMerges)
-    assert(rounds <= 64, s"$rounds rounds for 1000 merges at batch=64")
   }
 
   test("BM25 matches the hand-computed Okapi formula") {
@@ -883,31 +831,6 @@ class TemporalCurationSpec extends AnyFunSuite with SparkTestBase {
       s"parity=$parity fast=$fast")
   }
 
-  test("compression ratio: repetitive text compresses below varied " +
-      "text; deterministic across partitionings; empty-safe") {
-    import spark.implicits._
-    val spam = ("buy now " * 400).trim
-    val varied = new scala.util.Random(9).alphanumeric.take(3200)
-      .grouped(4).map(_.mkString).mkString(" ")
-    val rows = Seq((1L, spam), (2L, varied), (3L, ""))
-    val r = CurationOps.compressionRatio(rows.toDF("doc_id", "text"),
-        "doc_id", "text")
-      .collect().map(x => x.getLong(0) ->
-        (x.getInt(1), x.getInt(2), x.getDouble(3))).toMap
-    assert(r(1L)._3 < 0.05, s"spam ratio ${r(1L)._3}")
-    assert(r(2L)._3 > 0.5, s"varied ratio ${r(2L)._3}")
-    assert(r(2L)._3 > 4 * r(1L)._3)
-    // empty text: ratio pins to 1.0; n_deflate is the zlib empty-
-    // stream envelope (header+trailer), not 0
-    assert(r(3L)._1 == 0 && r(3L)._3 == 1.0)
-    // partitioning must not change a per-row signal
-    val r13 = CurationOps.compressionRatio(
-        rows.toDF("doc_id", "text").repartition(13), "doc_id", "text")
-      .collect().map(x => x.getLong(0) ->
-        (x.getInt(1), x.getInt(2), x.getDouble(3))).toMap
-    assert(r13 == r)
-  }
-
   test("trailing z-score: self-excluded window, hand-computed values, " +
       "null below two trailing samples") {
     import spark.implicits._
@@ -943,6 +866,17 @@ class TemporalCurationSpec extends AnyFunSuite with SparkTestBase {
         depth = 3, width = 1, topK = 10)
       .collect().map(_.getLong(2))
     assert(one.nonEmpty && one.forall(_ == 7L))
+    // a candidate term the sketch never saw estimates 0 (left-join
+    // with absent buckets counting as zero), not a vanished row or a
+    // min over only the buckets it happens to collide into — pinned
+    // on a tiny sketch where empty buckets actually exist
+    val tinySketch = CurationOps.cmsSketch(
+      Seq((1L, "alpha beta")).toDF("doc_id", "text"), "text")
+    val u = CurationOps.cmsEstimate(
+        tinySketch, Seq("zz-never-in-corpus-zz").toDF("t"), "t")
+      .collect()
+    assert(u.length == 1 && u.head.getAs[Long]("est") == 0L,
+      s"unseen term must estimate 0, got ${u.toSeq}")
   }
 
   test("source KL: identical distributions give zero; skew is positive " +
