@@ -2,8 +2,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 object Bench {
+  /** Spark's checkpoint file manager for streaming state, offsets and
+    * commits, set in [[benchSession]]. */
+  val CheckpointFileManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+  val CheckpointFileManagerClass = "org.apache.spark.sql.execution.streaming." +
+    "checkpointing.FileSystemBasedCheckpointFileManager"
+
   /** Session tuned for benchmark/stress runs (shared with [[Verify]],
-    * [[ScaleStress]] and [[ExplainDump]]). */
+    * [[ScaleStress]], [[ExplainDump]] and
+    * [[graft.streaming.StreamingReplayMain]]). */
   def benchSession(cpus: String): SparkSession = SparkSession.builder()
     .master(s"local[$cpus]")
     .config("spark.sql.shuffle.partitions", cpus)
@@ -18,6 +25,17 @@ object Bench {
     // on small inputs (32-way here); at production scale files dwarf
     // maxPartitionBytes and this knob is inert.
     .config("spark.sql.files.openCostInBytes", "65536")
+    // Spark's default checkpoint manager renames through Hadoop's
+    // FileContext, and on `file:` (Hadoop 3.4) every such rename forks
+    // a `readlink` process for the source and for the destination, and
+    // again for the `.crc` file: about 40 forks of the JVM per
+    // micro-batch of a stateful stream, most of its state commit time.
+    // The FileSystem manager renames in-process. Safe here: the session
+    // is local only, and on `file:` FileContext's rename is itself a
+    // non-atomic check-then-rename, the guarantee the FileSystem
+    // manager's exists + rename gives. Spark's checksum sidecars and
+    // Hadoop's `.crc` files are written under either manager.
+    .config(CheckpointFileManagerKey, CheckpointFileManagerClass)
     .getOrCreate()
 
   def main(args: Array[String]): Unit = {

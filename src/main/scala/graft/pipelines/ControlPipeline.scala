@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.ScalarOps.{AccelGPerLsb, GyroDpsPerLsb}
 import graft.state._
 
 /** One raw IMU wire sample (FIXTURES.md §2): int16 register images at
@@ -76,13 +77,13 @@ object ControlPipeline {
     def gate(i: Int, raw: Array[Int], thr: Int): Boolean =
       raw(i) < thr && raw(i) > -thr
     val gyro = Vec3(
-      if (gate(0, gRaw, GyroPeakRej)) gRaw(0) * 0.0175 else st.gyro.x,
-      if (gate(1, gRaw, GyroPeakRej)) gRaw(1) * 0.0175 else st.gyro.y,
-      if (gate(2, gRaw, GyroPeakRej)) gRaw(2) * 0.0175 else st.gyro.z)
+      if (gate(0, gRaw, GyroPeakRej)) gRaw(0) * GyroDpsPerLsb else st.gyro.x,
+      if (gate(1, gRaw, GyroPeakRej)) gRaw(1) * GyroDpsPerLsb else st.gyro.y,
+      if (gate(2, gRaw, GyroPeakRej)) gRaw(2) * GyroDpsPerLsb else st.gyro.z)
     val accel = Vec3(
-      if (gate(0, gRaw, AccelPeakRej)) aRaw(0) * 0.000122 else st.accel.x,
-      if (gate(1, gRaw, AccelPeakRej)) aRaw(1) * 0.000122 else st.accel.y,
-      if (gate(2, gRaw, AccelPeakRej)) aRaw(2) * 0.000122 else st.accel.z)
+      if (gate(0, gRaw, AccelPeakRej)) aRaw(0) * AccelGPerLsb else st.accel.x,
+      if (gate(1, gRaw, AccelPeakRej)) aRaw(1) * AccelGPerLsb else st.accel.y,
+      if (gate(2, gRaw, AccelPeakRej)) aRaw(2) * AccelGPerLsb else st.accel.z)
 
     // T1: AHRS update
     val ahrs = Ahrs.update(st.ahrs, cfg.settings, gyro, accel, cfg.dt)

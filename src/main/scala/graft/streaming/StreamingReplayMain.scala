@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.pipelines.{ControlPipeline, RawImuSample}
@@ -10,7 +9,8 @@ import graft.state.AhrsSettings
   * sustain >= 3546 rows/s/key through AHRS+PID+transform — 1x the
   * reference's real-time sample rate): drives the
   * flatMapGroupsWithState pipeline through a MemoryStream in
-  * micro-batches and reports end-to-end rows/s.
+  * micro-batches and reports end-to-end rows/s, in the benchmark's
+  * session ([[graft.Bench.benchSession]]).
   *
   * Usage: runMain graft.streaming.StreamingReplayMain [devices] [samplesPerDevice] [batches]
   */
@@ -19,13 +19,7 @@ object StreamingReplayMain {
     val nDevices = if (args.length > 0) args(0).toInt else 4
     val perDevice = if (args.length > 1) args(1).toInt else 60000
     val nBatches = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-streaming-replay")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.benchSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

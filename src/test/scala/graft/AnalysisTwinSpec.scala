@@ -119,7 +119,7 @@ class AnalysisTwinSpec extends AnyFunSuite with SparkTestBase {
 
   private lazy val golden = GeneratedSessions.generate(41, 0)
   private lazy val goldenSamples = {
-    val dir = Files.createTempDirectory("graft-twin")
+    val dir = tempDir("twin")
     Files.writeString(dir.resolve("ORCLOG_000.CSV"), golden.text)
     SessionizedCsvReader.read(spark, dir.toString).cache()
   }

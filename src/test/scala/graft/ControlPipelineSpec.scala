@@ -1,8 +1,17 @@
 package graft
 
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
+import org.apache.spark.sql.{Dataset, SQLContext}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipelines.{ControlPipeline, RawImuSample}
+import graft.pipelines.{ControlOutput, ControlPipeline, RawImuSample}
 import graft.state.AhrsSettings
 
 /** Distributed-vs-sequential consistency for the stateful control
@@ -84,6 +93,66 @@ class ControlPipelineSpec extends AnyFunSuite with SparkTestBase {
     devices.foreach { d =>
       val g = got(d).sortBy(_.sample_idx).toVector
       assert(g == expected(d), s"$d streaming mismatch")
+    }
+  }
+
+  test("streaming replay restarted from its checkpoint equals sequential run") {
+    import spark.implicits._
+    implicit val sqlCtx: SQLContext = spark.sqlContext
+    // one-second batches (3546 samples at dt); the stop after two falls
+    // inside the 10 638-sample AHRS initialisation, so the restarted
+    // query must carry it on from the checkpointed state
+    val perBatch = 3546
+    val (before, after) = (2, 2)
+    val devs = Seq("dev-r0", "dev-r1")
+    val samples = devs.zipWithIndex.map { case (d, i) =>
+      d -> synth(d, perBatch * (before + after), seed = 77 + i)
+    }.toMap
+    def batch(b: Int): Seq[RawImuSample] =
+      devs.flatMap(d => samples(d).slice(b * perBatch, (b + 1) * perBatch))
+
+    val ckpt = tempDir("control-ckpt")
+    val input = MemoryStream[RawImuSample]
+    // the memory sink recovers from a checkpoint in Complete mode only,
+    // so each batch's id and outputs are collected here
+    val batches = new ConcurrentLinkedQueue[(Long, Array[ControlOutput])]()
+    val sink: (Dataset[ControlOutput], Long) => Unit =
+      (df, id) => batches.add((id, df.collect()))
+    def start() = ControlPipeline.replayStreaming(input.toDS(), cfg)
+      .writeStream.option("checkpointLocation", ckpt.toString)
+      .foreachBatch(sink).start()
+    def feed(q: StreamingQuery, bs: Range) =
+      bs.foreach { b => input.addData(batch(b)); q.processAllAvailable() }
+
+    val key = Bench.CheckpointFileManagerKey
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, Bench.CheckpointFileManagerClass)
+    try {
+      val q1 = start()
+      try feed(q1, 0 until before) finally q1.stop()
+      assert(batches.asScala.forall(_._2.isEmpty),
+        "outputs before the AHRS initialisation ends")
+      val q2 = start()
+      try feed(q2, before until before + after) finally q2.stop()
+      // the restart resumes at the checkpointed batch, and replays none
+      assert(batches.asScala.map(_._1).toSeq == (0L until before + after))
+
+      val got = batches.asScala.flatMap(_._2).toVector.groupBy(_.device_id)
+      devs.foreach { d =>
+        val e = ControlPipeline.runSequential(cfg, samples(d).iterator).toVector
+        assert(e.nonEmpty)
+        assert(got.getOrElse(d, Vector.empty).sortBy(_.sample_idx) == e,
+          s"$d restarted stream differs from the sequential run")
+      }
+      // every state delta has Spark's checksum sidecar
+      val deltas = Using.resource(Files.walk(ckpt.resolve("state")))(
+        _.iterator().asScala.filter(_.toString.endsWith(".delta")).toVector)
+      assert(deltas.nonEmpty)
+      deltas.foreach(p => assert(
+        Files.exists(p.resolveSibling(s"${p.getFileName}.crc")), s"$p has no checksum file"))
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
     }
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{OrcLogCsvWriter, SessionizedCsvReader}
@@ -13,7 +11,7 @@ class CsvWriterRoundTripSpec extends AnyFunSuite with SparkTestBase {
 
   test("golden CSV -> samples -> in-band CSV -> samples round-trips") {
     val orig = SessionizedCsvReader.read(spark, SessionizedCsvReader.GoldenCsv)
-    val dir = Files.createTempDirectory("graft-csvw").toString
+    val dir = tempDir("csvw").toString
     OrcLogCsvWriter.write(orig, dir)
     val back = SessionizedCsvReader.read(spark, dir)
 

@@ -24,8 +24,7 @@ class EpochIngestSpec extends AnyFunSuite with SparkTestBase {
   private lazy val slices = (0L to 2L).map(i =>
     docs.filter(col("doc_id") % 3L === i).localCheckpoint(false))
 
-  private def mkPath() = java.nio.file.Files
-    .createTempDirectory("graft-epoch-ingest").toString
+  private def mkPath() = tempDir("epoch-ingest").toString
 
   private def ingest(path: String, slice: Int, epoch: Long,
                      hook: EpochCommitLog.Hook = _ => ()): Unit =

@@ -373,8 +373,7 @@ class LexicalGraphAuditSpec extends AnyFunSuite with SparkTestBase {
     val scan = gpSet(DedupOps.prefixFilteredJaccardGroupPairs(
       docs, "doc_id", "text", n = 3, threshold = 0.3))
     // full build
-    val full = java.nio.file.Files.createTempDirectory("ndg-full")
-      .toString
+    val full = tempDir("ndg-full").toString
     NearDupGraphStore.write(spark, docs, "doc_id", "text", n = 3,
       baseT = 0.3, componentThresholds = Seq(0.3, 0.9), full)
     assert(gpSet(NearDupGraphStore.groupPairs(spark, full, 0.3)) == scan,
@@ -382,8 +381,7 @@ class LexicalGraphAuditSpec extends AnyFunSuite with SparkTestBase {
     // incremental: doc 1 (a twin of an already-stored text) arrives
     // late and must ride the old rep; doc 10's twin likewise; B's
     // second copy and the unique C arrive late too
-    val inc = java.nio.file.Files.createTempDirectory("ndg-inc")
-      .toString
+    val inc = tempDir("ndg-inc").toString
     NearDupGraphStore.write(spark,
       docs.filter(col("doc_id").isin(5L, 9L, 2L, 8L)),
       "doc_id", "text", n = 3, baseT = 0.3,
@@ -518,8 +516,7 @@ class LexicalGraphAuditSpec extends AnyFunSuite with SparkTestBase {
     import graft.sources.InvertedIndexStore
     val docs = graft.core.Tables.load(spark, sf("sf0.001"), "documents")
       .select(col("doc_id"), col("text"))
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-inv-spec").toString
+    val path = tempDir("inv-spec").toString
     val terms = Seq("data", "query", "window")
     InvertedIndexStore.write(spark, docs.filter(col("doc_id") < 300),
       "doc_id", "text", nShards = 16, path)
@@ -567,8 +564,7 @@ class LexicalGraphAuditSpec extends AnyFunSuite with SparkTestBase {
     val docs = Seq((1L, a), (5L, a), (2L, b), (7L, c))
       .toDF("doc_id", "text")
     // --- NearDupGraphStore: write + append accumulate delta files
-    val ndg = java.nio.file.Files
-      .createTempDirectory("ndg-compact").toString
+    val ndg = tempDir("ndg-compact").toString
     NearDupGraphStore.write(spark,
       docs.filter(col("doc_id").isin(1L, 2L)), "doc_id", "text",
       n = 3, baseT = 0.3, componentThresholds = Seq(0.4), ndg)
@@ -602,8 +598,7 @@ class LexicalGraphAuditSpec extends AnyFunSuite with SparkTestBase {
     assert(sizesAfter == Seq(1L, 1L, 3L),
       s"post-compaction append must land: $sizesAfter")
     // --- InvertedIndexStore: same contract
-    val inv = java.nio.file.Files
-      .createTempDirectory("inv-compact").toString
+    val inv = tempDir("inv-compact").toString
     InvertedIndexStore.write(spark,
       docs.filter(col("doc_id") <= 2L), "doc_id", "text",
       nShards = 8, inv)
@@ -640,8 +635,7 @@ class LexicalGraphAuditSpec extends AnyFunSuite with SparkTestBase {
     val fs = new Path("/tmp").getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     def freshStore(): String = {
-      val d = java.nio.file.Files
-        .createTempDirectory("swap-crash").toString + "/sub"
+      val d = tempDir("swap-crash").toString + "/sub"
       // 4 one-row files: a store subdir with compactable small files
       spark.range(4).selectExpr("id", "id * 10 AS v")
         .repartition(4).write.parquet(d)

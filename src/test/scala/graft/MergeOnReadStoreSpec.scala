@@ -11,10 +11,8 @@ import graft.sources.MergeOnReadStore
 class MergeOnReadStoreSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
-  private def freshPath(tag: String): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft-mor-spec-$tag"
-    p
-  }
+  private def freshPath(tag: String): String =
+    tempDir(s"mor-spec-$tag").resolve("store").toString
 
   private def snapshot(path: String): Map[Long, String] =
     MergeOnReadStore.read(spark, "k", path).collect()

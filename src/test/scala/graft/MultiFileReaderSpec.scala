@@ -71,7 +71,7 @@ class MultiFileReaderSpec extends AnyFunSuite with SparkTestBase {
   }
 
   private lazy val generatedDir: String = {
-    val d = Files.createTempDirectory("graft-genlogs")
+    val d = tempDir("genlogs")
     val rnd = new scala.util.Random(7)
     write(d.resolve("a_lf.csv"), session(rnd, 1001, 3, 150).mkString("", "\n", "\n"))
     write(d.resolve("b_crlf.csv"),
@@ -160,7 +160,7 @@ class MultiFileReaderSpec extends AnyFunSuite with SparkTestBase {
     (0 until 3000).foreach(i => sb.append(s"$i.1, 0.2, 0.3\n"))
     sb.append("Log Paused, now resuming:\n")
     (0 until 2000).foreach(i => sb.append(s"$i.2, 0.4, 0.5\n"))
-    val path = Files.createTempDirectory("malformed").resolve("mal.csv")
+    val path = tempDir("malformed").resolve("mal.csv")
     write(path, sb.toString)
     val got = withTinySplits(8 * 1024)(assertSameRows(path.toString))
     assert(got.length == 5000)
@@ -169,7 +169,7 @@ class MultiFileReaderSpec extends AnyFunSuite with SparkTestBase {
   }
 
   private lazy val goldenDir: String = {
-    val d = Files.createTempDirectory("graft-multilog")
+    val d = tempDir("multilog")
     Files.copy(Paths.get(SessionizedCsvReader.GoldenCsv),
       d.resolve("a.csv"), StandardCopyOption.REPLACE_EXISTING)
     write(d.resolve("b.csv"),

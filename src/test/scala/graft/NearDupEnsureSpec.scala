@@ -19,8 +19,7 @@ class NearDupEnsureSpec extends AnyFunSuite with SparkTestBase {
     val a = "the quick brown fox jumps over the lazy dog today"
     val b = "the quick brown fox jumps over the lazy cat today"
     val docs = Seq((1L, a), (2L, b)).toDF("doc_id", "text")
-    val root = java.nio.file.Files
-      .createTempDirectory("ndg-ensure-race").toString
+    val root = tempDir("ndg-ensure-race").toString
     def view(d: String): Set[(Long, Long, Long)] =
       NearDupGraphStore.groupPairs(spark, d, 0.3).collect()
         .map(r => (r.getLong(0), r.getLong(1),

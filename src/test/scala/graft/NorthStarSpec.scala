@@ -331,8 +331,7 @@ class NorthStarSpec extends AnyFunSuite with SparkTestBase {
   test("IVF index store: frozen quantizer, findable delta, " +
       "partition-pruned search") {
     import graft.sources.IvfVectorStore
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-ivf-spec").toString
+    val path = tempDir("ivf-spec").toString
     val old = emb.filter(col("vec_id") < 400)
     IvfVectorStore.write(spark, old, "vec_id", "embedding", 16, path)
     val centsBefore = spark.read.parquet(s"$path/centroids")
@@ -369,8 +368,7 @@ class NorthStarSpec extends AnyFunSuite with SparkTestBase {
   test("IVF exact search: searchTopKExact == brute force at a " +
       "deliberately low nProbes; scans stay partition-pruned") {
     import graft.sources.IvfVectorStore
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-ivf-exact-spec").toString
+    val path = tempDir("ivf-exact-spec").toString
     IvfVectorStore.write(spark, emb.filter(col("vec_id") < 400),
       "vec_id", "embedding", 16, path)
     IvfVectorStore.append(spark, emb.filter(col("vec_id") >= 400),

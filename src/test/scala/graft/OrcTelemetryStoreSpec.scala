@@ -31,7 +31,7 @@ class OrcTelemetryStoreSpec extends AnyFunSuite with SparkTestBase {
 
   test("each written ORC file is run-ordered; read returns the written " +
       "rows; arm filters prune directories") {
-    val in = Files.createTempDirectory("graft-orc-in")
+    val in = tempDir("orc-in")
     // two logs; their enabled blocks share log id 4242, so both land in
     // one directory, with overlapping run ids
     val a = GeneratedSessions.generate(43, 0, IndexedSeq(300, 200, 250), Some((4242, 1717)))
@@ -40,7 +40,7 @@ class OrcTelemetryStoreSpec extends AnyFunSuite with SparkTestBase {
     Files.writeString(in.resolve("ORCLOG_B.CSV"), b.text)
     val samples = SessionizedCsvReader.read(spark, in.toString).cache()
     try {
-      val out = Files.createTempDirectory("graft-orc-out").resolve("store").toString
+      val out = tempDir("orc-out").resolve("store").toString
       OrcTelemetryStore.write(samples, out)
 
       val files = orcFiles(out)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +13,7 @@ import graft.streaming.StreamingPipelines
 class StorageStreamingSpec extends AnyFunSuite with SparkTestBase {
 
   test("ORC telemetry store round-trips the golden CSV with pruning") {
-    val dir = Files.createTempDirectory("graft-orc").toString
+    val dir = tempDir("orc").toString
     OrcTelemetryStore.ingestCsv(spark, SessionizedCsvReader.GoldenCsv, dir)
     val back = OrcTelemetryStore.read(spark, dir)
     assert(back.count() == 128960)
@@ -72,8 +70,7 @@ class StorageStreamingSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     import graft.sources.IvfVectorStore
     val emb = Tables.load(spark, sf("sf0.01"), "embeddings")
-    val mkPath = () => java.nio.file.Files
-      .createTempDirectory("graft-ivf-stream").toString
+    val mkPath = () => tempDir("ivf-stream").toString
     val (batchPath, streamPath) = (mkPath(), mkPath())
     val old = emb.filter(col("vec_id") < 400)
     IvfVectorStore.write(spark, old, "vec_id", "embedding", 16, batchPath)
@@ -120,8 +117,7 @@ class StorageStreamingSpec extends AnyFunSuite with SparkTestBase {
     val docs = Tables.load(spark, sf("sf0.01"), "documents")
       .filter(col("doc_id") < 240)
       .select(col("doc_id"), col("text"))
-    val mkPath = () => java.nio.file.Files
-      .createTempDirectory("graft-ndg-stream").toString
+    val mkPath = () => tempDir("ndg-stream").toString
     val (batchPath, streamPath, ckpt) = (mkPath(), mkPath(), mkPath())
     NearDupGraphStore.write(spark, docs, "doc_id", "text",
       n = 3, baseT = 0.3, componentThresholds = Seq(0.4), batchPath)
@@ -196,8 +192,7 @@ class StorageStreamingSpec extends AnyFunSuite with SparkTestBase {
       "file count drops, cellstats pre-folded, appends still land") {
     import graft.sources.{IvfVectorStore, StoreCompaction}
     val emb = Tables.load(spark, sf("sf0.01"), "embeddings")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-ivf-compact").toString
+    val path = tempDir("ivf-compact").toString
     IvfVectorStore.write(spark, emb.filter(col("vec_id") < 300),
       "vec_id", "embedding", 16, path)
     // two delta ingests: one file set per cell dir + one cellstats
@@ -341,8 +336,8 @@ class StorageStreamingSpec extends AnyFunSuite with SparkTestBase {
   test("streaming CSV log sink writes micro-batched files") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val out = Files.createTempDirectory("graft-csvsink").toString
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    val out = tempDir("csvsink").toString
+    val ckpt = tempDir("ckpt").toString
     val input = MemoryStream[(Long, Double, Double, Double)]
     val q = StreamingPipelines.csvLogSink(
         input.toDF().toDF("sample_idx", "acceleration_g", "pitch_deg", "roll_deg"),

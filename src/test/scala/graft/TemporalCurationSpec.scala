@@ -782,7 +782,7 @@ class TemporalCurationSpec extends AnyFunSuite with SparkTestBase {
     val old = d.filter(col("doc_id") < 150)
     val delta = d.filter(col("doc_id") >= 150)
     // persist the signature table and read it back — the store path
-    val dir = java.nio.file.Files.createTempDirectory("sigstore").toString
+    val dir = tempDir("sigstore").toString
     DedupOps.minhashSignatureTable(old, "doc_id", "text", 2, 8)
       .write.mode("overwrite").parquet(dir)
     val stored = spark.read.parquet(dir)

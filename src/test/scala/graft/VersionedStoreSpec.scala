@@ -19,8 +19,7 @@ class VersionedStoreSpec extends AnyFunSuite with SparkTestBase {
 
   test("commit TOCTOU: a racing builder landing between the " +
       "exists-probe and the rename cannot strand a nested scratch") {
-    val root = java.nio.file.Files
-      .createTempDirectory("vstore-toctou").toString
+    val root = tempDir("vstore-toctou").toString
     def stage(tag: String): String = {
       val scratch = VersionedStore.scratchDir(root, "fp")
       Seq((1L, tag)).toDF("id", "who").coalesce(1)
@@ -54,8 +53,7 @@ class VersionedStoreSpec extends AnyFunSuite with SparkTestBase {
       "stale scratch swept only past the grace window") {
     val a = "the quick brown fox jumps over the lazy dog today"
     val b = "the quick brown fox jumps over the lazy cat today"
-    val root = java.nio.file.Files
-      .createTempDirectory("vstore-prune").toString
+    val root = tempDir("vstore-prune").toString
     def corpus(ids: Long*) =
       ids.map(i => (i, if (i % 2 == 0) a else b))
         .toDF("doc_id", "text")
@@ -102,8 +100,7 @@ class VersionedStoreSpec extends AnyFunSuite with SparkTestBase {
       "lands a NEW version with the old still searchable") {
     val emb = Tables.load(spark, sf("sf0.001"), "embeddings")
     val small = emb.filter(col("vec_id") < 200).localCheckpoint(false)
-    val root = java.nio.file.Files
-      .createTempDirectory("ivf-ensure-race").toString
+    val root = tempDir("ivf-ensure-race").toString
     def search(d: String): Set[(Long, Long, Long)] =
       IvfVectorStore.searchTopK(spark, d,
           small.filter(col("vec_id") < 6), "vec_id", "embedding",
