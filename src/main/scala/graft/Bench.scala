@@ -8,9 +8,10 @@ object Bench {
   val CheckpointFileManagerClass = "org.apache.spark.sql.execution.streaming." +
     "checkpointing.FileSystemBasedCheckpointFileManager"
 
-  /** Session tuned for benchmark/stress runs (shared with [[Verify]],
-    * [[ScaleStress]], [[ExplainDump]] and
-    * [[graft.streaming.StreamingReplayMain]]). */
+  /** Session tuned for benchmark/stress runs, and the one session
+    * recipe of every main in `src/main` ([[Verify]], [[ScaleStress]],
+    * [[PlanAudit]], [[ExplainDump]] and the pipeline, ingest and
+    * streaming mains). */
   def benchSession(cpus: String): SparkSession = SparkSession.builder()
     .master(s"local[$cpus]")
     .config("spark.sql.shuffle.partitions", cpus)
@@ -82,9 +83,10 @@ object Bench {
       name -> (outcome, (System.nanoTime() - t0) / 1e9)
     }
 
-  /** Full JSON string escaping (same contract as Verify's q()): any
-    * control char < 0x20 in a Spark error message — not just \n\r\t —
-    * would otherwise emit invalid JSON and zero the round's bench. */
+  /** Full JSON string escaping (shared with [[Verify]] and
+    * [[ScaleStress]]): any control char < 0x20 in a Spark error message
+    * or oracle SQL — not just \n\r\t — would otherwise emit invalid
+    * JSON and zero the round's bench or correctness. */
   def jstr(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
@@ -117,8 +119,8 @@ object Bench {
         df.write.format("noop").mode("overwrite").save()
       noop(graft.operators.DedupOps.minhashLshDedup(docs, "doc_id", "text",
         shingleN = 2, k = 16, bands = 16, threshold = 0.1))
-      noop(graft.operators.DedupOps.simhashNearDup(docs, "doc_id", "text",
-        maxHamming = 24))
+      noop(graft.operators.DedupOps.simhashNearDupParity(docs, "doc_id",
+        "text", maxHamming = 8))
       noop(graft.operators.DedupOps.minhashLshDedupParity(docs, "doc_id",
         "text", shingleN = 2, k = 8, bands = 4, threshold = 0.2))
       val emb = graft.core.Tables.load(spark, sfDir, "embeddings").limit(32)

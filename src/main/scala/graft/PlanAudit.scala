@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-health sweep over every declared query: counts the physical
   * operators that decide 100 TB viability (exchanges, join strategies,
   * cartesian products, whole-stage-codegen spans) and writes a
@@ -19,15 +17,7 @@ object PlanAudit {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLAN_AUDIT.md")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.core.Tables.NanosAsLongKey, "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .getOrCreate()
+    val spark = Bench.benchSession(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     def n(p: String, pat: String): Int = pat.r.findAllIn(p).size

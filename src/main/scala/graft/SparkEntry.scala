@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.queries.{NorthStar, RoundEleven, RoundNine, RoundTen, TierA}
+import graft.queries.{NorthStar, Query, RoundEleven, RoundNine, RoundTen, TierA}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -18,14 +18,24 @@ object SparkEntry {
     * rows>0. Revenue by nation — multi-way join with broadcast dims
     * plus partial+final aggregation (SURVEY §2.9 Q13). */
   def entry(spark: SparkSession): DataFrame =
-    TierA.all("q13_join_agg")(spark, "/root/testdata/sf0.001")
+    queries("q13_join_agg")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2, plus the
-    * north-star training-data-pipeline ops (dedup / similarity / text /
-    * multimodal). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    TierA.all ++ NorthStar.all ++ RoundNine.all ++ RoundTen.all ++
-      RoundEleven.all
+  /** Every declared query, each name once: one entry per implemented
+    * operator from SURVEY.md §2, plus the north-star
+    * training-data-pipeline ops (dedup / similarity / text /
+    * multimodal). Fails on first use if a name is declared twice. */
+  lazy val registry: Seq[Query] = {
+    val all = TierA.queries ++ NorthStar.queries ++ RoundNine.queries ++
+      RoundTen.queries ++ RoundEleven.queries
+    val repeated = all.groupBy(_.name).collect {
+      case (name, qs) if qs.size > 1 => name }
+    require(repeated.isEmpty,
+      s"query names declared more than once: ${repeated.toSeq.sorted.mkString(", ")}")
+    all
+  }
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
 
   /** The queries whose name contains any entry of the comma-separated
     * `filter` (`SPARK_GRAFT_ONLY`, or `ExplainDump`'s names argument).
@@ -42,8 +52,7 @@ object SparkEntry {
   }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    TierA.oracle ++ NorthStar.oracle ++ RoundNine.oracle ++
-      RoundTen.oracle ++ RoundEleven.oracle
+    * the same parquet tables. */
+  lazy val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracle).toMap
 }

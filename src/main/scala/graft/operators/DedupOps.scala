@@ -835,47 +835,42 @@ object DedupOps {
     verifyJaccard(cand, shSz, "hs", threshold)
   }
 
-  /** 64-bit SimHash signatures computed relationally: explode tokens,
-    * xxhash64 each once, then 64 conditional-sum aggregate columns
-    * (whole-stage-codegen'd) — an order of magnitude faster than the
-    * equivalent nested-lambda array expression, which Spark interprets
-    * per element. Each token votes +1/-1 per bit of its xxhash64;
-    * bit b of `sim` is set iff its vote sum is positive. A null text
-    * produces no row. */
-  def simhashSignatures(df: DataFrame, idCol: String, textCol: String)
+  /** 32-bit SimHash signatures computed relationally: explode tokens,
+    * hash each once with md5 (first 8 hex digits as an integer, so any
+    * engine with md5 reproduces the exact signature), then 32
+    * conditional-sum aggregate columns (whole-stage-codegen'd) — an
+    * order of magnitude faster than the equivalent nested-lambda array
+    * expression, which Spark interprets per element. Each token votes
+    * +1/-1 per bit of its hash; bit b of `sim` is set iff its vote sum
+    * is positive. All arithmetic is integral, so DuckDB parity is
+    * exact, not fp-lucky. A null text produces no row. */
+  def simhashParitySignatures(df: DataFrame, idCol: String, textCol: String)
       : DataFrame = {
     val tok = df
       .select(col(idCol).as("doc_id"),
         explode(TextOps.tokens(col(textCol))).as("t"))
-      .select(col("doc_id"), xxhash64(col("t")).as("h"))
-    val voteCols = (0 until 64).map(b =>
+      .select(col("doc_id"), CurationOps.md5Hash32(col("t")).as("h"))
+    val voteCols = (0 until 32).map(b =>
       sum(when(shiftright(col("h"), b).bitwiseAND(1) === 1, 1).otherwise(-1))
         .as(s"b$b"))
     tok.groupBy(col("doc_id"))
       .agg(voteCols.head, voteCols.tail: _*)
       .select(col("doc_id"),
-        (0 until 64).map(b =>
+        (0 until 32).map(b =>
           when(col(s"b$b") > 0, shiftleft(lit(1L), b)).otherwise(0L))
           .reduce(_ bitwiseOR _).as("sim"))
   }
 
-  /** SimHash near-dup candidates: 64-bit fingerprints band-matched in 4
-    * 16-bit bands (any shared band => candidate; catches pairs within
-    * Hamming distance 3 with certainty, more probabilistically), then
-    * verified by exact Hamming distance <= maxHamming. */
-  def simhashNearDup(df: DataFrame, idCol: String, textCol: String,
-                     maxHamming: Int = 3): DataFrame =
-    simhashBandVerify(simhashSignatures(df, idCol, textCol),
-      nBands = 4, maxHamming)
-
-  /** Band-match + Hamming-verify tail shared by the 64-bit xxhash64
-    * and 32-bit md5 SimHash variants: 16-bit bands (any shared band =>
-    * candidate), then exact Hamming distance filter. */
-  private def simhashBandVerify(sig: DataFrame, nBands: Int,
-                                maxHamming: Int): DataFrame = {
-    val banded = sig.select(col("doc_id"), col("sim"),
-      posexplode(array((0 until nBands).map(b =>
-        shiftright(col("sim"), b * 16).bitwiseAND(0xFFFFL)): _*)))
+  /** Oracle-parity SimHash near-dup candidates over
+    * [[simhashParitySignatures]]: the 32-bit fingerprints band-matched
+    * in 2 16-bit bands (any shared band => candidate), then verified by
+    * exact Hamming distance <= maxHamming. */
+  def simhashNearDupParity(df: DataFrame, idCol: String, textCol: String,
+                           maxHamming: Int): DataFrame = {
+    val banded = simhashParitySignatures(df, idCol, textCol)
+      .select(col("doc_id"), col("sim"),
+        posexplode(array((0 until 2).map(b =>
+          shiftright(col("sim"), b * 16).bitwiseAND(0xFFFFL)): _*)))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "bucket")
     // Pair expansion as an equi-join on (band, bucket) rather than the
@@ -909,30 +904,6 @@ object DedupOps {
         bit_count(col("sim1").bitwiseXOR(col("sim2"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
-  }
-
-  /** Oracle-parity SimHash near-dup: 32-bit fingerprints from md5
-    * token hashes (first 8 hex digits as an integer) instead of
-    * xxhash64, so any engine with md5 reproduces the exact signature —
-    * the DuckDB-checkable twin of [[simhashNearDup]]. Same relational
-    * vote aggregation, 2 16-bit bands, exact-Hamming verify; all
-    * arithmetic is integral, so parity is exact, not fp-lucky. */
-  def simhashNearDupParity(df: DataFrame, idCol: String, textCol: String,
-                           maxHamming: Int): DataFrame = {
-    val tok = df
-      .select(col(idCol).as("doc_id"),
-        explode(TextOps.tokens(col(textCol))).as("t"))
-      .select(col("doc_id"), CurationOps.md5Hash32(col("t")).as("h"))
-    val voteCols = (0 until 32).map(b =>
-      sum(when(shiftright(col("h"), b).bitwiseAND(1) === 1, 1).otherwise(-1))
-        .as(s"b$b"))
-    val sig = tok.groupBy(col("doc_id"))
-      .agg(voteCols.head, voteCols.tail: _*)
-      .select(col("doc_id"),
-        (0 until 32).map(b =>
-          when(col(s"b$b") > 0, shiftleft(lit(1L), b)).otherwise(0L))
-          .reduce(_ bitwiseOR _).as("sim"))
-    simhashBandVerify(sig, nBands = 2, maxHamming)
   }
 
   /** Cross-corpus contamination detection (benchmark decontamination):

@@ -788,7 +788,7 @@ object SimilarityOps {
       .localCheckpoint(false)
     // Pair expansion as an equi-join on (band, bucket) with the
     // bucket-size cap as a semi-filter — same r5 rewrite as the
-    // simhash tail (DedupOps.simhashBandVerify): the former
+    // simhash tail (DedupOps.simhashNearDupParity): the former
     // collect_list + combinations expression materialized up to
     // C(maxBucketSize, 2) pair structs as ONE array value pinned to
     // one task; the join streams pairs, parallelizes hot buckets by

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *
   * Determinism note: fingerprints use md5 (identical across engines)
   * rather than xxhash64 so results are oracle-checkable; use
-  * [[DedupOps.simhashSignatures]] (xxhash64-based) where raw speed
+  * [[DedupOps.minhashLshDedup]] (xxhash64-based) where raw speed
   * matters more than cross-engine parity.
   */
 object TextOps {

@@ -1,7 +1,5 @@
 package graft.pipelines
 
-import org.apache.spark.sql.SparkSession
-
 import graft.state.AhrsSettings
 
 /** CLI replay of the control loop over a synthetic multi-device raw
@@ -16,12 +14,7 @@ object ControlReplayMain {
     val nDevices = if (args.length > 0) args(0).toInt else 8
     val perDevice = if (args.length > 1) args(1).toInt else 100000
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-control-replay")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.benchSession(cpus)
     import spark.implicits._
 
     val dt = 0.000282

@@ -249,12 +249,7 @@ object OfflineAnalytics {
 object OfflineAnalyticsMain {
   def main(args: Array[String]): Unit = {
     val csv = if (args.nonEmpty) args(0) else SessionizedCsvReader.GoldenCsv
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-offline-analytics")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.benchSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     val analyses = Seq(
       ("Acceleration [g]", "acceleration_g", false),
       ("Pitch [deg]", "pitch_deg", false),

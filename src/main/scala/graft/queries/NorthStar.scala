@@ -13,10 +13,10 @@ import graft.sources.{InvertedIndexStore, IvfVectorStore, NearDupGraphStore}
   * sampling — over the `documents`, `embeddings`, and `events`
   * tables. Every declared query carries a DuckDB oracle — including
   * the near-dup families (q26/q27 declare the cross-engine md5-parity
-  * constructions; the xxhash64 fast paths stay the library defaults,
-  * spec-covered in DedupOpsSpec) and the Welch p-value (q34 — the
-  * incomplete-beta continued fraction is replayed in a DuckDB
-  * recursive CTE).
+  * constructions; MinHash's xxhash64 fast path stays the library
+  * default, spec-covered in NorthStarSpec) and the Welch p-value
+  * (q34 — the incomplete-beta continued fraction is replayed in a
+  * DuckDB recursive CTE).
   */
 object NorthStar {
   /** Marker words drawn from the synthetic corpus vocabulary — the
@@ -90,7 +90,7 @@ object NorthStar {
   // signature path so DuckDB can replay it exactly (q47 covers the
   // same construction on a fixed slice). The xxhash64 fast path stays
   // the library default (DedupOps.minhashLshDedup) and is covered by
-  // the recall-vs-exact spec in DedupOpsSpec — it has no cross-engine
+  // the recall-vs-exact spec in NorthStarSpec — it has no cross-engine
   // oracle because DuckDB lacks xxhash64.
   private val q26: Q = (s, dir) => {
     DedupOps.minhashLshDedupParity(t(s, dir, "documents"), "doc_id",
@@ -100,9 +100,7 @@ object NorthStar {
   }
 
   // q27 — SimHash near-dup candidates over the FULL corpus, 32-bit
-  // md5 fingerprint path for cross-engine parity (q48 = fixed slice).
-  // The xxhash64 64-bit fast path remains the library default,
-  // spec-covered in DedupOpsSpec.
+  // md5 fingerprints for cross-engine parity (q48 = fixed slice).
   private val q27: Q = (s, dir) => {
     DedupOps.simhashNearDupParity(t(s, dir, "documents"), "doc_id",
         "text", maxHamming = 8)
@@ -324,8 +322,7 @@ object NorthStar {
 
   // q48 — oracle-parity SimHash near-dup on the fixed doc_id < 250
   // slice (32-bit md5 fingerprints; q27 runs the same construction
-  // over the full corpus — the 64-bit xxhash64 fast path lives in
-  // DedupOps.simhashNearDup, spec-covered in DedupOpsSpec).
+  // over the full corpus).
   private val q48: Q = (s, dir) => {
     DedupOps.simhashNearDupParity(
         t(s, dir, "documents").filter(col("doc_id") < 250),
@@ -7952,363 +7949,6 @@ object NorthStar {
           col("n_closure_pairs").cast("double")).as("gap_e6"))
       .ordered(col("n_direct_pairs"))
   }
-
-  val all: Map[String, Q] = Map(
-    "q383_store_append" -> q383,
-    "q382_store_clusters" -> q382,
-    "q381_store_sweep" -> q381,
-    "q380_bloom_agg_join" -> q380,
-    "q379_label_separation" -> q379,
-    "q378_status_grid" -> q378,
-    "q377_supplier_hhi" -> q377,
-    "q376_segment_margin" -> q376,
-    "q375_gate_attribution" -> q375,
-    "q374_copurchase_centrality" -> q374,
-    "q373_shingle_df_tail" -> q373,
-    "q372_rare_shingle_leakage" -> q372,
-    "q371_minhash_k_sensitivity" -> q371,
-    "q370_keep_policy" -> q370,
-    "q369_sampled_dup_rate" -> q369,
-    "q368_transitivity_audit" -> q368,
-    "q367_context_window_fit" -> q367,
-    "q366_dedup_threshold_sweep" -> q366,
-    "q365_winsor_sweep" -> q365,
-    "q364_purchase_reach" -> q364,
-    "q363_pacf_check" -> q363,
-    "q362_cochran_armitage" -> q362,
-    "q361_brier_decomp" -> q361,
-    "q360_cox_stuart" -> q360,
-    "q359_mase_eval" -> q359,
-    "q358_source_dedup_matrix" -> q358,
-    "q357_pair_rouge" -> q357,
-    "q356_beta_binomial" -> q356,
-    "q355_yuen_trimmed_t" -> q355,
-    "q354_grubbs_test" -> q354,
-    "q353_negbin_fit" -> q353,
-    "q352_chow_test" -> q352,
-    "q351_atkinson_index" -> q351,
-    "q350_cronbach_alpha" -> q350,
-    "q349_markov_homogeneity" -> q349,
-    "q348_chapman_kolmogorov" -> q348,
-    "q347_gap_episodes" -> q347,
-    "q346_markov_loglik" -> q346,
-    "q345_cramers_v" -> q345,
-    "q344_dwell_time" -> q344,
-    "q343_bh_fdr" -> q343,
-    "q342_mcnemar" -> q342,
-    "q341_page_hinkley" -> q341,
-    "q340_episode_trigrams" -> q340,
-    "q339_durbin_watson" -> q339,
-    "q338_markov_chain" -> q338,
-    "q337_shift_share" -> q337,
-    "q336_het_test" -> q336,
-    "q335_topsis_rank" -> q335,
-    "q334_score_cindex" -> q334,
-    "q333_jarque_bera" -> q333,
-    "q332_runs_test" -> q332,
-    "q331_mann_kendall" -> q331,
-    "q330_price_index" -> q330,
-    "q329_design_effect" -> q329,
-    "q328_max_drawdown" -> q328,
-    "q327_kendall_tau" -> q327,
-    "q326_capture_recapture" -> q326,
-    "q325_gumbel_maxima" -> q325,
-    "q324_mutual_information" -> q324,
-    "q323_effect_sizes" -> q323,
-    "q322_newsvendor" -> q322,
-    "q321_price_stickiness" -> q321,
-    "q320_audience_overlap" -> q320,
-    "q319_knee_detection" -> q319,
-    "q318_abc_xyz" -> q318,
-    "q317_theil_sen" -> q317,
-    "q316_basket_diversity" -> q316,
-    "q315_position_attribution" -> q315,
-    "q314_churn_hazard" -> q314,
-    "q313_lag_xcorr" -> q313,
-    "q312_bowley_iqr" -> q312,
-    "q311_pareto_frontier" -> q311,
-    "q310_qq_normality" -> q310,
-    "q309_adf_quickcheck" -> q309,
-    "q308_peak_days" -> q308,
-    "q307_em_step" -> q307,
-    "q306_did_estimate" -> q306,
-    "q305_sprt_monitor" -> q305,
-    "q304_levene_test" -> q304,
-    "q303_simpson_audit" -> q303,
-    "q302_ece_calibration" -> q302,
-    "q301_fleiss_kappa" -> q301,
-    "q300_negative_sampling" -> q300,
-    "q299_qte_deciles" -> q299,
-    "q298_binseg_break" -> q298,
-    "q297_hurst_exponent" -> q297,
-    "q296_lorenz_gini" -> q296,
-    "q295_brand_switching" -> q295,
-    "q294_completeness_audit" -> q294,
-    "q293_growth_accounting" -> q293,
-    "q292_uncertainty_audit" -> q292,
-    "q291_decay_popularity" -> q291,
-    "q290_conformal_interval" -> q290,
-    "q289_sma_crossover" -> q289,
-    "q288_holt_winters" -> q288,
-    "q287_aging_buckets" -> q287,
-    "q286_kfold_assign" -> q286,
-    "q285_readability" -> q285,
-    "q284_streak_hist" -> q284,
-    "q283_gains_table" -> q283,
-    "q282_bimodality" -> q282,
-    "q281_whale_share" -> q281,
-    "q280_poisson_bootstrap" -> q280,
-    "q279_gaussian_nb" -> q279,
-    "q278_kde_profile" -> q278,
-    "q277_dup_invoices" -> q277,
-    "q276_adamic_adar" -> q276,
-    "q275_backtest" -> q275,
-    "q274_auc_rank" -> q274,
-    "q273_price_heatmap" -> q273,
-    "q272_order_size_dispersion" -> q272,
-    "q271_entry_conversion" -> q271,
-    "q270_two_way_anova" -> q270,
-    "q269_weighted_median" -> q269,
-    "q268_late_lines" -> q268,
-    "q267_nb_confusion" -> q267,
-    "q266_new_vs_repeat" -> q266,
-    "q265_migration_matrix" -> q265,
-    "q264_volatility" -> q264,
-    "q263_pattern_sessions" -> q263,
-    "q262_revenue_spine" -> q262,
-    "q261_integrity_audit" -> q261,
-    "q260_robust_means" -> q260,
-    "q259_sigma_coverage" -> q259,
-    "q258_heldout_xent" -> q258,
-    "q257_spearman" -> q257,
-    "q256_corr_matrix" -> q256,
-    "q255_good_turing" -> q255,
-    "q254_stump_split" -> q254,
-    "q253_elasticity" -> q253,
-    "q252_jsd_drift" -> q252,
-    "q251_ab_sig" -> q251,
-    "q250_transition_entropy" -> q250,
-    "q249_scd2_intervals" -> q249,
-    "q248_rev_bridge" -> q248,
-    "q247_dow_decompose" -> q247,
-    "q246_power_analysis" -> q246,
-    "q245_trigram_coverage" -> q245,
-    "q244_degree_hist" -> q244,
-    "q243_churn_label" -> q243,
-    "q242_theil_index" -> q242,
-    "q241_hill_tail" -> q241,
-    "q240_session_paths" -> q240,
-    "q239_assortativity" -> q239,
-    "q238_returns_by_brand" -> q238,
-    "q237_bfs_dist" -> q237,
-    "q236_dow_hour_heatmap" -> q236,
-    "q235_hhi_concentration" -> q235,
-    "q234_ltv_curve" -> q234,
-    "q233_mor_snapshot" -> q233,
-    "q232_order_gaps" -> q232,
-    "q231_binary_eval" -> q231,
-    "q230_ship_lag" -> q230,
-    "q229_stickiness" -> q229,
-    "q228_agg_merge" -> q228,
-    "q227_rolling_dau" -> q227,
-    "q226_pareto_abc" -> q226,
-    "q225_rfm_segments" -> q225,
-    "q224_card_est" -> q224,
-    "q223_skew_advisor" -> q223,
-    "q222_holt_forecast" -> q222,
-    "q221_ipw_estimate" -> q221,
-    "q220_dow_seasonality" -> q220,
-    "q219_daily_acf" -> q219,
-    "q218_compaction_plan" -> q218,
-    "q217_kaplan_meier" -> q217,
-    "q216_basket_lift" -> q216,
-    "q215_mann_whitney" -> q215,
-    "q214_ols_lines_price" -> q214,
-    "q213_cramers_v" -> q213,
-    "q212_snake_shards" -> q212,
-    "q211_cuped" -> q211,
-    "q210_exp_fit_ks" -> q210,
-    "q209_benford" -> q209,
-    "q208_cusum_shift" -> q208,
-    "q207_weighted_jaccard" -> q207,
-    "q206_retrieval_ndcg" -> q206,
-    "q205_snapshot_diff" -> q205,
-    "q204_revenue_share" -> q204,
-    "q203_monthly_growth" -> q203,
-    "q202_cube_pricing" -> q202,
-    "q201_rollup_revenue" -> q201,
-    "q200_multi_touch" -> q200,
-    "q199_last_touch" -> q199,
-    "q198_symspell_pairs" -> q198,
-    "q197_jw_top_match" -> q197,
-    "q196_minhash_calib" -> q196,
-    "q195_two_hop_reach" -> q195,
-    "q194_mad_outliers" -> q194,
-    "q193_index_bm25" -> q193,
-    "q192_window_pmi" -> q192,
-    "q191_dedup_savings" -> q191,
-    "q190_lsh_tuning" -> q190,
-    "q189_ppjoin_pairs" -> q189,
-    "q188_trunc_recall" -> q188,
-    "q187_embed_health" -> q187,
-    "q186_pair_bleu" -> q186,
-    "q185_dp_counts" -> q185,
-    "q184_epoch_plan" -> q184,
-    "q183_psi_drift" -> q183,
-    "q182_walk_pairs" -> q182,
-    "q181_ann_recall" -> q181,
-    "q180_walk_corpus" -> q180,
-    "q179_split_leakage" -> q179,
-    "q178_phrase_search" -> q178,
-    "q177_tfidf_knn" -> q177,
-    "q176_k_anonymity" -> q176,
-    "q175_edit_pairs" -> q175,
-    "q174_ppr_seed" -> q174,
-    "q173_session_cooccur" -> q173,
-    "q172_redact_fingerprint" -> q172,
-    "q171_cluster_sizes" -> q171,
-    "q170_cluster_purity" -> q170,
-    "q169_length_gini" -> q169,
-    "q168_event_rate_ma" -> q168,
-    "q167_source_centroid_pairs" -> q167,
-    "q166_dedup_sensitivity" -> q166,
-    "q165_method_agreement" -> q165,
-    "q164_event_transitions" -> q164,
-    "q163_lexical_diversity" -> q163,
-    "q162_dataset_card" -> q162,
-    "q161_top_span" -> q161,
-    "q160_gate_rates" -> q160,
-    "q159_quant_error" -> q159,
-    "q158_degree_stats" -> q158,
-    "q157_max_token_run" -> q157,
-    "q156_vocab_growth" -> q156,
-    "q155_prefix_template" -> q155,
-    "q154_source_chi2" -> q154,
-    "q153_trigram_commonness" -> q153,
-    "q152_quantile_norm" -> q152,
-    "q151_user_burstiness" -> q151,
-    "q150_kcore" -> q150,
-    "q149_containment_pairs" -> q149,
-    "q148_lang_centroid_skew" -> q148,
-    "q147_zscore_rank" -> q147,
-    "q146_dedup_impact" -> q146,
-    "q145_centroid_skew" -> q145,
-    "q144_token_fertility" -> q144,
-    "q143_vocab_sketch" -> q143,
-    "q142_vocab_jaccard" -> q142,
-    "q141_mixture_reweight" -> q141,
-    "q140_props_extract" -> q140,
-    "q139_cluster_agreement" -> q139,
-    "q138_weighted_pagerank" -> q138,
-    "q137_rrf_fusion" -> q137,
-    "q136_cluster_downsample" -> q136,
-    "q135_label_noise" -> q135,
-    "q134_modularity" -> q134,
-    "q133_cluster_reps" -> q133,
-    "q132_quality_budget" -> q132,
-    "q131_calibration" -> q131,
-    "q130_collocations" -> q130,
-    "q129_ks_drift" -> q129,
-    "q128_hll_overlap" -> q128,
-    "q127_rank_blend" -> q127,
-    "q126_hits" -> q126,
-    "q125_prototypicality" -> q125,
-    "q124_ngram_novelty" -> q124,
-    "q123_boilerplate_grams" -> q123,
-    "q122_vocab_coverage" -> q122,
-    "q121_hll_distinct" -> q121,
-    "q120_lsh_collision_stats" -> q120,
-    "q119_knn_graph" -> q119,
-    "q118_quality_score" -> q118,
-    "q117_label_prop" -> q117,
-    "q116_triangle_cc" -> q116,
-    "q115_pagerank" -> q115,
-    "q114_logreg_quality" -> q114,
-    "q113_cohort_retention" -> q113,
-    "q112_funnel" -> q112,
-    "q111_embedding_contamination" -> q111,
-    "q110_zorder_key" -> q110,
-    "q109_cosine_near_dup" -> q109,
-    "q108_priority_sample" -> q108,
-    "q107_table_profile" -> q107,
-    "q106_multiprobe_lsh" -> q106,
-    "q105_ivfpq_topk" -> q105,
-    "q104_grouped_topk" -> q104,
-    "q103_sampled_quantiles" -> q103,
-    "q102_ivf_index" -> q102,
-    "q101_bloom_join" -> q101,
-    "q100_pq_topk" -> q100,
-    "q99_quality_mix" -> q99,
-    "q98_token_budget_mix" -> q98,
-    "q97_dedup_spans" -> q97,
-    "q96_dsir_weights" -> q96,
-    "q95_bm25" -> q95,
-    "q92_c4_rules" -> q92,
-    "q89_resize_sample" -> q89,
-    "q88_event_anomaly" -> q88,
-    "q87_source_kl" -> q87,
-    "q86_cms_heavy_hitters" -> q86,
-    "q85_char_entropy" -> q85,
-    "q84_random_project" -> q84,
-    "q83_winsorize" -> q83,
-    "q82_pca_project" -> q82,
-    "q81_nb_classify" -> q81,
-    "q80_zipf_fit" -> q80,
-    "q79_bpe_encode" -> q79,
-    "q78_temperature_mix" -> q78,
-    "q77_dup_ngram_spans" -> q77,
-    "q76_bigram_lm" -> q76,
-    "q75_token_drift" -> q75,
-    "q74_bpe_train" -> q74,
-    "q73_prep_pipeline" -> q73,
-    "q72_group_cap" -> q72,
-    "q71_resample" -> q71,
-    "q70_delta_dedup" -> q70,
-    "q69_unigram_rarity" -> q69,
-    "q68_semantic_dedup" -> q68,
-    "q67_kmeans_int8" -> q67,
-    "q66_seq_pack" -> q66,
-    "q65_int8_topk" -> q65,
-    "q64_int8_quantize" -> q64,
-    "q63_dedup_corpus" -> q63,
-    "q61_ntile_quartiles" -> q61,
-    "q62_pivot_counts" -> q62,
-    "q59_label_centroids" -> q59,
-    "q60_histogram" -> q60,
-    "q57_gap_sessions" -> q57,
-    "q58_contamination" -> q58,
-    "q54_dedup_clusters" -> q54,
-    "q55_repetition_stats" -> q55,
-    "q56_top_ngrams" -> q56,
-    "q49_kmv_distinct" -> q49,
-    "q50_asof_forward" -> q50,
-    "q51_doc_chunks" -> q51,
-    "q52_split_assign" -> q52,
-    "q53_redaction" -> q53,
-    "q42_asof_join" -> q42,
-    "q43_range_join" -> q43,
-    "q44_group_quantiles" -> q44,
-    "q45_stratified_sample" -> q45,
-    "q46_tfidf" -> q46,
-    "q47_minhash_lsh_parity" -> q47,
-    "q48_simhash_parity" -> q48,
-    "q33_welch_agg" -> q33,
-    "q34_welch_pvalue" -> q34,
-    "q35_corpus_curation" -> q35,
-    "q40_ivf_topk" -> q40,
-    "q41_rolling_fingerprint" -> q41,
-    "q21_dedup_exact" -> q21,
-    "q22_text_quality" -> q22,
-    "q23_lang_id" -> q23,
-    "q24_minhash_fingerprint" -> q24,
-    "q25_ngram_jaccard" -> q25,
-    "q26_minhash_lsh_dedup" -> q26,
-    "q27_simhash_neardup" -> q27,
-    "q28_cosine_topk" -> q28,
-    "q29_ann_lsh_topk" -> q29,
-    "q30_multimodal_features" -> q30,
-    "q31_embedding_neardup" -> q31,
-    "q32_frame_sample" -> q32)
 
   // ---- DuckDB SQL generation helpers for deterministic oracles ----
   // The vector folds mirror the Spark side exactly: left-to-right
@@ -17294,357 +16934,357 @@ object NorthStar {
        |  CAST(m * COUNT(*) AS BIGINT) AS n_docs
        |FROM sizes GROUP BY m ORDER BY m""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // store-backed audits: the oracle is the PLAIN full-corpus
     // derivation — a green row IS the store-vs-scan equality pin
     // (q383 additionally pins write+append == one-shot rebuild)
-    "q383_store_append" -> q368Sql,
-    "q382_store_clusters" -> q382Sql,
-    "q381_store_sweep" -> q366Sql,
-    "q380_bloom_agg_join" -> q380Sql,
-    "q379_label_separation" -> q379Sql,
-    "q378_status_grid" -> q378Sql,
-    "q377_supplier_hhi" -> q377Sql,
-    "q376_segment_margin" -> q376Sql,
-    "q375_gate_attribution" -> q375Sql,
-    "q374_copurchase_centrality" -> q374Sql,
-    "q373_shingle_df_tail" -> q373Sql,
-    "q372_rare_shingle_leakage" -> q372Sql,
-    "q371_minhash_k_sensitivity" -> q371Sql,
-    "q370_keep_policy" -> q370Sql,
-    "q369_sampled_dup_rate" -> q369Sql,
-    "q368_transitivity_audit" -> q368Sql,
-    "q367_context_window_fit" -> q367Sql,
-    "q366_dedup_threshold_sweep" -> q366Sql,
-    "q365_winsor_sweep" -> q365Sql,
-    "q364_purchase_reach" -> q364Sql,
-    "q363_pacf_check" -> q363Sql,
-    "q362_cochran_armitage" -> q362Sql,
-    "q361_brier_decomp" -> q361Sql,
-    "q360_cox_stuart" -> q360Sql,
-    "q359_mase_eval" -> q359Sql,
-    "q358_source_dedup_matrix" -> q358Sql,
-    "q357_pair_rouge" -> q357Sql,
-    "q356_beta_binomial" -> q356Sql,
-    "q355_yuen_trimmed_t" -> q355Sql,
-    "q354_grubbs_test" -> q354Sql,
-    "q353_negbin_fit" -> q353Sql,
-    "q352_chow_test" -> q352Sql,
-    "q351_atkinson_index" -> q351Sql,
-    "q350_cronbach_alpha" -> q350Sql,
-    "q349_markov_homogeneity" -> q349Sql,
-    "q348_chapman_kolmogorov" -> q348Sql,
-    "q347_gap_episodes" -> q347Sql,
-    "q346_markov_loglik" -> q346Sql,
-    "q345_cramers_v" -> q345Sql,
-    "q344_dwell_time" -> q344Sql,
-    "q343_bh_fdr" -> q343Sql,
-    "q342_mcnemar" -> q342Sql,
-    "q341_page_hinkley" -> q341Sql,
-    "q340_episode_trigrams" -> q340Sql,
-    "q339_durbin_watson" -> q339Sql,
-    "q338_markov_chain" -> q338Sql,
-    "q337_shift_share" -> q337Sql,
-    "q336_het_test" -> q336Sql,
-    "q335_topsis_rank" -> q335Sql,
-    "q334_score_cindex" -> q334Sql,
-    "q333_jarque_bera" -> q333Sql,
-    "q332_runs_test" -> q332Sql,
-    "q331_mann_kendall" -> q331Sql,
-    "q330_price_index" -> q330Sql,
-    "q329_design_effect" -> q329Sql,
-    "q328_max_drawdown" -> q328Sql,
-    "q327_kendall_tau" -> q327Sql,
-    "q326_capture_recapture" -> q326Sql,
-    "q325_gumbel_maxima" -> q325Sql,
-    "q324_mutual_information" -> q324Sql,
-    "q323_effect_sizes" -> q323Sql,
-    "q322_newsvendor" -> q322Sql,
-    "q321_price_stickiness" -> q321Sql,
-    "q320_audience_overlap" -> q320Sql,
-    "q319_knee_detection" -> q319Sql,
-    "q318_abc_xyz" -> q318Sql,
-    "q317_theil_sen" -> q317Sql,
-    "q316_basket_diversity" -> q316Sql,
-    "q315_position_attribution" -> q315Sql,
-    "q314_churn_hazard" -> q314Sql,
-    "q313_lag_xcorr" -> q313Sql,
-    "q312_bowley_iqr" -> q312Sql,
-    "q311_pareto_frontier" -> q311Sql,
-    "q310_qq_normality" -> q310Sql,
-    "q309_adf_quickcheck" -> q309Sql,
-    "q308_peak_days" -> q308Sql,
-    "q307_em_step" -> q307Sql,
-    "q306_did_estimate" -> q306Sql,
-    "q305_sprt_monitor" -> q305Sql,
-    "q304_levene_test" -> q304Sql,
-    "q303_simpson_audit" -> q303Sql,
-    "q302_ece_calibration" -> q302Sql,
-    "q301_fleiss_kappa" -> q301Sql,
-    "q300_negative_sampling" -> q300Sql,
-    "q299_qte_deciles" -> q299Sql,
-    "q298_binseg_break" -> q298Sql,
-    "q297_hurst_exponent" -> q297Sql,
-    "q296_lorenz_gini" -> q296Sql,
-    "q295_brand_switching" -> q295Sql,
-    "q294_completeness_audit" -> q294Sql,
-    "q293_growth_accounting" -> q293Sql,
-    "q292_uncertainty_audit" -> q292Sql,
-    "q291_decay_popularity" -> q291Sql,
-    "q290_conformal_interval" -> q290Sql,
-    "q289_sma_crossover" -> q289Sql,
-    "q288_holt_winters" -> q288Sql,
-    "q287_aging_buckets" -> q287Sql,
-    "q286_kfold_assign" -> q286Sql,
-    "q285_readability" -> q285Sql,
-    "q284_streak_hist" -> q284Sql,
-    "q283_gains_table" -> q283Sql,
-    "q282_bimodality" -> q282Sql,
-    "q281_whale_share" -> q281Sql,
-    "q280_poisson_bootstrap" -> q280Sql,
-    "q279_gaussian_nb" -> q279Sql,
-    "q278_kde_profile" -> q278Sql,
-    "q277_dup_invoices" -> q277Sql,
-    "q276_adamic_adar" -> q276Sql,
-    "q275_backtest" -> q275Sql,
-    "q274_auc_rank" -> q274Sql,
-    "q273_price_heatmap" -> q273Sql,
-    "q272_order_size_dispersion" -> q272Sql,
-    "q271_entry_conversion" -> q271Sql,
-    "q270_two_way_anova" -> q270Sql,
-    "q269_weighted_median" -> q269Sql,
-    "q268_late_lines" -> q268Sql,
-    "q267_nb_confusion" -> q267Sql,
-    "q266_new_vs_repeat" -> q266Sql,
-    "q265_migration_matrix" -> q265Sql,
-    "q264_volatility" -> q264Sql,
-    "q263_pattern_sessions" -> q263Sql,
-    "q262_revenue_spine" -> q262Sql,
-    "q261_integrity_audit" -> q261Sql,
-    "q260_robust_means" -> q260Sql,
-    "q259_sigma_coverage" -> q259Sql,
-    "q258_heldout_xent" -> q258Sql,
-    "q257_spearman" -> q257Sql,
-    "q256_corr_matrix" -> q256Sql,
-    "q255_good_turing" -> q255Sql,
-    "q254_stump_split" -> q254Sql,
-    "q253_elasticity" -> q253Sql,
-    "q252_jsd_drift" -> q252Sql,
-    "q251_ab_sig" -> q251Sql,
-    "q250_transition_entropy" -> q250Sql,
-    "q249_scd2_intervals" -> q249Sql,
-    "q248_rev_bridge" -> q248Sql,
-    "q247_dow_decompose" -> q247Sql,
-    "q246_power_analysis" -> q246Sql,
-    "q245_trigram_coverage" -> q245Sql,
-    "q244_degree_hist" -> q244Sql,
-    "q243_churn_label" -> q243Sql,
-    "q242_theil_index" -> q242Sql,
-    "q241_hill_tail" -> q241Sql,
-    "q240_session_paths" -> q240Sql,
-    "q239_assortativity" -> q239Sql,
-    "q238_returns_by_brand" -> q238Sql,
-    "q237_bfs_dist" -> q237Sql,
-    "q236_dow_hour_heatmap" -> q236Sql,
-    "q235_hhi_concentration" -> q235Sql,
-    "q234_ltv_curve" -> q234Sql,
-    "q233_mor_snapshot" -> q233Sql,
-    "q232_order_gaps" -> q232Sql,
-    "q231_binary_eval" -> q231Sql,
-    "q230_ship_lag" -> q230Sql,
-    "q229_stickiness" -> q229Sql,
-    "q228_agg_merge" -> q228Sql,
-    "q227_rolling_dau" -> q227Sql,
-    "q226_pareto_abc" -> q226Sql,
-    "q225_rfm_segments" -> q225Sql,
-    "q224_card_est" -> q224Sql,
-    "q223_skew_advisor" -> q223Sql,
-    "q222_holt_forecast" -> q222Sql,
-    "q221_ipw_estimate" -> q221Sql,
-    "q220_dow_seasonality" -> q220Sql,
-    "q219_daily_acf" -> q219Sql,
-    "q218_compaction_plan" -> q218Sql,
-    "q217_kaplan_meier" -> q217Sql,
-    "q216_basket_lift" -> q216Sql,
-    "q215_mann_whitney" -> q215Sql,
-    "q214_ols_lines_price" -> q214Sql,
-    "q213_cramers_v" -> q213Sql,
-    "q212_snake_shards" -> q212Sql,
-    "q211_cuped" -> q211Sql,
-    "q210_exp_fit_ks" -> q210Sql,
-    "q209_benford" -> q209Sql,
-    "q208_cusum_shift" -> q208Sql,
-    "q207_weighted_jaccard" -> q207Sql,
-    "q206_retrieval_ndcg" -> q206Sql,
-    "q205_snapshot_diff" -> q205Sql,
-    "q204_revenue_share" -> q204Sql,
-    "q203_monthly_growth" -> q203Sql,
-    "q202_cube_pricing" -> q202Sql,
-    "q201_rollup_revenue" -> q201Sql,
-    "q200_multi_touch" -> q200Sql,
-    "q199_last_touch" -> q199Sql,
-    "q198_symspell_pairs" -> q198Sql,
-    "q197_jw_top_match" -> q197Sql,
-    "q196_minhash_calib" -> q196Sql,
-    "q195_two_hop_reach" -> q195Sql,
-    "q194_mad_outliers" -> q194Sql,
-    "q193_index_bm25" -> q193Sql,
-    "q192_window_pmi" -> q192Sql,
-    "q191_dedup_savings" -> q191Sql,
-    "q190_lsh_tuning" -> q190Sql,
-    "q189_ppjoin_pairs" -> q189Sql,
-    "q188_trunc_recall" -> q188Sql,
-    "q187_embed_health" -> q187Sql,
-    "q186_pair_bleu" -> q186Sql,
-    "q185_dp_counts" -> q185Sql,
-    "q184_epoch_plan" -> q184Sql,
-    "q183_psi_drift" -> q183Sql,
-    "q182_walk_pairs" -> q182Sql,
-    "q181_ann_recall" -> q181Sql,
-    "q180_walk_corpus" -> q180Sql,
-    "q179_split_leakage" -> q179Sql,
-    "q178_phrase_search" -> q178Sql,
-    "q177_tfidf_knn" -> q177Sql,
-    "q176_k_anonymity" -> q176Sql,
-    "q175_edit_pairs" -> q175Sql,
-    "q174_ppr_seed" -> q174Sql,
-    "q173_session_cooccur" -> q173Sql,
-    "q172_redact_fingerprint" -> q172Sql,
-    "q171_cluster_sizes" -> q171Sql,
-    "q170_cluster_purity" -> q170Sql,
-    "q169_length_gini" -> q169Sql,
-    "q168_event_rate_ma" -> q168Sql,
-    "q167_source_centroid_pairs" -> q167Sql,
-    "q166_dedup_sensitivity" -> q166Sql,
-    "q165_method_agreement" -> q165Sql,
-    "q164_event_transitions" -> q164Sql,
-    "q163_lexical_diversity" -> q163Sql,
-    "q162_dataset_card" -> q162Sql,
-    "q161_top_span" -> q161Sql,
-    "q160_gate_rates" -> q160Sql,
-    "q159_quant_error" -> q159Sql,
-    "q158_degree_stats" -> q158Sql,
-    "q157_max_token_run" -> q157Sql,
-    "q156_vocab_growth" -> q156Sql,
-    "q155_prefix_template" -> q155Sql,
-    "q154_source_chi2" -> q154Sql,
-    "q153_trigram_commonness" -> q153Sql,
-    "q152_quantile_norm" -> q152Sql,
-    "q151_user_burstiness" -> q151Sql,
-    "q150_kcore" -> q150Sql,
-    "q149_containment_pairs" -> q149Sql,
-    "q148_lang_centroid_skew" -> q148Sql,
-    "q147_zscore_rank" -> q147Sql,
-    "q146_dedup_impact" -> q146Sql,
-    "q145_centroid_skew" -> q145Sql,
-    "q144_token_fertility" -> q144Sql,
-    "q143_vocab_sketch" -> q143Sql,
-    "q142_vocab_jaccard" -> q142Sql,
-    "q141_mixture_reweight" -> q141Sql,
-    "q140_props_extract" -> q140Sql,
-    "q139_cluster_agreement" -> q139Sql,
-    "q138_weighted_pagerank" -> q138Sql,
-    "q137_rrf_fusion" -> q137Sql,
-    "q136_cluster_downsample" -> q136Sql,
-    "q135_label_noise" -> q135Sql,
-    "q134_modularity" -> q134Sql,
-    "q133_cluster_reps" -> q133Sql,
-    "q132_quality_budget" -> q132Sql,
-    "q131_calibration" -> q131Sql,
-    "q130_collocations" -> q130Sql,
-    "q129_ks_drift" -> q129Sql,
-    "q128_hll_overlap" -> q128Sql,
-    "q127_rank_blend" -> q127Sql,
-    "q126_hits" -> q126Sql,
-    "q125_prototypicality" -> q125Sql,
-    "q124_ngram_novelty" -> q124Sql,
-    "q123_boilerplate_grams" -> q123Sql,
-    "q122_vocab_coverage" -> q122Sql,
-    "q121_hll_distinct" -> q121Sql,
-    "q120_lsh_collision_stats" -> q120Sql,
-    "q119_knn_graph" -> q119Sql,
-    "q118_quality_score" -> q118Sql,
-    "q117_label_prop" -> q117Sql,
-    "q116_triangle_cc" -> q116Sql,
-    "q115_pagerank" -> q115Sql,
-    "q114_logreg_quality" -> q114Sql,
-    "q113_cohort_retention" -> q113Sql,
-    "q112_funnel" -> q112Sql,
-    "q111_embedding_contamination" -> q111Sql,
-    "q110_zorder_key" -> q110Sql,
-    "q109_cosine_near_dup" -> q109Sql,
-    "q108_priority_sample" -> q108Sql,
-    "q107_table_profile" -> q107Sql,
-    "q106_multiprobe_lsh" -> q106Sql,
-    "q105_ivfpq_topk" -> q105Sql,
-    "q104_grouped_topk" -> q104Sql,
-    "q103_sampled_quantiles" -> q103Sql,
-    "q102_ivf_index" -> q102Sql,
-    "q101_bloom_join" -> q101Sql,
-    "q100_pq_topk" -> q100Sql,
-    "q99_quality_mix" -> q99Sql,
-    "q98_token_budget_mix" -> q98Sql,
-    "q97_dedup_spans" -> q97Sql,
-    "q96_dsir_weights" -> q96Sql,
-    "q95_bm25" -> q95Sql,
-    "q92_c4_rules" -> q92Sql,
-    "q89_resize_sample" -> q89Sql,
-    "q88_event_anomaly" -> q88Sql,
-    "q87_source_kl" -> q87Sql,
-    "q86_cms_heavy_hitters" -> q86Sql,
-    "q85_char_entropy" -> q85Sql,
-    "q84_random_project" -> q84Sql,
-    "q83_winsorize" -> q83Sql,
-    "q82_pca_project" -> q82Sql,
-    "q81_nb_classify" -> q81Sql,
-    "q80_zipf_fit" -> q80Sql,
-    "q79_bpe_encode" -> q79Sql,
-    "q78_temperature_mix" -> q78Sql,
-    "q77_dup_ngram_spans" -> q77Sql,
-    "q76_bigram_lm" -> q76Sql,
-    "q75_token_drift" -> q75Sql,
-    "q74_bpe_train" -> q74Sql,
-    "q73_prep_pipeline" -> q73Sql,
-    "q72_group_cap" -> q72Sql,
-    "q71_resample" -> q71Sql,
-    "q70_delta_dedup" -> q70Sql,
-    "q69_unigram_rarity" -> q69Sql,
-    "q68_semantic_dedup" -> q68Sql,
-    "q67_kmeans_int8" -> q67Sql,
-    "q66_seq_pack" -> q66Sql,
-    "q65_int8_topk" -> q65Sql,
-    "q64_int8_quantize" -> q64Sql,
-    "q63_dedup_corpus" -> q63Sql,
-    "q61_ntile_quartiles" -> q61Sql,
-    "q62_pivot_counts" -> q62Sql,
-    "q59_label_centroids" -> q59Sql,
-    "q60_histogram" -> q60Sql,
-    "q57_gap_sessions" -> q57Sql,
-    "q58_contamination" -> q58Sql,
-    "q54_dedup_clusters" -> q54Sql,
-    "q55_repetition_stats" -> q55Sql,
-    "q56_top_ngrams" -> q56Sql,
-    "q49_kmv_distinct" -> q49Sql,
-    "q50_asof_forward" -> q50Sql,
-    "q51_doc_chunks" -> q51Sql,
-    "q52_split_assign" -> q52Sql,
-    "q53_redaction" -> q53Sql,
-    "q29_ann_lsh_topk" -> q29Sql,
-    "q30_multimodal_features" -> q30Sql,
-    "q31_embedding_neardup" -> q31Sql,
-    "q32_frame_sample" -> q32Sql,
-    "q40_ivf_topk" -> q40Sql,
-    "q41_rolling_fingerprint" -> q41Sql,
-    "q42_asof_join" -> q42Sql,
-    "q43_range_join" -> q43Sql,
-    "q44_group_quantiles" -> q44Sql,
-    "q45_stratified_sample" -> q45Sql,
-    "q46_tfidf" -> q46Sql,
-    "q47_minhash_lsh_parity" -> q47Sql,
-    "q48_simhash_parity" -> q48Sql,
-    "q26_minhash_lsh_dedup" -> q26Sql,
-    "q27_simhash_neardup" -> q27Sql,
-    "q35_corpus_curation" ->
+    Query("q383_store_append", q383, q368Sql),
+    Query("q382_store_clusters", q382, q382Sql),
+    Query("q381_store_sweep", q381, q366Sql),
+    Query("q380_bloom_agg_join", q380, q380Sql),
+    Query("q379_label_separation", q379, q379Sql),
+    Query("q378_status_grid", q378, q378Sql),
+    Query("q377_supplier_hhi", q377, q377Sql),
+    Query("q376_segment_margin", q376, q376Sql),
+    Query("q375_gate_attribution", q375, q375Sql),
+    Query("q374_copurchase_centrality", q374, q374Sql),
+    Query("q373_shingle_df_tail", q373, q373Sql),
+    Query("q372_rare_shingle_leakage", q372, q372Sql),
+    Query("q371_minhash_k_sensitivity", q371, q371Sql),
+    Query("q370_keep_policy", q370, q370Sql),
+    Query("q369_sampled_dup_rate", q369, q369Sql),
+    Query("q368_transitivity_audit", q368, q368Sql),
+    Query("q367_context_window_fit", q367, q367Sql),
+    Query("q366_dedup_threshold_sweep", q366, q366Sql),
+    Query("q365_winsor_sweep", q365, q365Sql),
+    Query("q364_purchase_reach", q364, q364Sql),
+    Query("q363_pacf_check", q363, q363Sql),
+    Query("q362_cochran_armitage", q362, q362Sql),
+    Query("q361_brier_decomp", q361, q361Sql),
+    Query("q360_cox_stuart", q360, q360Sql),
+    Query("q359_mase_eval", q359, q359Sql),
+    Query("q358_source_dedup_matrix", q358, q358Sql),
+    Query("q357_pair_rouge", q357, q357Sql),
+    Query("q356_beta_binomial", q356, q356Sql),
+    Query("q355_yuen_trimmed_t", q355, q355Sql),
+    Query("q354_grubbs_test", q354, q354Sql),
+    Query("q353_negbin_fit", q353, q353Sql),
+    Query("q352_chow_test", q352, q352Sql),
+    Query("q351_atkinson_index", q351, q351Sql),
+    Query("q350_cronbach_alpha", q350, q350Sql),
+    Query("q349_markov_homogeneity", q349, q349Sql),
+    Query("q348_chapman_kolmogorov", q348, q348Sql),
+    Query("q347_gap_episodes", q347, q347Sql),
+    Query("q346_markov_loglik", q346, q346Sql),
+    Query("q345_cramers_v", q345, q345Sql),
+    Query("q344_dwell_time", q344, q344Sql),
+    Query("q343_bh_fdr", q343, q343Sql),
+    Query("q342_mcnemar", q342, q342Sql),
+    Query("q341_page_hinkley", q341, q341Sql),
+    Query("q340_episode_trigrams", q340, q340Sql),
+    Query("q339_durbin_watson", q339, q339Sql),
+    Query("q338_markov_chain", q338, q338Sql),
+    Query("q337_shift_share", q337, q337Sql),
+    Query("q336_het_test", q336, q336Sql),
+    Query("q335_topsis_rank", q335, q335Sql),
+    Query("q334_score_cindex", q334, q334Sql),
+    Query("q333_jarque_bera", q333, q333Sql),
+    Query("q332_runs_test", q332, q332Sql),
+    Query("q331_mann_kendall", q331, q331Sql),
+    Query("q330_price_index", q330, q330Sql),
+    Query("q329_design_effect", q329, q329Sql),
+    Query("q328_max_drawdown", q328, q328Sql),
+    Query("q327_kendall_tau", q327, q327Sql),
+    Query("q326_capture_recapture", q326, q326Sql),
+    Query("q325_gumbel_maxima", q325, q325Sql),
+    Query("q324_mutual_information", q324, q324Sql),
+    Query("q323_effect_sizes", q323, q323Sql),
+    Query("q322_newsvendor", q322, q322Sql),
+    Query("q321_price_stickiness", q321, q321Sql),
+    Query("q320_audience_overlap", q320, q320Sql),
+    Query("q319_knee_detection", q319, q319Sql),
+    Query("q318_abc_xyz", q318, q318Sql),
+    Query("q317_theil_sen", q317, q317Sql),
+    Query("q316_basket_diversity", q316, q316Sql),
+    Query("q315_position_attribution", q315, q315Sql),
+    Query("q314_churn_hazard", q314, q314Sql),
+    Query("q313_lag_xcorr", q313, q313Sql),
+    Query("q312_bowley_iqr", q312, q312Sql),
+    Query("q311_pareto_frontier", q311, q311Sql),
+    Query("q310_qq_normality", q310, q310Sql),
+    Query("q309_adf_quickcheck", q309, q309Sql),
+    Query("q308_peak_days", q308, q308Sql),
+    Query("q307_em_step", q307, q307Sql),
+    Query("q306_did_estimate", q306, q306Sql),
+    Query("q305_sprt_monitor", q305, q305Sql),
+    Query("q304_levene_test", q304, q304Sql),
+    Query("q303_simpson_audit", q303, q303Sql),
+    Query("q302_ece_calibration", q302, q302Sql),
+    Query("q301_fleiss_kappa", q301, q301Sql),
+    Query("q300_negative_sampling", q300, q300Sql),
+    Query("q299_qte_deciles", q299, q299Sql),
+    Query("q298_binseg_break", q298, q298Sql),
+    Query("q297_hurst_exponent", q297, q297Sql),
+    Query("q296_lorenz_gini", q296, q296Sql),
+    Query("q295_brand_switching", q295, q295Sql),
+    Query("q294_completeness_audit", q294, q294Sql),
+    Query("q293_growth_accounting", q293, q293Sql),
+    Query("q292_uncertainty_audit", q292, q292Sql),
+    Query("q291_decay_popularity", q291, q291Sql),
+    Query("q290_conformal_interval", q290, q290Sql),
+    Query("q289_sma_crossover", q289, q289Sql),
+    Query("q288_holt_winters", q288, q288Sql),
+    Query("q287_aging_buckets", q287, q287Sql),
+    Query("q286_kfold_assign", q286, q286Sql),
+    Query("q285_readability", q285, q285Sql),
+    Query("q284_streak_hist", q284, q284Sql),
+    Query("q283_gains_table", q283, q283Sql),
+    Query("q282_bimodality", q282, q282Sql),
+    Query("q281_whale_share", q281, q281Sql),
+    Query("q280_poisson_bootstrap", q280, q280Sql),
+    Query("q279_gaussian_nb", q279, q279Sql),
+    Query("q278_kde_profile", q278, q278Sql),
+    Query("q277_dup_invoices", q277, q277Sql),
+    Query("q276_adamic_adar", q276, q276Sql),
+    Query("q275_backtest", q275, q275Sql),
+    Query("q274_auc_rank", q274, q274Sql),
+    Query("q273_price_heatmap", q273, q273Sql),
+    Query("q272_order_size_dispersion", q272, q272Sql),
+    Query("q271_entry_conversion", q271, q271Sql),
+    Query("q270_two_way_anova", q270, q270Sql),
+    Query("q269_weighted_median", q269, q269Sql),
+    Query("q268_late_lines", q268, q268Sql),
+    Query("q267_nb_confusion", q267, q267Sql),
+    Query("q266_new_vs_repeat", q266, q266Sql),
+    Query("q265_migration_matrix", q265, q265Sql),
+    Query("q264_volatility", q264, q264Sql),
+    Query("q263_pattern_sessions", q263, q263Sql),
+    Query("q262_revenue_spine", q262, q262Sql),
+    Query("q261_integrity_audit", q261, q261Sql),
+    Query("q260_robust_means", q260, q260Sql),
+    Query("q259_sigma_coverage", q259, q259Sql),
+    Query("q258_heldout_xent", q258, q258Sql),
+    Query("q257_spearman", q257, q257Sql),
+    Query("q256_corr_matrix", q256, q256Sql),
+    Query("q255_good_turing", q255, q255Sql),
+    Query("q254_stump_split", q254, q254Sql),
+    Query("q253_elasticity", q253, q253Sql),
+    Query("q252_jsd_drift", q252, q252Sql),
+    Query("q251_ab_sig", q251, q251Sql),
+    Query("q250_transition_entropy", q250, q250Sql),
+    Query("q249_scd2_intervals", q249, q249Sql),
+    Query("q248_rev_bridge", q248, q248Sql),
+    Query("q247_dow_decompose", q247, q247Sql),
+    Query("q246_power_analysis", q246, q246Sql),
+    Query("q245_trigram_coverage", q245, q245Sql),
+    Query("q244_degree_hist", q244, q244Sql),
+    Query("q243_churn_label", q243, q243Sql),
+    Query("q242_theil_index", q242, q242Sql),
+    Query("q241_hill_tail", q241, q241Sql),
+    Query("q240_session_paths", q240, q240Sql),
+    Query("q239_assortativity", q239, q239Sql),
+    Query("q238_returns_by_brand", q238, q238Sql),
+    Query("q237_bfs_dist", q237, q237Sql),
+    Query("q236_dow_hour_heatmap", q236, q236Sql),
+    Query("q235_hhi_concentration", q235, q235Sql),
+    Query("q234_ltv_curve", q234, q234Sql),
+    Query("q233_mor_snapshot", q233, q233Sql),
+    Query("q232_order_gaps", q232, q232Sql),
+    Query("q231_binary_eval", q231, q231Sql),
+    Query("q230_ship_lag", q230, q230Sql),
+    Query("q229_stickiness", q229, q229Sql),
+    Query("q228_agg_merge", q228, q228Sql),
+    Query("q227_rolling_dau", q227, q227Sql),
+    Query("q226_pareto_abc", q226, q226Sql),
+    Query("q225_rfm_segments", q225, q225Sql),
+    Query("q224_card_est", q224, q224Sql),
+    Query("q223_skew_advisor", q223, q223Sql),
+    Query("q222_holt_forecast", q222, q222Sql),
+    Query("q221_ipw_estimate", q221, q221Sql),
+    Query("q220_dow_seasonality", q220, q220Sql),
+    Query("q219_daily_acf", q219, q219Sql),
+    Query("q218_compaction_plan", q218, q218Sql),
+    Query("q217_kaplan_meier", q217, q217Sql),
+    Query("q216_basket_lift", q216, q216Sql),
+    Query("q215_mann_whitney", q215, q215Sql),
+    Query("q214_ols_lines_price", q214, q214Sql),
+    Query("q213_cramers_v", q213, q213Sql),
+    Query("q212_snake_shards", q212, q212Sql),
+    Query("q211_cuped", q211, q211Sql),
+    Query("q210_exp_fit_ks", q210, q210Sql),
+    Query("q209_benford", q209, q209Sql),
+    Query("q208_cusum_shift", q208, q208Sql),
+    Query("q207_weighted_jaccard", q207, q207Sql),
+    Query("q206_retrieval_ndcg", q206, q206Sql),
+    Query("q205_snapshot_diff", q205, q205Sql),
+    Query("q204_revenue_share", q204, q204Sql),
+    Query("q203_monthly_growth", q203, q203Sql),
+    Query("q202_cube_pricing", q202, q202Sql),
+    Query("q201_rollup_revenue", q201, q201Sql),
+    Query("q200_multi_touch", q200, q200Sql),
+    Query("q199_last_touch", q199, q199Sql),
+    Query("q198_symspell_pairs", q198, q198Sql),
+    Query("q197_jw_top_match", q197, q197Sql),
+    Query("q196_minhash_calib", q196, q196Sql),
+    Query("q195_two_hop_reach", q195, q195Sql),
+    Query("q194_mad_outliers", q194, q194Sql),
+    Query("q193_index_bm25", q193, q193Sql),
+    Query("q192_window_pmi", q192, q192Sql),
+    Query("q191_dedup_savings", q191, q191Sql),
+    Query("q190_lsh_tuning", q190, q190Sql),
+    Query("q189_ppjoin_pairs", q189, q189Sql),
+    Query("q188_trunc_recall", q188, q188Sql),
+    Query("q187_embed_health", q187, q187Sql),
+    Query("q186_pair_bleu", q186, q186Sql),
+    Query("q185_dp_counts", q185, q185Sql),
+    Query("q184_epoch_plan", q184, q184Sql),
+    Query("q183_psi_drift", q183, q183Sql),
+    Query("q182_walk_pairs", q182, q182Sql),
+    Query("q181_ann_recall", q181, q181Sql),
+    Query("q180_walk_corpus", q180, q180Sql),
+    Query("q179_split_leakage", q179, q179Sql),
+    Query("q178_phrase_search", q178, q178Sql),
+    Query("q177_tfidf_knn", q177, q177Sql),
+    Query("q176_k_anonymity", q176, q176Sql),
+    Query("q175_edit_pairs", q175, q175Sql),
+    Query("q174_ppr_seed", q174, q174Sql),
+    Query("q173_session_cooccur", q173, q173Sql),
+    Query("q172_redact_fingerprint", q172, q172Sql),
+    Query("q171_cluster_sizes", q171, q171Sql),
+    Query("q170_cluster_purity", q170, q170Sql),
+    Query("q169_length_gini", q169, q169Sql),
+    Query("q168_event_rate_ma", q168, q168Sql),
+    Query("q167_source_centroid_pairs", q167, q167Sql),
+    Query("q166_dedup_sensitivity", q166, q166Sql),
+    Query("q165_method_agreement", q165, q165Sql),
+    Query("q164_event_transitions", q164, q164Sql),
+    Query("q163_lexical_diversity", q163, q163Sql),
+    Query("q162_dataset_card", q162, q162Sql),
+    Query("q161_top_span", q161, q161Sql),
+    Query("q160_gate_rates", q160, q160Sql),
+    Query("q159_quant_error", q159, q159Sql),
+    Query("q158_degree_stats", q158, q158Sql),
+    Query("q157_max_token_run", q157, q157Sql),
+    Query("q156_vocab_growth", q156, q156Sql),
+    Query("q155_prefix_template", q155, q155Sql),
+    Query("q154_source_chi2", q154, q154Sql),
+    Query("q153_trigram_commonness", q153, q153Sql),
+    Query("q152_quantile_norm", q152, q152Sql),
+    Query("q151_user_burstiness", q151, q151Sql),
+    Query("q150_kcore", q150, q150Sql),
+    Query("q149_containment_pairs", q149, q149Sql),
+    Query("q148_lang_centroid_skew", q148, q148Sql),
+    Query("q147_zscore_rank", q147, q147Sql),
+    Query("q146_dedup_impact", q146, q146Sql),
+    Query("q145_centroid_skew", q145, q145Sql),
+    Query("q144_token_fertility", q144, q144Sql),
+    Query("q143_vocab_sketch", q143, q143Sql),
+    Query("q142_vocab_jaccard", q142, q142Sql),
+    Query("q141_mixture_reweight", q141, q141Sql),
+    Query("q140_props_extract", q140, q140Sql),
+    Query("q139_cluster_agreement", q139, q139Sql),
+    Query("q138_weighted_pagerank", q138, q138Sql),
+    Query("q137_rrf_fusion", q137, q137Sql),
+    Query("q136_cluster_downsample", q136, q136Sql),
+    Query("q135_label_noise", q135, q135Sql),
+    Query("q134_modularity", q134, q134Sql),
+    Query("q133_cluster_reps", q133, q133Sql),
+    Query("q132_quality_budget", q132, q132Sql),
+    Query("q131_calibration", q131, q131Sql),
+    Query("q130_collocations", q130, q130Sql),
+    Query("q129_ks_drift", q129, q129Sql),
+    Query("q128_hll_overlap", q128, q128Sql),
+    Query("q127_rank_blend", q127, q127Sql),
+    Query("q126_hits", q126, q126Sql),
+    Query("q125_prototypicality", q125, q125Sql),
+    Query("q124_ngram_novelty", q124, q124Sql),
+    Query("q123_boilerplate_grams", q123, q123Sql),
+    Query("q122_vocab_coverage", q122, q122Sql),
+    Query("q121_hll_distinct", q121, q121Sql),
+    Query("q120_lsh_collision_stats", q120, q120Sql),
+    Query("q119_knn_graph", q119, q119Sql),
+    Query("q118_quality_score", q118, q118Sql),
+    Query("q117_label_prop", q117, q117Sql),
+    Query("q116_triangle_cc", q116, q116Sql),
+    Query("q115_pagerank", q115, q115Sql),
+    Query("q114_logreg_quality", q114, q114Sql),
+    Query("q113_cohort_retention", q113, q113Sql),
+    Query("q112_funnel", q112, q112Sql),
+    Query("q111_embedding_contamination", q111, q111Sql),
+    Query("q110_zorder_key", q110, q110Sql),
+    Query("q109_cosine_near_dup", q109, q109Sql),
+    Query("q108_priority_sample", q108, q108Sql),
+    Query("q107_table_profile", q107, q107Sql),
+    Query("q106_multiprobe_lsh", q106, q106Sql),
+    Query("q105_ivfpq_topk", q105, q105Sql),
+    Query("q104_grouped_topk", q104, q104Sql),
+    Query("q103_sampled_quantiles", q103, q103Sql),
+    Query("q102_ivf_index", q102, q102Sql),
+    Query("q101_bloom_join", q101, q101Sql),
+    Query("q100_pq_topk", q100, q100Sql),
+    Query("q99_quality_mix", q99, q99Sql),
+    Query("q98_token_budget_mix", q98, q98Sql),
+    Query("q97_dedup_spans", q97, q97Sql),
+    Query("q96_dsir_weights", q96, q96Sql),
+    Query("q95_bm25", q95, q95Sql),
+    Query("q92_c4_rules", q92, q92Sql),
+    Query("q89_resize_sample", q89, q89Sql),
+    Query("q88_event_anomaly", q88, q88Sql),
+    Query("q87_source_kl", q87, q87Sql),
+    Query("q86_cms_heavy_hitters", q86, q86Sql),
+    Query("q85_char_entropy", q85, q85Sql),
+    Query("q84_random_project", q84, q84Sql),
+    Query("q83_winsorize", q83, q83Sql),
+    Query("q82_pca_project", q82, q82Sql),
+    Query("q81_nb_classify", q81, q81Sql),
+    Query("q80_zipf_fit", q80, q80Sql),
+    Query("q79_bpe_encode", q79, q79Sql),
+    Query("q78_temperature_mix", q78, q78Sql),
+    Query("q77_dup_ngram_spans", q77, q77Sql),
+    Query("q76_bigram_lm", q76, q76Sql),
+    Query("q75_token_drift", q75, q75Sql),
+    Query("q74_bpe_train", q74, q74Sql),
+    Query("q73_prep_pipeline", q73, q73Sql),
+    Query("q72_group_cap", q72, q72Sql),
+    Query("q71_resample", q71, q71Sql),
+    Query("q70_delta_dedup", q70, q70Sql),
+    Query("q69_unigram_rarity", q69, q69Sql),
+    Query("q68_semantic_dedup", q68, q68Sql),
+    Query("q67_kmeans_int8", q67, q67Sql),
+    Query("q66_seq_pack", q66, q66Sql),
+    Query("q65_int8_topk", q65, q65Sql),
+    Query("q64_int8_quantize", q64, q64Sql),
+    Query("q63_dedup_corpus", q63, q63Sql),
+    Query("q61_ntile_quartiles", q61, q61Sql),
+    Query("q62_pivot_counts", q62, q62Sql),
+    Query("q59_label_centroids", q59, q59Sql),
+    Query("q60_histogram", q60, q60Sql),
+    Query("q57_gap_sessions", q57, q57Sql),
+    Query("q58_contamination", q58, q58Sql),
+    Query("q54_dedup_clusters", q54, q54Sql),
+    Query("q55_repetition_stats", q55, q55Sql),
+    Query("q56_top_ngrams", q56, q56Sql),
+    Query("q49_kmv_distinct", q49, q49Sql),
+    Query("q50_asof_forward", q50, q50Sql),
+    Query("q51_doc_chunks", q51, q51Sql),
+    Query("q52_split_assign", q52, q52Sql),
+    Query("q53_redaction", q53, q53Sql),
+    Query("q29_ann_lsh_topk", q29, q29Sql),
+    Query("q30_multimodal_features", q30, q30Sql),
+    Query("q31_embedding_neardup", q31, q31Sql),
+    Query("q32_frame_sample", q32, q32Sql),
+    Query("q40_ivf_topk", q40, q40Sql),
+    Query("q41_rolling_fingerprint", q41, q41Sql),
+    Query("q42_asof_join", q42, q42Sql),
+    Query("q43_range_join", q43, q43Sql),
+    Query("q44_group_quantiles", q44, q44Sql),
+    Query("q45_stratified_sample", q45, q45Sql),
+    Query("q46_tfidf", q46, q46Sql),
+    Query("q47_minhash_lsh_parity", q47, q47Sql),
+    Query("q48_simhash_parity", q48, q48Sql),
+    Query("q26_minhash_lsh_dedup", q26, q26Sql),
+    Query("q27_simhash_neardup", q27, q27Sql),
+    Query("q35_corpus_curation", q35,
       """WITH d AS (
         |  SELECT doc_id, text,
         |         regexp_split_to_array(lower(trim(text)), '\s+') AS toks
@@ -17674,8 +17314,8 @@ object NorthStar {
         |              WHEN s2 = GREATEST(s1, s2, s3) THEN 'joinic'
         |              ELSE 'streamic' END AS lang_pred
         |  FROM sc)
-        |SELECT lang_pred, COUNT(*) AS n_docs FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q33_welch_agg" ->
+        |SELECT lang_pred, COUNT(*) AS n_docs FROM p GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q33_welch_agg", q33,
       """WITH a AS (SELECT AVG(value) m, VAR_SAMP(value) v, COUNT(*) n
         |           FROM events WHERE event_type = 'click'),
         |     b AS (SELECT AVG(value) m, VAR_SAMP(value) v, COUNT(*) n
@@ -17683,12 +17323,12 @@ object NorthStar {
         |SELECT ROUND((a.m - b.m) / SQRT(a.v/a.n + b.v/b.n), 6) AS t,
         |       ROUND(POWER(a.v/a.n + b.v/b.n, 2) /
         |             (POWER(a.v/a.n, 2)/(a.n-1) + POWER(b.v/b.n, 2)/(b.n-1)), 6) AS df
-        |FROM a, b""".stripMargin,
-    "q34_welch_pvalue" -> q34Sql,
-    "q21_dedup_exact" ->
+        |FROM a, b""".stripMargin),
+    Query("q34_welch_pvalue", q34, q34Sql),
+    Query("q21_dedup_exact", q21,
       """SELECT md5(lower(trim(text))) AS h, MIN(doc_id) AS keep_id, COUNT(*) AS dups
-        |FROM documents GROUP BY 1 ORDER BY keep_id""".stripMargin,
-    "q22_text_quality" ->
+        |FROM documents GROUP BY 1 ORDER BY keep_id""".stripMargin),
+    Query("q22_text_quality", q22,
       """WITH d AS (
         |  SELECT doc_id, text,
         |         regexp_split_to_array(lower(trim(text)), '\s+') AS toks
@@ -17709,8 +17349,8 @@ object NorthStar {
         |       CAST(ROUND(punct_ratio * 1e6, 0) AS BIGINT) AS punct_ratio_e6,
         |       CAST(ROUND((LEAST(mean_len / 8.0, 1.0) + (1.0 - stop_ratio) +
         |              (1.0 - LEAST(punct_ratio * 5.0, 1.0))) / 3.0 * 1e6, 0) AS BIGINT) AS quality_e6
-        |FROM m ORDER BY doc_id""".stripMargin,
-    "q23_lang_id" ->
+        |FROM m ORDER BY doc_id""".stripMargin),
+    Query("q23_lang_id", q23,
       """WITH d AS (
         |  SELECT regexp_split_to_array(lower(trim(text)), '\s+') AS toks FROM documents),
         |s AS (
@@ -17724,8 +17364,8 @@ object NorthStar {
         |              WHEN s2 = GREATEST(s1, s2, s3) THEN 'joinic'
         |              ELSE 'streamic' END AS lang_pred
         |  FROM s)
-        |SELECT lang_pred, COUNT(*) AS n FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q24_minhash_fingerprint" ->
+        |SELECT lang_pred, COUNT(*) AS n FROM p GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q24_minhash_fingerprint", q24,
       """WITH d AS (
         |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS toks
         |  FROM documents),
@@ -17739,8 +17379,8 @@ object NorthStar {
         |SELECT doc_id,
         |       list_min(list_transform(sh, x -> md5('0:' || x))) AS fp0,
         |       list_min(list_transform(sh, x -> md5('1:' || x))) AS fp1
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "q25_ngram_jaccard" ->
+        |FROM s ORDER BY doc_id""".stripMargin),
+    Query("q25_ngram_jaccard", q25,
       """WITH d AS (
         |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS toks
         |  FROM documents WHERE doc_id < 100),
@@ -17761,8 +17401,8 @@ object NorthStar {
         |       CAST(ROUND(shared::DOUBLE / (x.n + y.n - shared) * 1e6, 0) AS BIGINT) AS jacc_e6
         |FROM p JOIN sz x ON id1 = x.doc_id JOIN sz y ON id2 = y.doc_id
         |WHERE shared * 1.0 / (x.n + y.n - shared) >= 0.1
-        |ORDER BY id1, id2""".stripMargin,
-    "q28_cosine_topk" ->
+        |ORDER BY id1, id2""".stripMargin),
+    Query("q28_cosine_topk", q28,
       """WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5),
         |scored AS (
         |  SELECT q.vec_id AS qid, c.vec_id AS nid,
@@ -17773,5 +17413,5 @@ object NorthStar {
         |         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosim DESC, nid) AS rk
         |  FROM scored)
         |SELECT qid, nid, ROUND(cosim, 6) AS cos FROM ranked WHERE rk <= 5
-        |ORDER BY qid, cosim DESC, nid""".stripMargin)
+        |ORDER BY qid, cosim DESC, nid""".stripMargin))
 }

@@ -1445,51 +1445,27 @@ object RoundEleven {
        |FROM a ORDER BY event_type""".stripMargin
   }
 
-  val all: Map[String, Q] = Map(
-    "q458_stream_ingest_pin" -> q458,
-    "q459_encoding_decision" -> q459,
-    "q460_cliffs_delta" -> q460,
-    "q461_spearman_rho" -> q461,
-    "q462_lin_ccc" -> q462,
-    "q463_benford_audit" -> q463,
-    "q464_vocab_coverage" -> q464,
-    "q465_trigram_novelty" -> q465,
-    "q466_brand_lift" -> q466,
-    "q467_cramers_v" -> q467,
-    "q468_brunner_munzel" -> q468,
-    "q469_ivf_compaction_pin" -> q469,
-    "q470_join_strategy_advisor" -> q470,
-    "q471_aqe_coalesce_advisor" -> q471,
-    "q472_revenue_waterfall" -> q472,
-    "q473_segment_concentration" -> q473,
-    "q474_quantile_drift" -> q474,
-    "q475_partition_layout_advisor" -> q475,
-    "q476_cohort_ltv" -> q476,
-    "q477_mediation_paths" -> q477,
-    "q478_ipf_raking" -> q478,
-    "q479_wilson_intervals" -> q479)
-
-  val oracle: Map[String, String] = Map(
-    "q458_stream_ingest_pin" -> q458Sql,
-    "q459_encoding_decision" -> q459Sql,
-    "q460_cliffs_delta" -> q460Sql,
-    "q461_spearman_rho" -> q461Sql,
-    "q462_lin_ccc" -> q462Sql,
-    "q463_benford_audit" -> q463Sql,
-    "q464_vocab_coverage" -> q464Sql,
-    "q465_trigram_novelty" -> q465Sql,
-    "q466_brand_lift" -> q466Sql,
-    "q467_cramers_v" -> q467Sql,
-    "q468_brunner_munzel" -> q468Sql,
-    "q469_ivf_compaction_pin" -> q469Sql,
-    "q470_join_strategy_advisor" -> q470Sql,
-    "q471_aqe_coalesce_advisor" -> q471Sql,
-    "q472_revenue_waterfall" -> q472Sql,
-    "q473_segment_concentration" -> q473Sql,
-    "q474_quantile_drift" -> q474Sql,
-    "q475_partition_layout_advisor" -> q475Sql,
-    "q476_cohort_ltv" -> q476Sql,
-    "q477_mediation_paths" -> q477Sql,
-    "q478_ipf_raking" -> q478Sql,
-    "q479_wilson_intervals" -> q479Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q458_stream_ingest_pin", q458, q458Sql),
+    Query("q459_encoding_decision", q459, q459Sql),
+    Query("q460_cliffs_delta", q460, q460Sql),
+    Query("q461_spearman_rho", q461, q461Sql),
+    Query("q462_lin_ccc", q462, q462Sql),
+    Query("q463_benford_audit", q463, q463Sql),
+    Query("q464_vocab_coverage", q464, q464Sql),
+    Query("q465_trigram_novelty", q465, q465Sql),
+    Query("q466_brand_lift", q466, q466Sql),
+    Query("q467_cramers_v", q467, q467Sql),
+    Query("q468_brunner_munzel", q468, q468Sql),
+    Query("q469_ivf_compaction_pin", q469, q469Sql),
+    Query("q470_join_strategy_advisor", q470, q470Sql),
+    Query("q471_aqe_coalesce_advisor", q471, q471Sql),
+    Query("q472_revenue_waterfall", q472, q472Sql),
+    Query("q473_segment_concentration", q473, q473Sql),
+    Query("q474_quantile_drift", q474, q474Sql),
+    Query("q475_partition_layout_advisor", q475, q475Sql),
+    Query("q476_cohort_ltv", q476, q476Sql),
+    Query("q477_mediation_paths", q477, q477Sql),
+    Query("q478_ipf_raking", q478, q478Sql),
+    Query("q479_wilson_intervals", q479, q479Sql))
 }

@@ -3694,115 +3694,59 @@ object RoundNine {
 
   // ---------------------------------------------------------------
 
-  val all: Map[String, Q] = Map(
-    "q384_kruskal_wallis" -> q384,
-    "q385_wilcoxon_signed" -> q385,
-    "q386_mood_median" -> q386,
-    "q387_cochran_q" -> q387,
-    "q388_friedman_page" -> q388,
-    "q389_logrank" -> q389,
-    "q390_ljung_box" -> q390,
-    "q391_seasonal_spectrum" -> q391,
-    "q392_pass_at_k" -> q392,
-    "q393_bradley_terry" -> q393,
-    "q394_ams_f2" -> q394,
-    "q395_twonn_id" -> q395,
-    "q396_pinball_loss" -> q396,
-    "q397_ewma_chart" -> q397,
-    "q398_jonckheere" -> q398,
-    "q399_kcenter_coreset" -> q399,
-    "q400_otif_priority" -> q400,
-    "q401_croston" -> q401,
-    "q402_curriculum_phases" -> q402,
-    "q403_neyman_alloc" -> q403,
-    "q404_shapley_attribution" -> q404,
-    "q405_uplift_segment" -> q405,
-    "q406_knn_density" -> q406,
-    "q407_hitter_drift" -> q407,
-    "q408_span_corruption" -> q408,
-    "q409_kneser_ney" -> q409,
-    "q410_weight_ess" -> q410,
-    "q411_garble_audit" -> q411,
-    "q412_revenue_ndr" -> q412,
-    "q413_triple_itemsets" -> q413,
-    "q414_gumbel_topk" -> q414,
-    "q415_successive_halving" -> q415,
-    "q416_sax_symbols" -> q416,
-    "q417_motif_discovery" -> q417,
-    "q418_broadcast_advisor" -> q418,
-    "q419_lang_diversity" -> q419,
-    "q420_qini_curve" -> q420,
-    "q421_bloom_planner" -> q421,
-    "q422_bbit_minhash" -> q422,
-    "q423_knn_label_eval" -> q423,
-    "q424_equidepth_est" -> q424,
-    "q425_join_card_est" -> q425,
-    "q426_fk_discovery" -> q426,
-    "q427_ivm_merge" -> q427,
-    "q428_penny_ledger" -> q428,
-    "q429_lateness_profile" -> q429,
-    "q430_gap_sweep" -> q430,
-    "q431_sampling_ks" -> q431,
-    "q432_chi2_keywords" -> q432,
-    "q433_nzv_screen" -> q433,
-    "q434_loo_encode" -> q434,
-    "q435_srm_check" -> q435,
-    "q436_outage_gaps" -> q436,
-    "q437_dict_advisor" -> q437)
-
-  val oracle: Map[String, String] = Map(
-    "q384_kruskal_wallis" -> q384Sql,
-    "q385_wilcoxon_signed" -> q385Sql,
-    "q386_mood_median" -> q386Sql,
-    "q387_cochran_q" -> q387Sql,
-    "q388_friedman_page" -> q388Sql,
-    "q389_logrank" -> q389Sql,
-    "q390_ljung_box" -> q390Sql,
-    "q391_seasonal_spectrum" -> q391Sql,
-    "q392_pass_at_k" -> q392Sql,
-    "q393_bradley_terry" -> q393Sql,
-    "q394_ams_f2" -> q394Sql,
-    "q395_twonn_id" -> q395Sql,
-    "q396_pinball_loss" -> q396Sql,
-    "q397_ewma_chart" -> q397Sql,
-    "q398_jonckheere" -> q398Sql,
-    "q399_kcenter_coreset" -> q399Sql,
-    "q400_otif_priority" -> q400Sql,
-    "q401_croston" -> q401Sql,
-    "q402_curriculum_phases" -> q402Sql,
-    "q403_neyman_alloc" -> q403Sql,
-    "q404_shapley_attribution" -> q404Sql,
-    "q405_uplift_segment" -> q405Sql,
-    "q406_knn_density" -> q406Sql,
-    "q407_hitter_drift" -> q407Sql,
-    "q408_span_corruption" -> q408Sql,
-    "q409_kneser_ney" -> q409Sql,
-    "q410_weight_ess" -> q410Sql,
-    "q411_garble_audit" -> q411Sql,
-    "q412_revenue_ndr" -> q412Sql,
-    "q413_triple_itemsets" -> q413Sql,
-    "q414_gumbel_topk" -> q414Sql,
-    "q415_successive_halving" -> q415Sql,
-    "q416_sax_symbols" -> q416Sql,
-    "q417_motif_discovery" -> q417Sql,
-    "q418_broadcast_advisor" -> q418Sql,
-    "q419_lang_diversity" -> q419Sql,
-    "q420_qini_curve" -> q420Sql,
-    "q421_bloom_planner" -> q421Sql,
-    "q422_bbit_minhash" -> q422Sql,
-    "q423_knn_label_eval" -> q423Sql,
-    "q424_equidepth_est" -> q424Sql,
-    "q425_join_card_est" -> q425Sql,
-    "q426_fk_discovery" -> q426Sql,
-    "q427_ivm_merge" -> q427Sql,
-    "q428_penny_ledger" -> q428Sql,
-    "q429_lateness_profile" -> q429Sql,
-    "q430_gap_sweep" -> q430Sql,
-    "q431_sampling_ks" -> q431Sql,
-    "q432_chi2_keywords" -> q432Sql,
-    "q433_nzv_screen" -> q433Sql,
-    "q434_loo_encode" -> q434Sql,
-    "q435_srm_check" -> q435Sql,
-    "q436_outage_gaps" -> q436Sql,
-    "q437_dict_advisor" -> q437Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q384_kruskal_wallis", q384, q384Sql),
+    Query("q385_wilcoxon_signed", q385, q385Sql),
+    Query("q386_mood_median", q386, q386Sql),
+    Query("q387_cochran_q", q387, q387Sql),
+    Query("q388_friedman_page", q388, q388Sql),
+    Query("q389_logrank", q389, q389Sql),
+    Query("q390_ljung_box", q390, q390Sql),
+    Query("q391_seasonal_spectrum", q391, q391Sql),
+    Query("q392_pass_at_k", q392, q392Sql),
+    Query("q393_bradley_terry", q393, q393Sql),
+    Query("q394_ams_f2", q394, q394Sql),
+    Query("q395_twonn_id", q395, q395Sql),
+    Query("q396_pinball_loss", q396, q396Sql),
+    Query("q397_ewma_chart", q397, q397Sql),
+    Query("q398_jonckheere", q398, q398Sql),
+    Query("q399_kcenter_coreset", q399, q399Sql),
+    Query("q400_otif_priority", q400, q400Sql),
+    Query("q401_croston", q401, q401Sql),
+    Query("q402_curriculum_phases", q402, q402Sql),
+    Query("q403_neyman_alloc", q403, q403Sql),
+    Query("q404_shapley_attribution", q404, q404Sql),
+    Query("q405_uplift_segment", q405, q405Sql),
+    Query("q406_knn_density", q406, q406Sql),
+    Query("q407_hitter_drift", q407, q407Sql),
+    Query("q408_span_corruption", q408, q408Sql),
+    Query("q409_kneser_ney", q409, q409Sql),
+    Query("q410_weight_ess", q410, q410Sql),
+    Query("q411_garble_audit", q411, q411Sql),
+    Query("q412_revenue_ndr", q412, q412Sql),
+    Query("q413_triple_itemsets", q413, q413Sql),
+    Query("q414_gumbel_topk", q414, q414Sql),
+    Query("q415_successive_halving", q415, q415Sql),
+    Query("q416_sax_symbols", q416, q416Sql),
+    Query("q417_motif_discovery", q417, q417Sql),
+    Query("q418_broadcast_advisor", q418, q418Sql),
+    Query("q419_lang_diversity", q419, q419Sql),
+    Query("q420_qini_curve", q420, q420Sql),
+    Query("q421_bloom_planner", q421, q421Sql),
+    Query("q422_bbit_minhash", q422, q422Sql),
+    Query("q423_knn_label_eval", q423, q423Sql),
+    Query("q424_equidepth_est", q424, q424Sql),
+    Query("q425_join_card_est", q425, q425Sql),
+    Query("q426_fk_discovery", q426, q426Sql),
+    Query("q427_ivm_merge", q427, q427Sql),
+    Query("q428_penny_ledger", q428, q428Sql),
+    Query("q429_lateness_profile", q429, q429Sql),
+    Query("q430_gap_sweep", q430, q430Sql),
+    Query("q431_sampling_ks", q431, q431Sql),
+    Query("q432_chi2_keywords", q432, q432Sql),
+    Query("q433_nzv_screen", q433, q433Sql),
+    Query("q434_loo_encode", q434, q434Sql),
+    Query("q435_srm_check", q435, q435Sql),
+    Query("q436_outage_gaps", q436, q436Sql),
+    Query("q437_dict_advisor", q437, q437Sql))
 }

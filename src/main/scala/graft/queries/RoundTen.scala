@@ -1224,47 +1224,25 @@ object RoundTen {
        |FROM r WHERE rk <= 10
        |ORDER BY n_users DESC, win""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q457_state_sizing" -> q457,
-    "q454_shuffle_sizing" -> q454,
-    "q455_skew_bucket_audit" -> q455,
-    "q456_for_encoding_advisor" -> q456,
-    "q451_safety_stock" -> q451,
-    "q452_price_endings" -> q452,
-    "q453_store_compaction" -> q453,
-    "q448_partial_corr" -> q448,
-    "q449_substring_vs_token" -> q449,
-    "q450_join_order_audit" -> q450,
-    "q438_store_band_profile" -> q438,
-    "q439_ivf_exact_topk" -> q439,
-    "q440_zone_map_audit" -> q440,
-    "q441_corr_selectivity" -> q441,
-    "q442_wasserstein_pairs" -> q442,
-    "q443_ansari_bradley" -> q443,
-    "q444_rle_advisor" -> q444,
-    "q445_rater_kappa" -> q445,
-    "q446_cvm_two_sample" -> q446,
-    "q447_sampling_bias" -> q447)
-
-  val oracle: Map[String, String] = Map(
-    "q457_state_sizing" -> q457Sql,
-    "q454_shuffle_sizing" -> q454Sql,
-    "q455_skew_bucket_audit" -> q455Sql,
-    "q456_for_encoding_advisor" -> q456Sql,
-    "q451_safety_stock" -> q451Sql,
-    "q452_price_endings" -> q452Sql,
-    "q453_store_compaction" -> q453Sql,
-    "q448_partial_corr" -> q448Sql,
-    "q449_substring_vs_token" -> q449Sql,
-    "q450_join_order_audit" -> q450Sql,
-    "q438_store_band_profile" -> q438Sql,
-    "q439_ivf_exact_topk" -> q439Sql,
-    "q440_zone_map_audit" -> q440Sql,
-    "q441_corr_selectivity" -> q441Sql,
-    "q442_wasserstein_pairs" -> q442Sql,
-    "q443_ansari_bradley" -> q443Sql,
-    "q444_rle_advisor" -> q444Sql,
-    "q445_rater_kappa" -> q445Sql,
-    "q446_cvm_two_sample" -> q446Sql,
-    "q447_sampling_bias" -> q447Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q457_state_sizing", q457, q457Sql),
+    Query("q454_shuffle_sizing", q454, q454Sql),
+    Query("q455_skew_bucket_audit", q455, q455Sql),
+    Query("q456_for_encoding_advisor", q456, q456Sql),
+    Query("q451_safety_stock", q451, q451Sql),
+    Query("q452_price_endings", q452, q452Sql),
+    Query("q453_store_compaction", q453, q453Sql),
+    Query("q448_partial_corr", q448, q448Sql),
+    Query("q449_substring_vs_token", q449, q449Sql),
+    Query("q450_join_order_audit", q450, q450Sql),
+    Query("q438_store_band_profile", q438, q438Sql),
+    Query("q439_ivf_exact_topk", q439, q439Sql),
+    Query("q440_zone_map_audit", q440, q440Sql),
+    Query("q441_corr_selectivity", q441, q441Sql),
+    Query("q442_wasserstein_pairs", q442, q442Sql),
+    Query("q443_ansari_bradley", q443, q443Sql),
+    Query("q444_rle_advisor", q444, q444Sql),
+    Query("q445_rater_kappa", q445, q445Sql),
+    Query("q446_cvm_two_sample", q446, q446Sql),
+    Query("q447_sampling_bias", q447, q447Sql))
 }

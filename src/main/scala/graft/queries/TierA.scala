@@ -384,36 +384,6 @@ object TierA {
       .ordered(col("o_orderkey"))
   }
 
-  val all: Map[String, Q] = Map(
-    "q90_cube" -> q90,
-    "q91_rank_dist" -> q91,
-    "q93_axes_swap" -> q93,
-    "q94_keyed_log_id" -> q94,
-    "q36_rollup" -> q36,
-    "q37_except" -> q37,
-    "q38_moments" -> q38,
-    "q39_approx_distinct" -> q39,
-    "q01_grouped_stats" -> q1,
-    "q02_two_level_agg" -> q2,
-    "q03_welch_t" -> q3,
-    "q04_deadband_clamp" -> q4,
-    "q05_corner_transform" -> q5,
-    "q06_gradient" -> q6,
-    "q07_row_index" -> q7,
-    "q08_locf" -> q8,
-    "q09_median15" -> q9,
-    "q10_scalar_math" -> q10,
-    "q11_session_head" -> q11,
-    "q12_arm_pairing" -> q12,
-    "q13_join_agg" -> q13,
-    "q14_semi_join" -> q14,
-    "q15_anti_join" -> q15,
-    "q16_topk" -> q16,
-    "q17_intersect" -> q17,
-    "q18_rank_window" -> q18,
-    "q19_time_bucket_agg" -> q19,
-    "q20_distinct_count" -> q20)
-
   private def sqlHex32(h: String): String = OracleSql.hex32(h)
 
   private val q39Sql: String =
@@ -447,19 +417,19 @@ object TierA {
        |            AS INTEGER) AS log_id
        |FROM orders ORDER BY o_orderkey""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "q39_approx_distinct" -> q39Sql,
-    "q93_axes_swap" -> q93Sql,
-    "q94_keyed_log_id" -> q94Sql,
-    "q90_cube" ->
+  val queries: Seq[Query] = Seq(
+    Query("q39_approx_distinct", q39, q39Sql),
+    Query("q93_axes_swap", q93, q93Sql),
+    Query("q94_keyed_log_id", q94, q94Sql),
+    Query("q90_cube", q90,
       """SELECT o_orderstatus, o_orderpriority,
         |       GROUPING(o_orderstatus) AS g1,
         |       GROUPING(o_orderpriority) AS g2,
         |       ROUND(SUM(o_totalprice), 4) AS sum_price, COUNT(*) AS n
         |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
         |ORDER BY g1, g2, o_orderstatus NULLS FIRST,
-        |         o_orderpriority NULLS FIRST""".stripMargin,
-    "q91_rank_dist" ->
+        |         o_orderpriority NULLS FIRST""".stripMargin),
+    Query("q91_rank_dist", q91,
       """SELECT o_orderkey,
         |       ROUND(PERCENT_RANK() OVER w, 6) AS pr,
         |       ROUND(CUME_DIST() OVER w, 6) AS cd
@@ -467,24 +437,24 @@ object TierA {
         |WINDOW w AS (PARTITION BY o_orderpriority
         |             ORDER BY o_totalprice, o_orderkey)
         |QUALIFY o_orderkey <= 2000
-        |ORDER BY o_orderkey""".stripMargin,
-    "q36_rollup" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("q36_rollup", q36,
       """SELECT l_returnflag, l_linestatus,
         |       GROUPING(l_returnflag) AS g1, GROUPING(l_linestatus) AS g2,
         |       ROUND(SUM(l_quantity), 4) AS sum_qty, COUNT(*) AS n
         |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY g1, g2, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "q37_except" ->
+        |ORDER BY g1, g2, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
+    Query("q37_except", q37,
       """SELECT COUNT(*) AS n FROM (
         |  SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-        |  EXCEPT SELECT o_custkey FROM orders WHERE o_orderstatus = 'O') t""".stripMargin,
-    "q38_moments" ->
+        |  EXCEPT SELECT o_custkey FROM orders WHERE o_orderstatus = 'O') t""".stripMargin),
+    Query("q38_moments", q38,
       """SELECT l_returnflag,
         |       ROUND(STDDEV_SAMP(l_extendedprice), 4) AS sd_price,
         |       ROUND(COVAR_SAMP(l_quantity, l_extendedprice), 4) AS cov_qp,
         |       ROUND(CORR(l_quantity, l_extendedprice), 6) AS corr_qp
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q01_grouped_stats" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("q01_grouped_stats", q1,
       """SELECT l_returnflag, l_linestatus,
         |       ROUND(SQRT(AVG(l_quantity*l_quantity)), 6) AS rms_qty,
         |       ROUND(MIN(l_extendedprice), 6) AS min_price,
@@ -492,101 +462,101 @@ object TierA {
         |       COUNT(*) AS n
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
         |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q02_two_level_agg" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Query("q02_two_level_agg", q2,
       """SELECT o_orderpriority, ROUND(AVG(run_rms), 6) AS avg_rms, COUNT(*) AS runs
         |FROM (SELECT o.o_orderpriority, l.l_orderkey,
         |             SQRT(AVG(l.l_discount*l.l_discount)) AS run_rms
         |      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
         |      GROUP BY o.o_orderpriority, l.l_orderkey) t
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q03_welch_t" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Query("q03_welch_t", q3,
       """SELECT ROUND((a.m - b.m) / SQRT(a.v/a.n + b.v/b.n), 6) AS welch_t
         |FROM (SELECT AVG(l_extendedprice) m, VAR_SAMP(l_extendedprice) v, COUNT(*) n
         |      FROM lineitem WHERE l_returnflag = 'R') a,
         |     (SELECT AVG(l_extendedprice) m, VAR_SAMP(l_extendedprice) v, COUNT(*) n
-        |      FROM lineitem WHERE l_returnflag = 'A') b""".stripMargin,
-    "q04_deadband_clamp" ->
+        |      FROM lineitem WHERE l_returnflag = 'A') b""".stripMargin),
+    Query("q04_deadband_clamp", q4,
       """SELECT l_orderkey, l_linenumber,
         |       ROUND(CASE WHEN ABS(l_discount - 0.05) <= 0.003 THEN 0
         |                  ELSE l_discount - 0.05 - SIGN(l_discount - 0.05)*0.003 END, 6) AS crushed,
         |       LEAST(1.0, GREATEST(0.0, l_tax*10)) AS clamped
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber, crushed, clamped LIMIT 1000""".stripMargin,
-    "q05_corner_transform" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber, crushed, clamped LIMIT 1000""".stripMargin),
+    Query("q05_corner_transform", q5,
       """SELECT l_orderkey, l_linenumber,
         |       ROUND( (0.018/0.058)*l_quantity - (1.0/0.058)*l_discount + 31.25*l_tax + 32768.0, 6) AS act1,
         |       ROUND( (0.018/0.058)*l_quantity - (1.0/0.058)*l_discount - 31.25*l_tax + 32768.0, 6) AS act2,
         |       ROUND( (0.011/0.058)*l_quantity + (1.0/0.058)*l_discount + 31.25*l_tax + 32768.0, 6) AS act3,
         |       ROUND( (0.011/0.058)*l_quantity + (1.0/0.058)*l_discount - 31.25*l_tax + 32768.0, 6) AS act4
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber, act1, act3 LIMIT 1000""".stripMargin,
-    "q06_gradient" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber, act1, act3 LIMIT 1000""".stripMargin),
+    Query("q06_gradient", q6,
       """SELECT event_id,
         |       ROUND(COALESCE((LEAD(value) OVER w - LAG(value) OVER w)/2.0,
         |                      value - LAG(value) OVER w,
         |                      LEAD(value) OVER w - value), 6) AS grad
         |FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY event_id LIMIT 1000""".stripMargin,
-    "q07_row_index" ->
+        |ORDER BY event_id LIMIT 1000""".stripMargin),
+    Query("q07_row_index", q7,
       """SELECT event_id, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS idx
-        |FROM events ORDER BY event_id LIMIT 1000""".stripMargin,
-    "q08_locf" ->
+        |FROM events ORDER BY event_id LIMIT 1000""".stripMargin),
+    Query("q08_locf", q8,
       """SELECT event_id,
         |       ROUND(LAST_VALUE(CASE WHEN ABS(value) < 2.5 THEN value END IGNORE NULLS)
         |             OVER (PARTITION BY user_id ORDER BY ts, event_id
         |                   ROWS UNBOUNDED PRECEDING), 6) AS locf
-        |FROM events ORDER BY event_id LIMIT 1000""".stripMargin,
-    "q09_median15" ->
+        |FROM events ORDER BY event_id LIMIT 1000""".stripMargin),
+    Query("q09_median15", q9,
       """SELECT event_id, ROUND(med, 6) AS med15 FROM (
         |  SELECT event_id,
         |         MEDIAN(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
         |                             ROWS BETWEEN 7 PRECEDING AND 7 FOLLOWING) AS med,
         |         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
         |  FROM events) t
-        |WHERE rn > 7 ORDER BY event_id LIMIT 1000""".stripMargin,
-    "q10_scalar_math" ->
+        |WHERE rn > 7 ORDER BY event_id LIMIT 1000""".stripMargin),
+    Query("q10_scalar_math", q10,
       """SELECT l_orderkey, l_linenumber,
         |       ROUND(l_quantity * 0.000122, 6) AS g_units,
         |       ROUND(DEGREES(ATAN2(l_discount, l_tax + 0.01)), 6) AS angle_deg,
         |       ROUND(ASIN(LEAST(1.0, GREATEST(-1.0, l_discount*10))), 6) AS clamped_asin
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber, g_units, angle_deg, clamped_asin LIMIT 1000""".stripMargin,
-    "q11_session_head" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber, g_units, angle_deg, clamped_asin LIMIT 1000""".stripMargin),
+    Query("q11_session_head", q11,
       """SELECT event_id,
         |       LAST_VALUE(CASE WHEN event_type = 'login' THEN event_id END IGNORE NULLS)
         |         OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_head
-        |FROM events ORDER BY event_id LIMIT 1000""".stripMargin,
-    "q12_arm_pairing" ->
+        |FROM events ORDER BY event_id LIMIT 1000""".stripMargin),
+    Query("q12_arm_pairing", q12,
       """SELECT ROUND(e.rms - d.rms, 6) AS rms_delta
         |FROM (SELECT SQRT(AVG(value*value)) rms FROM events WHERE event_type='click') e,
-        |     (SELECT SQRT(AVG(value*value)) rms FROM events WHERE event_type='view')  d""".stripMargin,
-    "q13_join_agg" ->
+        |     (SELECT SQRT(AVG(value*value)) rms FROM events WHERE event_type='view')  d""".stripMargin),
+    Query("q13_join_agg", q13,
       """SELECT n_name, ROUND(SUM(l_extendedprice*(1-l_discount)), 4) AS revenue
         |FROM customer JOIN orders ON c_custkey = o_custkey
         |JOIN lineitem ON l_orderkey = o_orderkey
         |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
-    "q14_semi_join" ->
+        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin),
+    Query("q14_semi_join", q14,
       """SELECT COUNT(*) AS n FROM part
-        |WHERE p_partkey IN (SELECT l_partkey FROM lineitem WHERE l_quantity > 45)""".stripMargin,
-    "q15_anti_join" ->
+        |WHERE p_partkey IN (SELECT l_partkey FROM lineitem WHERE l_quantity > 45)""".stripMargin),
+    Query("q15_anti_join", q15,
       """SELECT COUNT(*) AS n FROM customer
-        |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)""".stripMargin,
-    "q16_topk" ->
+        |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)""".stripMargin),
+    Query("q16_topk", q16,
       """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-    "q17_intersect" ->
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin),
+    Query("q17_intersect", q17,
       """SELECT COUNT(*) AS n FROM (
         |  SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-        |  INTERSECT SELECT o_custkey FROM orders WHERE o_orderstatus = 'O') t""".stripMargin,
-    "q18_rank_window" ->
+        |  INTERSECT SELECT o_custkey FROM orders WHERE o_orderstatus = 'O') t""".stripMargin),
+    Query("q18_rank_window", q18,
       """SELECT o_custkey, o_orderkey FROM (
         |  SELECT o_custkey, o_orderkey,
         |         ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) rn
-        |  FROM orders) t WHERE rn = 1 ORDER BY o_custkey LIMIT 1000""".stripMargin,
-    "q19_time_bucket_agg" ->
+        |  FROM orders) t WHERE rn = 1 ORDER BY o_custkey LIMIT 1000""".stripMargin),
+    Query("q19_time_bucket_agg", q19,
       """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS h, event_type,
         |       COUNT(*) AS n, ROUND(SUM(value), 4) AS sv
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q20_distinct_count" ->
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Query("q20_distinct_count", q20,
       """SELECT event_type, COUNT(DISTINCT user_id) AS u FROM events
-        |GROUP BY event_type ORDER BY event_type""".stripMargin)
+        |GROUP BY event_type ORDER BY event_type""".stripMargin))
 }

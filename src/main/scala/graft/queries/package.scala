@@ -5,10 +5,18 @@ import org.apache.spark.sql.functions.{expr, lit, round}
 
 import graft.core.Tables
 
-/** Helpers shared by every query module: the query-function type, the table
-  * loader and the house integer pins with their DuckDB mirrors. */
+/** Helpers shared by every query module: the query-function type, the
+  * query declaration, the table loader and the house integer pins with
+  * their DuckDB mirrors. */
 package object queries {
   private[queries] type Q = (SparkSession, String) => DataFrame
+
+  /** One declared query: its name, its DataFrame builder over a testdata
+    * dir, and the DuckDB SQL that is its correctness oracle (column names
+    * must match the builder's output exactly). Each module lists its
+    * queries once, as `val queries: Seq[Query]` at the end of the object,
+    * after every val an entry reads. */
+  final case class Query(name: String, build: Q, oracle: String)
 
   private[queries] def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)

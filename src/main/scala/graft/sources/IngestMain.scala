@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** CLI: ingest an in-band-header telemetry CSV into the canonical
@@ -13,12 +12,7 @@ object IngestMain {
     val csv = if (args.length > 0) args(0) else SessionizedCsvReader.GoldenCsv
     val out = if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("graft-orc").toString
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-ingest")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.benchSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     val t0 = System.nanoTime()
     OrcTelemetryStore.ingestCsv(spark, csv, out)
     val secs = (System.nanoTime() - t0) / 1e9

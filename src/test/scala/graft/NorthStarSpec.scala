@@ -37,11 +37,14 @@ class NorthStarSpec extends AnyFunSuite with SparkTestBase {
     val b = a + " tail" // one extra token
     val c = "entirely different vocabulary with zero overlap whatsoever here"
     val df = Seq((1L, a), (2L, b), (3L, c)).toDF("doc_id", "text")
-    val sims = DedupOps.simhashSignatures(df, "doc_id", "text")
+    val sims = DedupOps.simhashParitySignatures(df, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def hamming(x: Long, y: Long) = java.lang.Long.bitCount(x ^ y)
     assert(hamming(sims(1L), sims(2L)) < hamming(sims(1L), sims(3L)),
       "near-dup should be closer than unrelated doc")
+    // One appended token moves each bit's vote by one, so only the bits
+    // whose 12-token vote was tied can flip (3 of 32 here). 8 is the
+    // maxHamming that q27/q48 verify these 32-bit signatures with.
     assert(hamming(sims(1L), sims(2L)) <= 8)
   }
 

@@ -693,8 +693,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     // so the only single-partition work is that tiny walk plus the
     // ordered 3-row output — and no ranking window over per-term rows
     // may survive anywhere
-    val p = plan(graft.queries.RoundEleven.all("q464_vocab_coverage")(
-      spark, dir))
+    val p = plan(SparkEntry.queries("q464_vocab_coverage")(spark, dir))
     assert(!p.contains("row_number"),
       s"per-term ranking window detected in q464:\n$p")
     assert("windowspecdefinition\\([^)]*tok".r.findFirstIn(p).isEmpty,

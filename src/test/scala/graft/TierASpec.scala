@@ -14,14 +14,25 @@ class TierASpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("every declared query has an oracle and runs at sf0.001") {
-    // exact EQUALITY, not subset: a declared query without an oracle
-    // lands as `err: no_oracle` in the driver's correctness file —
-    // round 3 drove that set to zero and this pins it there
-    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet,
-      s"queries without oracle: ${
-        SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet}; " +
-        s"oracles without query: ${
-          SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet}")
+    // Each Query entry carries its name, builder and oracle together,
+    // so no name can lack an oracle. What the registry must still pin:
+    // every name declared once (a repeated one fails `registry` itself),
+    // every name `qNNN_<words>` with its own number (`selectQueries`
+    // relies on "q16_" selecting q16 alone), and no null or blank
+    // oracle or builder (null is what an entry placed before the val it
+    // reads sees).
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.size == 479 && names.distinct.size == 479,
+      s"${names.size} entries, ${names.distinct.size} distinct names")
+    val malformed = names.filterNot(_.matches("q\\d+_[a-z0-9_]+"))
+    assert(malformed.isEmpty, s"malformed query names: $malformed")
+    val numbers = names.map(_.drop(1).takeWhile(_.isDigit).toInt)
+    assert(numbers.distinct.size == numbers.size,
+      s"query numbers declared twice: ${numbers.diff(numbers.distinct)}")
+    val unset = SparkEntry.registry
+      .filter(q => q.build == null || q.oracle == null || q.oracle.trim.isEmpty)
+      .map(_.name)
+    assert(unset.isEmpty, s"queries without builder or oracle SQL: $unset")
     SparkEntry.queries.foreach { case (name, fn) =>
       val n = fn(spark, dir).count()
       assert(n >= 0, s"$name failed")
